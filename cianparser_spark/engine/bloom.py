@@ -1,25 +1,28 @@
-"""Partitioned Bloom filter for the URL-seen set (cuckoo fallback).
+"""Per-bucket Bloom filters: the crawl engine's seen-set sidecar.
 
-North-rule component: at 10^10-URL scale the exact ``seen`` table
-can't be anti-joined against every wave's full candidate set cheaply,
-so candidates are pre-filtered through per-bucket Bloom filters built
-from the seen keys.  Semantics are SAFETY-PRESERVING by construction:
+The seen set is keyed ``seed_id|deal_url_id`` and routed to
+``n_buckets`` buckets by ``pandas.util.hash_array``; each bucket holds
+one fixed-size ``BloomFilter``, so partial filters built from
+different slices of the seen table OR-merge (``or_merge_blob_group``).
+The filter is a prefilter in front of the exact tier, never the
+answer itself:
 
-* Bloom says "definitely unseen"  -> candidate bypasses the exact join
-  and is accepted (no false drops possible);
-* Bloom says "maybe seen"         -> candidate goes through the exact
-  ``left_anti`` join (false positives only cost a join probe).
+* "definitely unseen" -> the candidate skips the exact tier;
+* "maybe seen"        -> the exact tier (anti-join against ``seen`` or
+  the sorted runs of engine/seenidx.py) decides.
 
-Buckets are ``hash(key) % n_buckets`` so each filter is built from one
-partition of the seen table (``applyInPandas``-shaped aggregation) and
-the in-memory blob stays small enough to broadcast.
+A Bloom filter cannot delete.  It does not need to: after
+``CrawlEngine.invalidate_and_recrawl`` drops keys from ``seen``, their
+stale positives only route those keys to the exact tier, which answers
+"unseen".  The crawler holds the blobs in one of two places: on the
+driver, shipped by ``sc.broadcast``, or in the store's ``bloom`` table,
+loaded per executor (``load_spool_filters``).
 
-Hashes come from ``pandas.util.hash_array`` (stable, vectorized,
-process-independent) with two different hash keys, combined by double
-hashing h1 + i*h2.
-
-``CuckooBucket`` is the deletable variant (re-crawl invalidation): a
-cuckoo filter's fingerprint slots support deletion, which Bloom cannot.
+Blob format: a 16-byte header (int64 ``n_bits``, int64 ``n_hashes``)
+followed by ``ceil(n_bits / 8)`` bytes of bits; ``from_bytes`` rejects
+anything else.  String keys hash with ``hash_array`` under two hash
+keys, combined by double hashing h1 + i*h2; 64-bit keys (the
+bench_frontier family) use splitmix64 (``mix64``).
 """
 
 from __future__ import annotations
@@ -70,11 +73,11 @@ def _set_bits(bits: np.ndarray, n_bits: int, h1: np.ndarray, h2: np.ndarray,
     filters are fixed-size by construction; above the cap (huge filter,
     tiny batch) fall back to the scatter so memory stays proportional
     to the batch.  The plane size is ALSO absolutely capped at 512 MB
-    (n_bits = 2^32): for huge geometries (e.g. the auto-spool shape at
+    (n_bits = 2^29): for huge geometries (e.g. the auto-spool shape at
     bloom_bits=1<<33) a large applyInPandas group could otherwise
     allocate a multi-GiB plane per task executor-side however the
     batch-size heuristic lands."""
-    if h1.size and n_bits <= (1 << 32) and (
+    if h1.size and n_bits <= (1 << 29) and (
             n_bits <= (1 << 27) or h1.size * 64 >= n_bits):
         plane = np.zeros(bits.size * 8, np.bool_)
         for i in range(n_hashes):
@@ -142,55 +145,30 @@ class BloomFilter:
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "BloomFilter":
-        n_bits, n_hashes = np.frombuffer(blob[:16], np.int64)
-        return cls(int(n_bits), int(n_hashes), np.frombuffer(blob[16:], np.uint8).copy())
+        f = cls.from_bytes_ro(blob)
+        f.bits = f.bits.copy()
+        return f
 
     @classmethod
     def from_bytes_ro(cls, blob: bytes) -> "BloomFilter":
         """Zero-copy read-only view for probe-side use (``contains``
         only reads ``bits``).  Executor prefilters deserialize the
         broadcast blobs once per task; at 8 MB of filter state a
-        per-batch ``from_bytes`` copy dominates the probe itself."""
+        per-batch ``from_bytes`` copy dominates the probe itself.
+
+        Raises ``ValueError`` unless the blob is a 16-byte header with
+        ``n_bits > 0`` followed by exactly ``ceil(n_bits / 8)`` bytes:
+        a foreign or truncated blob probed as Bloom bits would fail
+        later as an opaque executor ``IndexError``, or answer wrong."""
         mv = memoryview(blob)
-        n_bits, n_hashes = np.frombuffer(mv[:16], np.int64)
-        return cls(int(n_bits), int(n_hashes), np.frombuffer(mv[16:], np.uint8))
-
-
-class PartitionedBloom:
-    """n_buckets Bloom filters keyed by hash(key) % n_buckets."""
-
-    def __init__(self, n_buckets: int, filters: list[BloomFilter]):
-        self.n_buckets = n_buckets
-        self.filters = filters
-
-    @classmethod
-    def build(cls, keys, n_buckets: int = 16, bits_per_key: int = 12) -> "PartitionedBloom":
-        keys = np.asarray(list(keys), dtype=object)
-        if keys.size:
-            bucket = pd.util.hash_array(keys, hash_key=_HASH_KEY_1) % np.uint64(n_buckets)
-            groups = [keys[bucket == b] for b in range(n_buckets)]
-        else:
-            groups = [keys] * n_buckets
-        return cls(n_buckets, [BloomFilter.build(g, bits_per_key) for g in groups])
-
-    def contains(self, keys) -> np.ndarray:
-        keys = np.asarray(list(keys), dtype=object)
-        if keys.size == 0:
-            return np.zeros(0, bool)
-        bucket = pd.util.hash_array(keys, hash_key=_HASH_KEY_1) % np.uint64(self.n_buckets)
-        out = np.zeros(keys.size, bool)
-        for b in range(self.n_buckets):
-            mask = bucket == b
-            if mask.any():
-                out[mask] = self.filters[b].contains(keys[mask])
-        return out
-
-    def to_blobs(self) -> list[bytes]:
-        return [f.to_bytes() for f in self.filters]
-
-    @classmethod
-    def from_blobs(cls, blobs: list[bytes]) -> "PartitionedBloom":
-        return cls(len(blobs), [BloomFilter.from_bytes(b) for b in blobs])
+        if len(mv) < 16:
+            raise ValueError(f"bloom blob too short: {len(mv)} bytes")
+        n_bits, n_hashes = (int(x) for x in np.frombuffer(mv[:16], np.int64))
+        if n_bits <= 0 or len(mv) - 16 != (n_bits + 7) // 8:
+            raise ValueError(
+                f"not a bloom blob: header n_bits={n_bits}, body "
+                f"{len(mv) - 16} bytes")
+        return cls(n_bits, n_hashes, np.frombuffer(mv[16:], np.uint8))
 
 
 def or_merge_blob_group(pdf) -> "pd.DataFrame":
@@ -267,19 +245,6 @@ def load_spool_filters(dirs: tuple[str, ...]) -> dict[int, "BloomFilter"]:
                                    columns=["bucket", "blob"])
                 for b, blob in zip(tb.column("bucket").to_pylist(),
                                    tb.column("blob").to_pylist()):
-                    if int(np.frombuffer(memoryview(blob)[:8],
-                                         np.int64)[0]) == CuckooBucket.MAGIC:
-                        # a cuckoo-built store reopened in spool mode:
-                        # parsing the slot table as Bloom bits would
-                        # fail as an opaque executor IndexError — be
-                        # loud and actionable instead
-                        raise ValueError(
-                            "cuckoo sidecar blob in the spool blob "
-                            "table: reopen the store with "
-                            "seen_filter='cuckoo' (driver mode), or "
-                            "rebuild the sidecar "
-                            "(invalidate_and_recrawl) before using "
-                            "bloom_spool")
                     f = BloomFilter.from_bytes(bytes(blob))
                     have = filters.get(int(b))
                     if have is None:
@@ -304,128 +269,3 @@ def load_spool_filters(dirs: tuple[str, ...]) -> dict[int, "BloomFilter"]:
         hit = filters
     return hit
 
-
-class CuckooBucket:
-    """Minimal cuckoo filter (deletable seen-set variant).
-
-    2 candidate buckets x 4 slots, 16-bit fingerprints.  Used where the
-    crawl needs invalidation (re-crawl of changed pages) — Bloom cannot
-    delete.  Wired as the engine's driver-mode sidecar under
-    ``seen_filter="cuckoo"`` (crawler.CrawlEngine): inserts are a
-    python loop (politeness-bounded, ≤20k keys/wave), probes are
-    vectorized (``contains_many``).
-
-    Delete safety: every accepted key is inserted exactly ONCE (the
-    seen set is first-wins), so same-(bucket,fp) collisions between
-    two inserted keys occupy two slots and deleting one key removes
-    one copy — the other key keeps answering 'maybe seen'.  An insert
-    that fails displacement (table overfull) SATURATES the filter:
-    every probe answers maybe-seen and the exact tier does the work —
-    degraded performance, never a false negative.
-
-    Blob format: 16-byte header (int64 magic=-2 — distinguishes from a
-    Bloom blob whose first field is n_bits>0 — and int64
-    n_buckets*2+saturated) + the uint16 slot table.
-    """
-
-    SLOTS = 4
-    MAX_KICKS = 200
-    MAGIC = -2
-
-    def __init__(self, n_buckets: int):
-        # POWER OF TWO required: the kick step's alternate bucket is
-        # (i ^ (fp * C)) % n, which is a proper involution (the two
-        # candidate buckets map to each other) only when n is 2^k —
-        # otherwise a displaced fingerprint can land in a bucket
-        # neither lookup probes, a SILENT false negative.  Round up.
-        n = max(8, int(n_buckets))
-        self.n_buckets = 1 << (n - 1).bit_length()
-        self.table = np.zeros((self.n_buckets, self.SLOTS), np.uint16)
-        self.saturated = False
-
-    def _fp_and_idx(self, key: str) -> tuple[int, int, int]:
-        h1, h2 = _h2(np.asarray([key], dtype=object))
-        fp = int(h2[0] & np.uint64(0xFFFF)) or 1
-        i1 = int(h1[0] % np.uint64(self.n_buckets))
-        i2 = (i1 ^ (fp * 0x5BD1)) % self.n_buckets
-        return fp, i1, i2
-
-    def add(self, key: str) -> bool:
-        fp, i1, i2 = self._fp_and_idx(key)
-        for i in (i1, i2):
-            empty = np.where(self.table[i] == 0)[0]
-            if empty.size:
-                self.table[i, empty[0]] = fp
-                return True
-        # displace
-        rng = np.random.default_rng(fp)
-        i = i1
-        for _ in range(self.MAX_KICKS):
-            slot = int(rng.integers(0, self.SLOTS))
-            fp, self.table[i, slot] = int(self.table[i, slot]), fp
-            i = (i ^ (fp * 0x5BD1)) % self.n_buckets
-            empty = np.where(self.table[i] == 0)[0]
-            if empty.size:
-                self.table[i, empty[0]] = fp
-                return True
-        self.saturated = True  # overfull: degrade to all-maybe, loudly
-        return False
-
-    def contains(self, key: str) -> bool:
-        if self.saturated:
-            return True
-        fp, i1, i2 = self._fp_and_idx(key)
-        return bool((self.table[i1] == fp).any() or (self.table[i2] == fp).any())
-
-    def remove(self, key: str) -> bool:
-        fp, i1, i2 = self._fp_and_idx(key)
-        for i in (i1, i2):
-            hit = np.where(self.table[i] == fp)[0]
-            if hit.size:
-                self.table[i, hit[0]] = 0
-                return True
-        return False
-
-    def contains_many(self, keys: np.ndarray) -> np.ndarray:
-        """Vectorized probe — bool 'maybe seen' per key (the sidecar
-        probe path; same hash family as the scalar methods)."""
-        if keys.size == 0:
-            return np.zeros(0, bool)
-        if self.saturated:
-            return np.ones(keys.size, bool)
-        h1, h2 = _h2(np.asarray(keys, dtype=object))
-        fp = (h2 & np.uint64(0xFFFF)).astype(np.int64)
-        fp[fp == 0] = 1
-        fp = fp.astype(np.uint16)
-        i1 = (h1 % np.uint64(self.n_buckets)).astype(np.int64)
-        i2 = ((i1 ^ (fp.astype(np.int64) * 0x5BD1)) % self.n_buckets)
-        return ((self.table[i1] == fp[:, None]).any(axis=1)
-                | (self.table[i2] == fp[:, None]).any(axis=1))
-
-    def to_bytes(self) -> bytes:
-        head = np.array(
-            [self.MAGIC, self.n_buckets * 2 + int(self.saturated)],
-            np.int64).tobytes()
-        return head + self.table.tobytes()
-
-    @classmethod
-    def from_bytes(cls, blob: bytes) -> "CuckooBucket":
-        magic, packed = np.frombuffer(memoryview(blob)[:16], np.int64)
-        if int(magic) != cls.MAGIC:
-            raise ValueError(f"not a cuckoo blob (magic {int(magic)})")
-        self = cls(int(packed) // 2)
-        self.saturated = bool(int(packed) % 2)
-        self.table = np.frombuffer(
-            memoryview(blob)[16:], np.uint16).reshape(
-                self.n_buckets, self.SLOTS).copy()
-        return self
-
-
-def sidecar_from_bytes(blob: bytes):
-    """Deserialize a seen-set sidecar blob by its header: a Bloom blob
-    leads with n_bits>0, a cuckoo blob with MAGIC=-2.  Both results
-    answer ``contains``/vectorized probes with maybe-seen semantics."""
-    first = int(np.frombuffer(memoryview(blob)[:8], np.int64)[0])
-    if first == CuckooBucket.MAGIC:
-        return CuckooBucket.from_bytes(blob)
-    return BloomFilter.from_bytes(blob)

@@ -58,7 +58,22 @@ from cianparser_spark.semantics.simulator import CrawlSeed
 
 MAX_ATTEMPTS = 3  # (reference: cianparser/cianparser.py:73)
 _BLOOM_BITS = 1 << 20  # per-bucket fixed size so blobs OR-merge
+# auto bloom_spool: filter state above this stays off the driver
+_BLOOM_DRIVER_MAX_BYTES = 64 << 20
 _429_DEBT = 5  # 10 s penalty / 2 s-per-list-token
+_DETAIL_COST = 2  # tokens per detail fetch (4 s / 2 s-per-list-token)
+_SALT_BUCKETS = 4  # per-host salts of the two-phase selection
+# Adaptive execution mode: waves whose estimated stage-row volume
+# (pages × ~32 cards) falls below this floor run with whole-stage
+# codegen and generated-class factories DISABLED.  For a
+# politeness-bounded tiny wave the per-execution cost of codegen —
+# regenerating the widen battery's source text, janino compilation on
+# cache miss (wave/seed literals differ between plans), class loading
+# — is 10-100× the interpreted execution time of the handful of pages
+# involved; measured on the fault-crawl suite this floor cuts wave
+# wall ~30%.  Big waves (any real crawl at scale) keep codegen: the
+# battery's compiled form wins from ~10^4 rows up.
+_CODEGEN_ROW_FLOOR = 16_384
 
 
 class CrawlEngine:
@@ -69,45 +84,23 @@ class CrawlEngine:
         seeds: list[CrawlSeed],
         web_cfg: webgen.WebConfig = webgen.DEFAULT_CONFIG,
         host_tokens: int = 64,
-        detail_cost: int = 2,
-        salt_buckets: int = 4,
         bloom_buckets: int = 16,
         dedup_broadcast_rows: int = 100_000,
         respect_robots: bool = True,
         verbose: bool = False,
         dedup_strategy: str = "auto",
-        codegen_row_floor: int = 16_384,
         bloom_bits: int = _BLOOM_BITS,
         bloom_spool: bool | None = None,
-        bloom_driver_max_bytes: int = 64 << 20,
         ledger_spill_rows: int = 50_000,
-        seen_filter: str = "bloom",
-        cuckoo_table_rows: int = 1 << 15,
     ):
         if dedup_strategy not in ("auto", "map_only", "shuffle"):
             raise ValueError(f"unknown dedup_strategy: {dedup_strategy!r}")
-        if seen_filter not in ("bloom", "cuckoo"):
-            raise ValueError(f"unknown seen_filter: {seen_filter!r}")
         self.dedup_strategy = dedup_strategy
-        # Adaptive execution mode: waves whose estimated stage-row
-        # volume (pages × ~32 cards) falls below this floor run with
-        # whole-stage codegen and generated-class factories DISABLED.
-        # For a politeness-bounded tiny wave the per-execution cost of
-        # codegen — regenerating the widen battery's source text,
-        # janino compilation on cache miss (wave/seed literals differ
-        # between plans), class loading — is 10-100× the interpreted
-        # execution time of the handful of pages involved; measured on
-        # the fault-crawl suite this floor cuts wave wall ~30%.  Big
-        # waves (any real crawl at scale) keep codegen: the battery's
-        # compiled form wins from ~10^4 rows up.  0 disables.
-        self.codegen_row_floor = codegen_row_floor
         self._cg_saved: tuple | None = None
         self.spark = spark
         self.seeds = seeds
         self.web_cfg = web_cfg
         self.host_tokens = host_tokens
-        self.detail_cost = detail_cost
-        self.salt_buckets = salt_buckets
         self.bloom_buckets = bloom_buckets
         self.bloom_bits = int(bloom_bits)
         # SPOOL sidecar mode (the 10^10-URL shape): when the filter
@@ -123,27 +116,12 @@ class CrawlEngine:
         # politeness-bounded scale.
         if bloom_spool is None:
             bloom_spool = (self.bloom_buckets * self.bloom_bits) // 8 \
-                > bloom_driver_max_bytes
+                > _BLOOM_DRIVER_MAX_BYTES
         self.bloom_spool = bool(bloom_spool)
-        # Deletable sidecar variant (J4d): seen_filter="cuckoo" keeps
-        # per-bucket CUCKOO filters instead of Blooms — same maybe-seen
-        # probe semantics, but invalidate_and_recrawl DELETES the
-        # invalidated keys from the sidecar instead of rebuilding it
-        # from the full seen table.  Driver mode only (cuckoo partials
-        # cannot OR-merge, so the executor-side spool topology does not
-        # apply); inserts ride the politeness-bounded collect path.  An
-        # overfull bucket saturates to all-maybe (exact tier does the
-        # work) — degraded, never a false negative.
-        self.seen_filter = seen_filter
-        self.cuckoo_table_rows = int(cuckoo_table_rows)
         # exact-tier sidecar: full rebuild (replace) past this many
         # committed run dirs — bounds the probe's per-run cost on long
         # crawls (see _seenx_update)
         self.seenx_compact_dirs = 64
-        if seen_filter == "cuckoo" and self.bloom_spool:
-            raise ValueError(
-                "seen_filter='cuckoo' is a driver-mode sidecar; "
-                "it cannot be combined with bloom_spool")
         # parked/paused detail-ledger entries above this spill to a
         # store table instead of growing the driver dicts (see
         # _detail_ledger) — the enforced bound on driver-held state
@@ -234,7 +212,7 @@ class CrawlEngine:
 
     def _set_exec_mode(self, est_rows: int) -> None:
         """Pick compiled vs interpreted execution for this wave's plans
-        (see ``codegen_row_floor``).  Interpreted mode skips source
+        (see ``_CODEGEN_ROW_FLOOR``).  Interpreted mode skips source
         generation + janino + class loading for every plan the wave
         builds — pure win when the wave moves a few hundred rows.
 
@@ -250,7 +228,7 @@ class CrawlEngine:
         untouched.  Plan results are partitioning-independent (the
         engine orders explicitly everywhere), pinned by the bit-match
         suite + fuzz either way."""
-        if not self.codegen_row_floor or est_rows >= self.codegen_row_floor:
+        if est_rows >= _CODEGEN_ROW_FLOOR:
             self._restore_exec_mode()  # a big wave after a small one
             return
         conf = self.spark.conf
@@ -330,10 +308,8 @@ class CrawlEngine:
                 self._bloom_nonempty = bool(self.store.table_paths("bloom"))
             self._bloom = {}
         elif self._bloom is None:
-            from cianparser_spark.engine.bloom import sidecar_from_bytes
-
             self._bloom = {
-                int(r["bucket"]): sidecar_from_bytes(bytes(r["blob"]))
+                int(r["bucket"]): BloomFilter.from_bytes(bytes(r["blob"]))
                 for r in self.store.read("bloom").collect()
             }
             self._bloom_gen += 1
@@ -431,7 +407,7 @@ class CrawlEngine:
         # so the group costs what its sequential card walk will fetch
         cost = F.when(
             F.col("kind") == "detail",
-            F.lit(self.detail_cost) * F.greatest(F.col("card_index"), F.lit(1)),
+            F.lit(_DETAIL_COST) * F.greatest(F.col("card_index"), F.lit(1)),
         ).otherwise(F.lit(1))
         kind_rank = F.when(F.col("kind") == "detail", F.lit(0)).otherwise(F.lit(1))
         df = pending.withColumn("_cost", cost).withColumn("_krank", kind_rank)
@@ -518,7 +494,7 @@ class CrawlEngine:
                     & (F.col("url") == F.col("_f_url"))) \
                 .drop("_f_pn", "_f_kr", "_f_sid", "_f_ci", "_f_url")
         df = df.withColumn(
-            "_salt", F.pmod(F.xxhash64("url", "seed_id"), F.lit(self.salt_buckets))
+            "_salt", F.pmod(F.xxhash64("url", "seed_id"), F.lit(_SALT_BUCKETS))
         )
         w1 = Window.partitionBy("host", "_salt").orderBy(*order) \
             .rowsBetween(Window.unboundedPreceding, 0)
@@ -1056,10 +1032,11 @@ class CrawlEngine:
         Deletes hit the EXACT seen table only.  The Bloom sidecar needs
         no delete support: a now-stale positive merely routes the key
         to the exact anti-join, which no longer contains it — the URL
-        is correctly treated as unseen.  (bloom.CuckooFilter remains
-        for deployments that want sidecar-level deletes instead of
-        stale-positive fall-through.)  Offers first seen on OTHER pages
-        keep their seen keys, so a re-crawl never duplicates them.
+        is correctly treated as unseen.  The sidecar is nevertheless
+        rebuilt from the post-invalidation seen table (below), so this
+        method costs O(seen), not O(invalidated keys).  Offers first
+        seen on OTHER pages keep their seen keys, so a re-crawl never
+        duplicates them.
 
         Known limitation (documented, accepted): only the invalidated
         pages are re-fetched.  An offer that FIRST won on an
@@ -1108,69 +1085,9 @@ class CrawlEngine:
         # re-crawl's prefilter routes every still-seen key to the exact
         # join (bloom ⊇ seen restored)
         adopt_replace = None
-        import numpy as np
-
-        from cianparser_spark.engine.bloom import CuckooBucket
-
-        if (not self.bloom_spool and self.seen_filter == "cuckoo"
-                and self._bloom and all(
-                    isinstance(f, CuckooBucket)
-                    for f in self._bloom.values())):
-            # deletable sidecar (J4d, the north rule's cuckoo
-            # fallback): REMOVE the invalidated keys from the filters
-            # in place — no full rebuild from the seen table.  Safe by
-            # first-wins construction: every accepted key was inserted
-            # exactly once, so same-fingerprint collisions hold one
-            # slot copy per inserted key and deleting this key never
-            # strips another's.  A saturated bucket skips deletes (it
-            # answers all-maybe regardless); an unexpectedly missing
-            # copy saturates the bucket rather than risk a false
-            # negative.  The collect is bounded by the invalidated
-            # pages' offers.
-            #
-            # FIRST restore sidecar ⊇ seen: the crawl's final wave
-            # appends seen keys WITHOUT a sidecar update (nothing in
-            # that run reads it — same policy as the Bloom), so keys
-            # newer than the blob table's commit wave are missing and
-            # would probe definitely-unseen.  The Bloom branch rebuilds
-            # from the full seen table for exactly this reason; here
-            # the lagged slice is inserted instead (one wave's keys,
-            # politeness-bounded).  Review-found bug, pinned by
-            # test_cuckoo_recrawl_final_wave_lag: a final-wave winner
-            # whose suppressed duplicate sits on an invalidated
-            # same-wave sibling page was re-admitted.
-            bloom_wave = -1
-            bdirs = self.store.table_paths("bloom")
-            if bdirs:
-                base = os.path.basename(bdirs[0])
-                if base.startswith("w"):
-                    bloom_wave = int(base[1:].split("-", 1)[0])
-            lagged = self.store.read("seen") \
-                .filter(F.col("wave") > bloom_wave) \
-                .select("seed_id", "deal_url_id").collect()
-            if lagged:
-                self._merge_bloom_keys(
-                    [f"{r['seed_id']}|{r['deal_url_id']}" for r in lagged])
-            inv = invalid_keys.collect()
-            arr = np.array([f"{r['seed_id']}|{r['deal_url_id']}"
-                            for r in inv], dtype=object)
-            if arr.size:
-                bucket = pd.util.hash_array(
-                    arr, hash_key="0123456789abcdef") \
-                    % np.uint64(self.bloom_buckets)
-                for k, b in zip(arr, bucket):
-                    f = self._bloom.get(int(b))
-                    if f is None or f.saturated:
-                        continue
-                    if not f.remove(str(k)):
-                        f.saturated = True
-            self._bloom_gen += 1
-            bloom_df = ([(b, f.to_bytes())
-                         for b, f in sorted(self._bloom.items())],
-                        model.BLOOM_SCHEMA)
-        elif self.bloom_spool:
-            self._bloom = {}
-            self._bloom_gen += 1
+        self._bloom = {}
+        self._bloom_gen += 1
+        if self.bloom_spool:
             bloom_df = self._update_bloom_spark(new_seen, fresh=True)
             self._bloom_nonempty = True
             # the exact-tier sidecar cannot delete either (sorted runs
@@ -1185,8 +1102,6 @@ class CrawlEngine:
                 sx_spool, self.bloom_buckets, f"w{marker:05d}")
             adopt_replace = {"seenx": sx_spool}
         else:
-            self._bloom = {}
-            self._bloom_gen += 1
             bloom_df = self._update_bloom(new_seen)
         # seen rewritten in every branch: recheck sidecar coverage
         # before the next consult (the spool branch's rebuild passes
@@ -2265,23 +2180,15 @@ class CrawlEngine:
         def maybe_seen(keys: pd.Series) -> pd.Series:
             import numpy as np
 
-            from cianparser_spark.engine.bloom import (BloomFilter as BF,
-                                                       CuckooBucket)
+            from cianparser_spark.engine.bloom import BloomFilter as BF
 
             # bc.value deserializes the broadcast ONCE per executor;
             # the zero-copy filter views are additionally cached per
             # task so Arrow batches skip even the view construction.
-            # A cuckoo blob (header magic -2, the deletable sidecar
-            # variant) deserializes to its vectorized probe instead.
             local = _state.get("f")
             if local is None:
                 local = _state["f"] = {
-                    b: (CuckooBucket.from_bytes(raw)
-                        if int(np.frombuffer(memoryview(raw)[:8],
-                                             np.int64)[0]) == CuckooBucket.MAGIC
-                        else BF.from_bytes_ro(raw))
-                    for b, raw in bc.value.items()
-                }
+                    b: BF.from_bytes_ro(raw) for b, raw in bc.value.items()}
             arr = keys.to_numpy(dtype=object)
             bucket = pd.util.hash_array(
                 arr, hash_key="0123456789abcdef") % np.uint64(n_buckets)
@@ -2289,8 +2196,7 @@ class CrawlEngine:
             for b, f in local.items():
                 mask = bucket == b
                 if mask.any():
-                    probe = getattr(f, "contains_many", f.contains)
-                    out[mask] = probe(arr[mask])
+                    out[mask] = f.contains(arr[mask])
             return pd.Series(out)
 
         return maybe_seen
@@ -2309,53 +2215,26 @@ class CrawlEngine:
             keys = np.array(key_list, dtype=object)
             bucket = pd.util.hash_array(
                 keys, hash_key="0123456789abcdef") % np.uint64(self.bloom_buckets)
-            cuckoo = self.seen_filter == "cuckoo"
             for b in np.unique(bucket):
                 bf = merged.get(int(b))
                 if bf is None:
-                    from cianparser_spark.engine.bloom import CuckooBucket
-
-                    bf = merged[int(b)] = (
-                        CuckooBucket(self.cuckoo_table_rows) if cuckoo
-                        else BloomFilter(self.bloom_bits))
-                if isinstance(bf, BloomFilter):
-                    # bloom mode — or a mixed-mode resume (bloom-built
-                    # store opened with seen_filter="cuckoo"): keep
-                    # inserting into the Bloom; deletes for such
-                    # buckets fall back to the rebuild path
-                    bf.add(keys[bucket == b])
-                else:
-                    for k in keys[bucket == b]:
-                        bf.add(str(k))
+                    bf = merged[int(b)] = BloomFilter(self.bloom_bits)
+                bf.add(keys[bucket == b])
         return ([(b, f.to_bytes()) for b, f in sorted(merged.items())],
                 model.BLOOM_SCHEMA)
 
-    def _update_bloom(self, seen_new: DataFrame, n_keys: int | None = None) -> tuple:
+    def _update_bloom(self, seen_new: DataFrame) -> tuple:
         """Merge this wave's accepted keys into fixed-size per-bucket
         Bloom blobs.  Partial filters are built per bucket with
         applyInPandas (UDAF-shaped), then OR-merged driver-side —
         blobs are small and fixed-size by construction.
 
-        Small waves (``n_keys`` known ≤ 20k — politeness-bounded
-        crawls) skip the applyInPandas shuffle + Python-worker launch
-        and build the buckets driver-side from a 2-column collect:
-        ~0.8 s/wave saved on wave-bound runs.  Bucket hashing is the
-        SAME ``pd.util.hash_array`` expression the query-side prefilter
-        uses — a mismatch would send lookups to the wrong bucket and
-        turn false-positives into false NEGATIVES."""
-        import numpy as np
-
-        n_buckets = self.bloom_buckets
-        if self.seen_filter == "cuckoo" or (
-                n_keys is not None and n_keys <= 20_000):
-            # cuckoo mode ALWAYS takes the collect path: cuckoo
-            # partials cannot OR-merge (slot displacement is not a
-            # union), and the deletable sidecar is a driver-mode
-            # feature for politeness-bounded crawls anyway
-            rows = seen_new.select("seed_id", "deal_url_id").collect()
-            return self._merge_bloom_keys(
-                [f"{r['seed_id']}|{r['deal_url_id']}" for r in rows])
-
+        Small waves (≤ 20k keys — politeness-bounded crawls) never get
+        here: ``_run_wave`` collects their keys on the seen write's
+        Observation and calls ``_merge_bloom_keys``.  Bucket hashing is
+        the SAME ``pd.util.hash_array`` expression the query-side
+        prefilter uses — a mismatch would send lookups to the wrong
+        bucket and turn false-positives into false NEGATIVES."""
         partial = (
             seen_new.withColumn(
                 "bucket", self._bucket_udf()(

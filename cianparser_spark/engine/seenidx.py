@@ -297,12 +297,15 @@ def compact(spark, root: str, n_buckets: int, min_runs: int = 8) -> int:
                 parts = [np.fromfile(p, dtype="<i8") for p in runs]
                 merged = np.sort(np.concatenate(parts)) if parts else \
                     np.empty(0, dtype="<i8")
-                tmp = os.path.join(full, f".tmp-{uuid.uuid4().hex}")
+                # a UNIQUE name per compaction: the memmap cache is
+                # keyed by path, so reusing one name would leave a
+                # warm process probing the previous compaction's inode
+                uid = uuid.uuid4().hex
+                tmp = os.path.join(full, f".tmp-{uid}")
                 merged.astype("<i8").tofile(tmp)
-                os.replace(tmp, os.path.join(full, "run-compacted.keys"))
+                os.replace(tmp, os.path.join(full, f"run-compacted-{uid}.keys"))
                 for p in runs:
-                    if not p.endswith("run-compacted.keys"):
-                        os.unlink(p)
+                    os.unlink(p)
                 n += 1
             yield pd.DataFrame({"n": [n]})
 

@@ -561,7 +561,7 @@ def bpe_train(docs: DataFrame, n_merges: int = 8,
     # Every iteration builds two NEW plans (the merge literals differ),
     # so compiled execution pays source-gen + janino + class-load per
     # iteration — 10-100× the interpreted run time of a small vocab
-    # (same tradeoff as the crawl engine's codegen_row_floor).  Run the
+    # (same tradeoff as the crawl engine's _CODEGEN_ROW_FLOOR).  Run the
     # loop interpreted when the vocab is small; a web-scale vocabulary
     # (≥1M distinct words) keeps codegen.
     spark = docs.sparkSession

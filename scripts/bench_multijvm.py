@@ -22,7 +22,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from cianparser_spark.bench_crawl import build_snapshot  # noqa: E402
 
@@ -38,9 +39,28 @@ def launch(cpus: int, cpu_list: str, bdir: str, snap: str,
     pin = shutil.which("taskset")
     if pin:
         cmd = [pin, "-c", cpu_list] + cmd
-    return subprocess.Popen(cmd, stdout=subprocess.PIPE,
-                            stderr=subprocess.DEVNULL, text=True,
-                            cwd="/root/repo")
+    # stderr goes to a file, not a pipe: the two sides run concurrently
+    # and an undrained pipe would stall the side not being waited on
+    err = tempfile.TemporaryFile(mode="w+")
+    proc = subprocess.Popen(cmd, stdout=subprocess.PIPE, stderr=err,
+                            text=True, cwd=REPO)
+    return proc, err
+
+
+def child_result(label: str, returncode: int, out: str, err: str) -> dict:
+    """The child's last stdout line as JSON.  A failed child raises
+    with the tail of its stderr instead of failing later, opaquely,
+    inside ``json.loads``."""
+    if returncode != 0:
+        tail = "\n".join(err.strip().splitlines()[-20:])
+        raise RuntimeError(f"{label} exited with {returncode}:\n{tail}")
+    return json.loads(out.strip().splitlines()[-1])
+
+
+def finish(label: str, proc, err, out: str) -> dict:
+    err.seek(0)
+    with err:
+        return child_result(label, proc.returncode, out, err.read())
 
 
 def main() -> None:
@@ -58,14 +78,14 @@ def main() -> None:
             bdir = tempfile.mkdtemp(prefix="mj_barrier_")
             stop = os.path.join(bdir, "stop")
             try:
-                p2 = launch(2, "0,1", bdir, snap)
-                p8 = launch(8, "8-15", bdir, snap,
-                            ["--reps", "99", "--stop-file", stop])
+                p2, err2 = launch(2, "0,1", bdir, snap)
+                p8, err8 = launch(8, "8-15", bdir, snap,
+                                  ["--reps", "99", "--stop-file", stop])
                 out2, _ = p2.communicate(timeout=3600)
                 open(stop, "w").close()
                 out8, _ = p8.communicate(timeout=3600)
-                r2 = json.loads(out2.strip().splitlines()[-1])
-                r8 = json.loads(out8.strip().splitlines()[-1])
+                r2 = finish("2-cpu side", p2, err2, out2)
+                r8 = finish("8-cpu side", p8, err8, out8)
                 pairs.append({
                     "pages_per_sec_2": r2["pages_per_sec"],
                     "pages_per_sec_8": r8["pages_per_sec"],
@@ -96,8 +116,9 @@ def main() -> None:
                 if pin and cpu_list:
                     cmd = [pin, "-c", cpu_list] + cmd
                 r = subprocess.run(cmd, capture_output=True, text=True,
-                                   timeout=3600, cwd="/root/repo")
-                return json.loads(r.stdout.strip().splitlines()[-1])
+                                   timeout=3600, cwd=REPO)
+                return child_result(f"{cpus}-cpu level", r.returncode,
+                                    r.stdout, r.stderr)
 
             snap_dir2 = tempfile.mkdtemp(prefix="mj_snap2_", dir=snap_root)
             snap = os.path.join(snap_dir2, "web.snap")

@@ -238,19 +238,12 @@ def main() -> int:
     ap.add_argument("--bloom-spool", action="store_true",
                     help="force SPOOL sidecar mode (executor-side "
                          "blob merge + file-cache probe) in every trial")
-    ap.add_argument("--cuckoo", action="store_true",
-                    help="deletable cuckoo sidecar (seen_filter="
-                         "'cuckoo') in every trial — pair with "
-                         "--maintenance so invalidate+recrawl "
-                         "exercises the in-place delete path")
     args = ap.parse_args()
     engine_kw = {}
     if args.spill:
         engine_kw["ledger_spill_rows"] = 0
     if args.bloom_spool:
         engine_kw["bloom_spool"] = True
-    if args.cuckoo:
-        engine_kw["seen_filter"] = "cuckoo"
 
     spark = get_spark(master=f"local[{args.cpus}]",
                       shuffle_partitions=args.cpus,

@@ -119,6 +119,32 @@ def test_seenidx_multi_run_and_compaction(spark, tmp_path):
     assert _checksum(got2) == _checksum(oracle)
 
 
+def test_seenidx_recompaction_in_warm_process(spark, tmp_path):
+    """Two compactions in one process: run files are memmap-cached by
+    path, so a compaction that reused its output name would leave this
+    process probing the FIRST compaction's inode — keys added between
+    the two compactions would read as unseen."""
+    import numpy as np
+
+    from cianparser_spark.engine import seenidx
+
+    def keys(lo, hi):
+        return spark.range(lo, hi).select(F.col("id").alias("key"))
+
+    root = str(tmp_path / "idx")
+    probe = np.arange(0, 4000, dtype=np.int64)
+    bucket = seenidx.bucket_i64(probe, 4)
+    seenidx.write_runs(keys(0, 1000), root, 4, "w0")
+    seenidx.write_runs(keys(1000, 2000), root, 4, "w1")
+    assert seenidx.compact(spark, root, 4, min_runs=2) == 4
+    got = seenidx.probe_runs((root,), 1, probe, bucket)  # warms the cache
+    assert got[:2000].all() and not got[2000:].any()
+    seenidx.write_runs(keys(2000, 3000), root, 4, "w2")
+    assert seenidx.compact(spark, root, 4, min_runs=2) == 4
+    got = seenidx.probe_runs((root,), 2, probe, bucket)
+    assert got[:3000].all() and not got[3000:].any()
+
+
 def test_seenidx_saturated_bloom_exactness(spark, frames, tmp_path):
     """Exactness must ride the sorted runs, not the Bloom: with a
     fully saturated Bloom tier (every probe answers maybe-seen) the

@@ -469,52 +469,15 @@ def test_invalidate_and_recrawl_spool_mode(spark, tmp_run_dir):
     assert not got[len(kept):].any()
 
 
-def test_invalidate_and_recrawl_cuckoo_no_rebuild(spark, tmp_run_dir):
-    """seen_filter='cuckoo' (J4d, the north rule's deletable sidecar):
-    invalidation DELETES the invalidated keys from the cuckoo filters
-    in place — no rebuild from the seen table — and the re-crawl
-    converges to the original rows exactly like bloom mode."""
-    from cianparser_spark.engine.bloom import CuckooBucket
-
-    seed = CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
-                     additional_settings={"end_page": 3})
-    eng = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG,
-                      host_tokens=2, bloom_buckets=4,
-                      seen_filter="cuckoo")
-    before = compat.to_reference_rows(eng.run(), [seed])
-    # the committed sidecar really is cuckoo-format
-    from cianparser_spark.engine.bloom import sidecar_from_bytes
-
-    blobs = {int(r["bucket"]): sidecar_from_bytes(bytes(r["blob"]))
-             for r in eng.store.read("bloom").collect()}
-    assert blobs and all(isinstance(f, CuckooBucket)
-                         for f in blobs.values())
-    assert not any(f.saturated for f in blobs.values())
-
-    # any rebuild path from here is a test failure
-    def _boom(*a, **k):
-        raise AssertionError("sidecar rebuild invoked in cuckoo mode")
-
-    eng._update_bloom = _boom
-    eng._update_bloom_spark = _boom
-    after = compat.to_reference_rows(
-        eng.invalidate_and_recrawl([(1, 2)]), [seed])
-    assert after == before
-    off = eng.store.read("offers")
-    assert off.count() == off.select(
-        "seed_id", "page_number", "card_index").distinct().count()
-
-
-def test_cuckoo_bitmatch_full_crawl(spark, tmp_run_dir):
-    """The cuckoo sidecar as the wave-dedup prefilter must be
-    crawl-order bit-identical to bloom mode (same maybe-seen
-    semantics; exact tier unchanged)."""
+def test_bitmatch_two_seeds_tight_budget(spark, tmp_run_dir):
+    """Two seeds sharing one host at host_tokens=2: each wave after the
+    first consults the Bloom sidecar built from earlier waves, and the
+    crawl must stay crawl-order bit-identical to the oracle."""
     seeds = [CrawlSeed(1, "Москва", "flat", "sale", rooms=(1, 2),
                        additional_settings={"end_page": 3}),
              CrawlSeed(2, "Казань", "flat", "rent_long", rooms="all",
                        additional_settings={"end_page": 2})]
-    _bit_match(spark, tmp_run_dir, seeds, BITMATCH_CFG, host_tokens=2,
-               seen_filter="cuckoo")
+    _bit_match(spark, tmp_run_dir, seeds, BITMATCH_CFG, host_tokens=2)
 
 
 def test_seenx_compaction_bounds_run_dirs(spark, tmp_run_dir):
@@ -549,26 +512,47 @@ def test_bloom_spool_detail_bitmatch(spark, tmp_run_dir):
     assert rows == sim.rows
 
 
-def test_cuckoo_recrawl_final_wave_lag(spark, tmp_run_dir):
-    """Review-found bug: the crawl's final wave appends seen keys
-    without a sidecar update, so a FRESH engine's cuckoo
-    invalidate-and-recrawl must first top up the lagged keys — else a
-    final-wave winner whose suppressed duplicate sits on an
-    invalidated same-wave sibling page probes definitely-unseen and is
-    re-admitted (reproduced: 107 rows vs 106 at bloom_buckets=64,
-    where per-bucket saturation no longer masks the hole)."""
+def test_recrawl_final_wave_lag(spark, tmp_run_dir):
+    """The crawl's final wave appends seen keys without a sidecar
+    update, so a FRESH engine's invalidate-and-recrawl must not trust
+    the lagging sidecar — else a final-wave winner whose suppressed
+    duplicate sits on an invalidated same-wave sibling page probes
+    definitely-unseen and is re-admitted (a sidecar that skipped the
+    lagged keys gave 107 rows vs 106 at bloom_buckets=64, where
+    per-bucket saturation no longer masks the hole)."""
     seed = CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
                      additional_settings={"end_page": 4})
     eng = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG,
-                      host_tokens=2, bloom_buckets=64,
-                      seen_filter="cuckoo")
+                      host_tokens=2, bloom_buckets=64)
     before = compat.to_reference_rows(eng.run(), [seed])
     e2 = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG,
-                     host_tokens=2, bloom_buckets=64,
-                     seen_filter="cuckoo")
+                     host_tokens=2, bloom_buckets=64)
     after = compat.to_reference_rows(
         e2.invalidate_and_recrawl([(1, 4)]), [seed])
     assert after == before
+
+
+def test_non_bloom_blob_rejected_in_both_modes(spark, tmp_run_dir):
+    """A bloom-table blob that is not a Bloom filter (here a blob in
+    the retired cuckoo format: int64 header -2, then a slot table)
+    must fail loudly when loaded — on the driver and by the spool
+    loader — instead of being probed as Bloom bits."""
+    import numpy as np
+
+    from cianparser_spark.engine import model
+    from cianparser_spark.engine.bloom import load_spool_filters
+
+    seed = CrawlSeed(1, "Москва", "flat", "sale")
+    blob = (np.array([-2, 16], np.int64).tobytes()
+            + np.zeros((8, 4), np.uint16).tobytes())
+    eng = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG,
+                      bloom_spool=False)
+    eng.store.commit_wave(
+        1, replaces={"bloom": ([(0, blob)], model.BLOOM_SCHEMA)})
+    with pytest.raises(ValueError, match="not a bloom blob"):
+        eng._load_state()
+    with pytest.raises(ValueError, match="not a bloom blob"):
+        load_spool_filters(tuple(sorted(eng.store.table_paths("bloom"))))
 
 
 def test_seenx_gate_fails_closed_after_seen_compaction(spark, tmp_run_dir):
