@@ -1614,22 +1614,23 @@ def q_lineage_waves(spark, sf_dir):
 
 
 def q_frontier_membership(spark, sf_dir):
-    """The 10^10 URL-seen membership path driver-visible: candidates
-    vs seen through bench_frontier's per-bucket Bloom PREFILTER + exact
-    anti-join for the maybe-seen sliver (the same build/probe recipe —
-    and bucket hash — as crawler._update_bloom/_dedup), against a plain
-    DuckDB ANTI JOIN on the shared input tables.  Blooms are sized
-    deliberately tight (4096 bits/bucket for ~3,500 keys) so the
-    false-positive path does real work; a single false NEGATIVE
-    (dropped fresh URL / silently re-seen key) hash-mismatches.
-    Reference semantics being scaled: the in-memory result_set of
-    base_list.py:24 + flat/list.py:57-68."""
+    """The URL-seen membership path driver-visible, in the crawler's
+    driver sidecar mode: candidates vs seen through the engine's
+    per-bucket Bloom PREFILTER (bloom.build_partials + maybe_seen_udf
+    over the key cast to string — the build/probe functions and bucket
+    routing CrawlEngine calls) + exact anti-join for the maybe-seen
+    sliver, against a plain DuckDB ANTI JOIN on the shared input
+    tables.  Blooms are sized deliberately tight (4096 bits/bucket for
+    ~3,500 keys) so the false-positive path does real work; a single
+    false NEGATIVE (dropped fresh URL / silently re-seen key)
+    hash-mismatches.  Reference semantics being scaled: the in-memory
+    result_set of base_list.py:24 + flat/list.py:57-68."""
     from cianparser_spark import bench_frontier, truth
 
     cand_path, seen_path = truth.ensure_frontier_truth()
     cand = spark.read.parquet(cand_path)
     seen = spark.read.parquet(seen_path)
-    blobs = bench_frontier.build_blooms(seen, n_buckets=8, n_bits=4096)
+    blobs = bench_frontier.collect_blobs(seen, n_buckets=8, n_bits=4096)
     return (
         bench_frontier.membership_split(cand, seen, blobs, n_buckets=8)
         .select("id", "url", "key")
@@ -1638,17 +1639,16 @@ def q_frontier_membership(spark, sf_dir):
 
 
 def q_frontier_membership_exact(spark, sf_dir):
-    """The membership wave's EXACT tier as shipped in round 5
-    (engine/seenidx — VERDICT r04 ask #1): the seen keys become
-    per-bucket sorted int64 runs (built executor-side), candidates run
-    ONE map-only pass — deliberately tight Bloom prefilter (4096
-    bits/bucket, real false-positive traffic) + memmap searchsorted
-    probe of the maybe-seen sliver — with NO anti-join anywhere in the
-    plan.  This is the path that replaced the per-wave full-seen-table
-    left_anti (member_s 73→132 s growing at 10^8 keys; now flat
-    15-21 s — BENCH/frontier_scale_r5.json).  Oracle: plain DuckDB
-    ANTI JOIN on the same shared truth tables; one false negative
-    (dropped fresh URL) or false positive (re-seen key) mismatches."""
+    """The membership wave in the crawler's SPOOL sidecar mode: the
+    seen keys (cast to string) become per-bucket sorted string runs
+    (seenidx.write_str_runs, built executor-side) and a committed
+    Bloom blob table (bloom.build_partials); candidates take the
+    deliberately tight Bloom prefilter (4096 bits/bucket, real
+    false-positive traffic, bloom.maybe_seen_udf) and the maybe-seen
+    sliver the memmap searchsorted probe (seenidx.seen_str_udf) — NO
+    anti-join anywhere in the plan.  Oracle: plain DuckDB ANTI JOIN
+    on the same shared truth tables; one false negative (dropped fresh
+    URL) or false positive (re-seen key) mismatches."""
     import os
     import tempfile
 
@@ -1668,18 +1668,16 @@ def q_frontier_membership_exact(spark, sf_dir):
         import shutil
 
         root = tempfile.mkdtemp(prefix="seenidx_contract_")
-        seenidx.write_runs(seen.select("key"), root, 8, "w0")
+        runs = os.path.join(root, "runs")
+        seenidx.write_str_runs(seen, runs, 8, "w0")
         blob_dir = os.path.join(root, "bloom")
-        bench_frontier._build_partials_i64(seen, 8, 4096) \
-            .write.mode("overwrite").option("compression", "uncompressed") \
-            .parquet(blob_dir)
+        bench_frontier.write_blob_table(seen, blob_dir, 8, 4096)
         _SEENIDX_CONTRACT_CACHE.clear()
-        _SEENIDX_CONTRACT_CACHE[app_id] = cached = (root, blob_dir)
+        _SEENIDX_CONTRACT_CACHE[app_id] = cached = (runs, blob_dir)
         atexit.register(shutil.rmtree, root, ignore_errors=True)
-    root, blob_dir = cached
-    fresh = seenidx.fresh_udf((blob_dir,), (root,), 0, 8)
+    runs, blob_dir = cached
     return (
-        cand.filter(fresh(F.col("key")))
+        bench_frontier.membership_split_spool(cand, (blob_dir,), (runs,), 8)
         .select("id", "url", "key")
         .orderBy("id")
     )

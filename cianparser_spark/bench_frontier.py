@@ -1,44 +1,44 @@
-"""Frontier seen-set throughput microbench: URLs/sec through the REAL
-membership path at 10^7 scale.
+"""Frontier seen-set throughput microbench: URLs/sec through the
+crawler's own membership path at 10^7 scale.
 
 The north-rule metric is frontier-URLs-processed/sec on a 10^10-URL
 frontier.  The crawl bench (`bench_crawl`) measures the full wave loop
 at ~250k politeness-scheduled pages; THIS bench isolates the frontier's
-per-URL machinery — canonicalize → 64-bit seen-key → partitioned-Bloom
-prefilter → exact anti-join for the maybe-seen sliver — and runs it at
-10,000,000 candidate URLs against a 5,000,000-key seen set, i.e. the
-exact pipeline a single wave of a 10^10 crawl would run per partition,
-40× the page scale of the crawl bench.
+per-URL machinery — canonicalize → 64-bit URL key → per-bucket Bloom
+prefilter → exact tier for the maybe-seen sliver — and runs it at
+10,000,000 candidate URLs against a 5,000,000-key seen set.
 
-Every piece is the engine's own recipe, not a bench-only rewrite:
+The key is ``xxhash64`` of the canonical URL
+(``ops.urlnorm.canonical_url_expr``, pure Catalyst codegen); every
+membership step probes that key CAST TO STRING through the functions
+``CrawlEngine`` itself calls on its ``seed_id|deal_url_id`` keys:
 
-- key function: ``ops.urlnorm.canonical_url_expr`` + ``xxhash64``
-  (pure Catalyst codegen — the `url_canonical` contract query oracles
-  it against an independent urllib twin);
-- Bloom build: per-bucket partial filters with ``applyInPandas``,
-  OR-merged driver-side (``crawler._update_bloom`` shape, same
-  ``BloomFilter`` blob format) over the i64 hash family
-  (``bloom.mix64`` splitmix64 streams — the engine's string-keyed
-  seen set uses the pandas ``hash_array`` family instead; either way,
-  build and probe share ONE bucket-routing function, because a
-  mismatch would turn false-positives into false NEGATIVES);
-- membership: vectorized pandas_udf Bloom probe splits candidates into
-  definitely-fresh (bypass) vs maybe-seen (exact ``left_anti`` against
-  the seen table) exactly like ``crawler._dedup``; the union of the
-  two IS the fresh frontier.
+- Bloom build: ``bloom.build_partials`` (one partial filter per
+  ``seenidx.bucket_str`` bucket, built executor-side);
+- Bloom probe: ``bloom.maybe_seen_udf``, from broadcast blobs (driver
+  sidecar mode) or from a committed blob table (spool mode);
+- exact tier: a ``left_anti`` join against the seen table (driver
+  mode) or ``seenidx.write_str_runs`` + ``seenidx.seen_str_udf`` over
+  per-bucket sorted string runs (spool mode);
+- the split: definitely-fresh rows bypass the exact tier, maybe-seen
+  rows take it, and the union of the two IS the fresh frontier —
+  the shape of ``CrawlEngine._dedup``.
+
+``BENCH/frontier_scale_r5*.json`` were measured on an earlier int64
+key family (splitmix64 Bloom hashing, int64 sorted runs) that the
+crawler never ran; it has been deleted, and those artifacts do not
+describe this code.
 
 Correctness is pinned two ways: ``tests/test_bench_frontier.py``
 checks the split+reunion equals a plain exact anti-join (counts + key
 checksum) including under a deliberately saturated Bloom, and the
-``frontier_membership`` contract query runs the same split against a
-DuckDB ANTI JOIN oracle on shared input tables, so a false negative
+``frontier_membership*`` contract queries run the same split against
+a DuckDB ANTI JOIN oracle on shared input tables, so a false negative
 anywhere becomes a driver-visible hash mismatch.
 
 Reference parity note: the reference keeps its URL-seen set as an
 in-memory Python ``set`` per run (cianparser/base_list.py:24,
 flat/list.py:57-68) — correct at 10^4 offers, impossible at 10^10.
-This module is that set's scale-out replacement, with identical
-first-wins semantics (see crawler._dedup for the engine wiring).
 """
 from __future__ import annotations
 
@@ -47,86 +47,79 @@ import shutil
 import tempfile
 import time
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from cianparser_spark.engine.bloom import BloomFilter, mix64
+from cianparser_spark.engine import seenidx
+from cianparser_spark.engine.bloom import (
+    build_partials,
+    maybe_seen_udf,
+    or_merge_blob_group,
+)
 from cianparser_spark.ops.urlnorm import canonical_url_expr, messy_url_expr
 
-# Bucket routing for 64-bit keys: a third independent splitmix64
-# stream (the engine's string-keyed seen set routes with pandas
-# hash_array instead — crawler._update_bloom; build and probe sharing
-# ONE routing function is the correctness-critical part).
-_BUCKET_SEED = 0xA24BAED4963EE407
+
+def collect_blobs(seen: DataFrame, n_buckets: int,
+                  n_bits: int = 1 << 20) -> dict[int, bytes]:
+    """Driver-mode sidecar: the per-bucket blobs of ``seen``'s keys
+    (one row per bucket from ``build_partials``), collected."""
+    return {int(r["bucket"]): bytes(r["blob"])
+            for r in build_partials(seen, n_buckets, n_bits).collect()}
 
 
-def _bucket_of(arr: np.ndarray, n_buckets: int) -> np.ndarray:
-    return mix64(arr, _BUCKET_SEED) % np.uint64(n_buckets)
-
-
-def build_blooms(seen: DataFrame, key_col: str = "key",
-                 n_buckets: int = 64, n_bits: int = 1 << 20) -> dict[int, bytes]:
-    """Distributed per-bucket partial Bloom build, driver OR-merge.
-
-    ``applyInPandas`` groups the seen keys by Bloom bucket; each group
-    builds one fixed-size filter executor-side, so the driver only ever
-    sees ``n_buckets`` small blobs — never the keys.  At 10^10 the seen
-    table is bucketed on disk by the same hash and each bucket's blob
-    is built by the partition that owns it (no shuffle at all); here
-    the groupBy IS that shuffle, on a narrow 1-column frame.
-    """
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        bf = BloomFilter(n_bits)
-        keys = pdf["_k"].to_numpy(dtype=np.int64)
-        if len(keys):
-            bf.add_i64(keys)
-        return pd.DataFrame({"bucket": [int(pdf["bucket"].iloc[0])],
-                             "blob": [bf.to_bytes()]})
-
-    nb = n_buckets
-
-    @F.pandas_udf("long")
-    def bucket_of(keys: pd.Series) -> pd.Series:
-        arr = keys.to_numpy(dtype=np.int64)
-        return pd.Series(_bucket_of(arr, nb).astype("int64"))
-
-    partial = (
-        seen.select(F.col(key_col).cast("long").alias("_k"))
-        .withColumn("bucket", bucket_of(F.col("_k")))
-        .groupBy("bucket")
-        .applyInPandas(build, "bucket long, blob binary")
-        .collect()
-    )
-    merged: dict[int, BloomFilter] = {}
-    for r in partial:
-        b = int(r["bucket"])
-        incoming = BloomFilter.from_bytes(bytes(r["blob"]))
-        if b in merged:
-            merged[b].bits |= incoming.bits
-        else:
-            merged[b] = incoming
-    return {b: f.to_bytes() for b, f in merged.items()}
+def _split(cand: DataFrame, maybe_seen, exact, key_col: str) -> DataFrame:
+    """``CrawlEngine._dedup``'s shape: Bloom-definitely-fresh rows
+    bypass the exact tier, maybe-seen rows take it, reunited."""
+    keyed = cand.withColumn(
+        "_maybe", maybe_seen(F.col(key_col).cast("string")))
+    fresh = keyed.filter(~F.col("_maybe")).drop("_maybe")
+    return fresh.unionByName(
+        exact(keyed.filter(F.col("_maybe")).drop("_maybe")))
 
 
 def membership_split(cand: DataFrame, seen: DataFrame, blobs: dict[int, bytes],
                      n_buckets: int, key_col: str = "key") -> DataFrame:
-    """Fresh-URL filter: Bloom prefilter, exact join only for maybe-seen.
+    """Fresh-URL filter, driver sidecar mode: broadcast Bloom
+    prefilter, exact ``left_anti`` join only for the maybe-seen sliver.
 
     Returns ``cand`` rows whose key is NOT in ``seen`` — bit-identical
     to a plain ``left_anti`` join, but only the Bloom's maybe-seen
-    sliver (true hits + the ~0.2 % false-positive rate at 13 bits/key)
-    ever reaches the join.  The definitely-fresh bypass is what makes
-    the 10^10 wave cheap: the seen table is scanned only against a few
-    percent of the wave, not all of it.
+    sliver ever reaches the join.
     """
-    maybe_seen = _maybe_seen_udf(blobs, n_buckets)
-    keyed = cand.withColumn("_maybe", maybe_seen(F.col(key_col).cast("long")))
-    fresh = keyed.filter(~F.col("_maybe")).drop("_maybe")
-    suspect = keyed.filter(F.col("_maybe")).drop("_maybe")
-    checked = suspect.join(seen.select(key_col), [key_col], "left_anti")
-    return fresh.unionByName(checked)
+    bc = cand.sparkSession.sparkContext.broadcast(blobs)
+    return _split(
+        cand, maybe_seen_udf(n_buckets, bc=bc),
+        lambda s: s.join(seen.select(key_col), [key_col], "left_anti"),
+        key_col)
+
+
+def membership_split_spool(cand: DataFrame, blob_dirs: tuple[str, ...],
+                           run_roots: tuple[str, ...],
+                           n_buckets: int) -> DataFrame:
+    """Fresh-URL filter over ``cand``'s ``key``, spool sidecar mode:
+    Bloom prefilter loaded per executor from the blob table, exact
+    tier = sorted string runs (no join anywhere in the plan; task
+    closures carry paths only)."""
+    seen = seenidx.seen_str_udf(run_roots, n_buckets)
+    return _split(
+        cand, maybe_seen_udf(n_buckets, dirs=blob_dirs),
+        lambda s: s.filter(~seen(F.col("key").cast("string"))), "key")
+
+
+def write_blob_table(seen: DataFrame, path: str, n_buckets: int,
+                     n_bits: int, prev: str | None = None) -> None:
+    """Spool-mode sidecar: this delta's partial filters, OR-merged
+    executor-side with the committed table at ``prev`` (if any), written
+    as a new blob table.  Uncompressed: blobs are incompressible bit
+    arrays, and ``load_spool_filters``' pyarrow reader cannot decode
+    the session's hadoop-framed lz4 on large binary pages."""
+    blobs = build_partials(seen, n_buckets, n_bits)
+    if prev is not None:
+        blobs = (seen.sparkSession.read.parquet(prev).unionByName(blobs)
+                 .groupBy("bucket")
+                 .applyInPandas(or_merge_blob_group, "bucket long, blob binary"))
+    blobs.write.mode("overwrite").option("compression", "uncompressed") \
+        .parquet(path)
 
 
 def _candidates(spark: SparkSession, n: int, par: int) -> DataFrame:
@@ -148,14 +141,16 @@ def _candidates(spark: SparkSession, n: int, par: int) -> DataFrame:
 def run_bench(spark: SparkSession, n_urls: int = 10_000_000,
               seen_frac: float = 0.5, n_buckets: int = 64,
               scratch: str | None = None) -> dict:
-    """Three timed phases; returns the metrics dict.
+    """Four timed phases; returns the metrics dict.
 
-    1. ``hash``    — canonicalize + xxhash64 over n_urls (pure codegen,
-                     noop sink): the key function's ceiling.
-    2. ``build``   — distributed Bloom build over the seen keys.
-    3. ``member``  — the wave shape: scan committed candidate rows →
-                     Bloom prefilter → exact anti-join for the
-                     maybe-seen sliver → count fresh.
+    1. ``hash``         — canonicalize + xxhash64 over n_urls (pure
+                          codegen, noop sink): the key function's ceiling.
+    2. ``build``        — distributed Bloom build over the seen keys.
+    3. ``member``       — driver sidecar mode: broadcast Bloom
+                          prefilter → exact anti-join for the
+                          maybe-seen sliver → count fresh.
+    4. ``member_exact`` — spool sidecar mode: blob-table prefilter →
+                          sorted string-run probe, no join in the plan.
     """
     par = spark.sparkContext.defaultParallelism * 2
     n_seen = int(n_urls * seen_frac)
@@ -185,41 +180,28 @@ def run_bench(spark: SparkSession, n_urls: int = 10_000_000,
     t_hash = time.time() - t0
 
     t0 = time.time()
-    blobs = build_blooms(seen, n_buckets=n_buckets)
+    blobs = collect_blobs(seen, n_buckets)
     t_build = time.time() - t0
 
+    expect_fresh = n_urls - n_seen
     t0 = time.time()
-    fresh_n = _fresh_count(cand, seen, blobs, n_buckets)
+    fresh_n = _fresh_count(membership_split(cand, seen, blobs, n_buckets))
     t_member = time.time() - t0
+    assert fresh_n == expect_fresh, (fresh_n, expect_fresh)
     # untimed diagnostic: prefilter selectivity (prefilter-only pass)
     maybe_n = _maybe_count(cand, blobs, n_buckets)
 
-    expect_fresh = n_urls - n_seen
-    assert fresh_n == expect_fresh, (fresh_n, expect_fresh)
-
-    # 4. ``member_exact`` — the r5 EXACT-tier wave shape
-    # (engine/seenidx): seen keys as per-bucket sorted runs, the whole
-    # membership pass one map-only UDF (Bloom prefilter + memmap
-    # searchsorted), no join in the plan.  Run build untimed (cost ∝
-    # delta, reported separately at 10^8 scale in run_scale_bench).
-    from pyspark.sql import Observation
-
-    from cianparser_spark.engine import seenidx
-
+    # spool mode: run and blob-table builds untimed (cost ∝ delta,
+    # reported per wave in run_scale_bench)
     idx_root = os.path.join(scratch, "seenidx")
-    seenidx.write_runs(seen, idx_root, n_buckets, "w0")
+    seenidx.write_str_runs(seen, idx_root, n_buckets, "w0")
     blob_dir = os.path.join(scratch, "bloomidx")
-    _build_partials_i64(seen, n_buckets, 1 << 20) \
-        .write.mode("overwrite").option("compression", "uncompressed") \
-        .parquet(blob_dir)
-    fresh_f = seenidx.fresh_udf((blob_dir,), (idx_root,), 0, n_buckets)
-    obs = Observation("frontier-member-exact")
+    write_blob_table(seen, blob_dir, n_buckets, 1 << 20)
     t0 = time.time()
-    out = cand.filter(fresh_f(F.col("key"))).observe(
-        obs, F.count(F.lit(1)).alias("fresh"))
-    out.write.format("noop").mode("overwrite").save()
+    exact_n = _fresh_count(membership_split_spool(
+        cand, (blob_dir,), (idx_root,), n_buckets))
     t_exact = time.time() - t0
-    assert int(obs.get["fresh"]) == expect_fresh
+    assert exact_n == expect_fresh, (exact_n, expect_fresh)
 
     if own_scratch:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -240,51 +222,20 @@ def run_bench(spark: SparkSession, n_urls: int = 10_000_000,
     }
 
 
-def _fresh_count(cand, seen, blobs, n_buckets) -> int:
-    """The timed membership job: split+reunion exactly as
-    ``membership_split``, counted via an Observation riding a noop sink
-    so the bench measures the membership machinery, not a writer."""
-    from pyspark.sql import Observation
-
+def _fresh_count(fresh: DataFrame) -> int:
+    """Count a membership result via an Observation riding a noop sink,
+    so the bench times the membership machinery, not a writer."""
     obs = Observation("frontier-member")
-    out = membership_split(cand, seen, blobs, n_buckets) \
-        .observe(obs, F.count(F.lit(1)).alias("fresh"))
-    out.write.format("noop").mode("overwrite").save()
+    fresh.observe(obs, F.count(F.lit(1)).alias("fresh")) \
+        .write.format("noop").mode("overwrite").save()
     return int(obs.get["fresh"])
 
 
-def _maybe_seen_udf(blobs: dict[int, bytes], n_buckets: int):
-    """Vectorized Bloom probe.  The filter dict is deserialized ONCE
-    per task (zero-copy views over the broadcast blobs) and reused for
-    every Arrow batch — at 8 MB of filter state a per-batch
-    ``from_bytes`` copy would move more memory than the probes."""
-    blob_bytes = dict(blobs)
-    nb = n_buckets
-    state: dict = {}
-
-    @F.pandas_udf("boolean")
-    def maybe_seen(keys: pd.Series) -> pd.Series:
-        local = state.get("f")
-        if local is None:
-            local = state["f"] = {
-                b: BloomFilter.from_bytes_ro(raw) for b, raw in blob_bytes.items()
-            }
-        arr = keys.to_numpy(dtype=np.int64)
-        bucket = _bucket_of(arr, nb)
-        out = np.zeros(len(arr), dtype=bool)
-        for b, f in local.items():
-            mask = bucket == b
-            if mask.any():
-                out[mask] = f.contains_i64(arr[mask])
-        return pd.Series(out)
-
-    return maybe_seen
-
-
 def _maybe_count(cand, blobs, n_buckets) -> int:
-    maybe_seen = _maybe_seen_udf(blobs, n_buckets)
+    bc = cand.sparkSession.sparkContext.broadcast(blobs)
+    maybe_seen = maybe_seen_udf(n_buckets, bc=bc)
     return (
-        cand.select(maybe_seen(F.col("key").cast("long")).alias("m"))
+        cand.select(maybe_seen(F.col("key").cast("string")).alias("m"))
         .filter("m").count()
     )
 
@@ -303,104 +254,39 @@ def _key_df(spark: SparkSession, lo: int, hi: int, par: int) -> DataFrame:
     )
 
 
-def _build_partials_i64(new_keys: DataFrame, n_buckets: int,
-                        n_bits: int) -> DataFrame:
-    """Per-bucket partial filters from this wave's keys, built
-    EXECUTOR-side (applyInPandas) — the driver schedules the job and
-    never sees a blob byte (crawler._update_bloom_spark shape, i64
-    hash family)."""
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        bf = BloomFilter(n_bits)
-        keys = pdf["_k"].to_numpy(dtype=np.int64)
-        if len(keys):
-            bf.add_i64(keys)
-        return pd.DataFrame({"bucket": [int(pdf["bucket"].iloc[0])],
-                             "blob": [bf.to_bytes()]})
-
-    nb = n_buckets
-
-    @F.pandas_udf("long")
-    def bucket_of(keys: pd.Series) -> pd.Series:
-        arr = keys.to_numpy(dtype=np.int64)
-        return pd.Series(_bucket_of(arr, nb).astype("int64"))
-
-    return (
-        new_keys.select(F.col("key").cast("long").alias("_k"))
-        .withColumn("bucket", bucket_of(F.col("_k")))
-        .groupBy("bucket")
-        .applyInPandas(build, "bucket long, blob binary")
-    )
-
-
-def _or_merge_blobs(prev: DataFrame, partial: DataFrame) -> DataFrame:
-    """Executor-side OR-merge of the committed blob table with this
-    wave's partials — one bounded exchange of O(buckets) blob rows;
-    nothing reaches the driver.  Kernel = bloom.or_merge_blob_group,
-    the single definition of the blob-format merge."""
-    from cianparser_spark.engine.bloom import or_merge_blob_group
-
-    return (prev.unionByName(partial).groupBy("bucket")
-            .applyInPandas(or_merge_blob_group, "bucket long, blob binary"))
-
-
-def _spool_probe_udf(dirs: tuple, n_buckets: int):
-    """Probe UDF whose closure carries ONLY the blob table's directory
-    list — each executor process loads the filters once per generation
-    (bloom.load_spool_filters); task-launch cost is flat in filter
-    size."""
-    from cianparser_spark.engine.bloom import load_spool_filters
-
-    nb = n_buckets
-
-    @F.pandas_udf("boolean")
-    def maybe_seen(keys: pd.Series) -> pd.Series:
-        local = load_spool_filters(dirs)
-        arr = keys.to_numpy(dtype=np.int64)
-        bucket = _bucket_of(arr, nb)
-        out = np.zeros(len(arr), dtype=bool)
-        for b, f in local.items():
-            mask = bucket == b
-            if mask.any():
-                out[mask] = f.contains_i64(arr[mask])
-        return pd.Series(out)
-
-    return maybe_seen
-
-
 def run_scale_bench(spark: SparkSession, n_keys: int = 100_000_000,
                     n_waves: int = 4, probe_per_wave: int = 20_000_000,
                     n_buckets: int = 64, n_bits: int = 1 << 25,
-                    scratch: str | None = None,
-                    compact_at: int | None = None) -> dict:
+                    scratch: str | None = None) -> dict:
     """The 10^8-key SPOOL-mode wave loop: per wave, commit a delta of
-    seen keys, merge it into the blob table EXECUTOR-side, then run a
-    membership probe whose task closures carry only a path tuple.
+    seen keys, append its sorted string runs, merge it into the blob
+    table EXECUTOR-side, then run a membership probe whose task
+    closures carry only path tuples.
 
-    What this proves (VERDICT r03 finding 2 / next-round ask 1): with
-    ``n_bits × n_buckets`` ≥ 256 MB of filter state and 10^8 seen
-    keys, per-wave wall stays FLAT across waves (the blob table is
-    fixed-size; the delta is constant) and the driver holds ZERO blob
-    bytes at any point — both structurally (nothing is ever collected)
-    and observably (``driver_blob_bytes`` is asserted 0, the probe
-    closure is ~1 KB however big the filters grow, where closure
-    capture shipped ``blob_bytes`` per task).  Correctness is pinned
-    per wave: fresh count must equal the constructed expectation
-    (half the probe window is committed, half is virgin id-space).
+    What this proves: with ``n_bits × n_buckets`` ≥ 256 MB of filter
+    state and 10^8 seen keys, per-wave wall stays FLAT across waves
+    (the blob table is fixed-size; the delta is constant; the exact
+    tier probes runs, never rescans the seen table) and the driver
+    holds ZERO blob bytes at any point — both structurally (nothing is
+    ever collected) and observably (``driver_blob_bytes`` is 0 and the
+    probe closure is a path tuple however big the filters grow).
+    Correctness is pinned per wave: the fresh count must equal the
+    constructed expectation (half the probe window is committed, half
+    is virgin id-space).  Runs accumulate one per wave per bucket;
+    nothing here compacts them (the crawler bounds them by a full
+    rebuild every 64 run directories).
 
     local[N] note: every Python worker process loads the full blob set
     once per generation (N × blobs of RAM here); on a real cluster
-    that is once per EXECUTOR from shared storage — the per-process
-    cost is the sandbox's stand-in for torrent broadcast locality.
+    that is once per EXECUTOR from shared storage.
     """
     import pickle
-
-    from cianparser_spark.engine import seenidx
 
     par = spark.sparkContext.defaultParallelism * 2
     per_wave = n_keys // n_waves
     own_scratch = scratch is None
     scratch = scratch or tempfile.mkdtemp(prefix="bench_frontier_scale_")
-    idx_root = os.path.join(scratch, "seenidx")
+    idx_roots: tuple[str, ...] = ()
     blob_dir = None
     waves = []
     for w in range(n_waves):
@@ -410,29 +296,22 @@ def run_scale_bench(spark: SparkSession, n_keys: int = 100_000_000,
         sd = os.path.join(scratch, f"seen-w{w}")
         _key_df(spark, lo, hi, par).write.mode("overwrite").parquet(sd)
 
-        # --- exact-tier sorted-run index: one run per bucket from this
-        # wave's delta, written executor-side (cost ∝ delta, like the
-        # Bloom merge).  This is what makes the exact leg of the
-        # membership wave flat in seen-set size (VERDICT r04 ask #1).
+        # --- exact tier: one sorted string run per bucket from this
+        # wave's delta, written executor-side (cost ∝ delta) into the
+        # wave's own directory — as the crawler commits one seenx dir
+        # per wave; the directory tuple is the probe's listing
+        # generation
         t0 = time.time()
-        seenidx.write_runs(spark.read.parquet(sd), idx_root, n_buckets,
-                           f"w{w:04d}")
+        idx_roots += (os.path.join(scratch, f"seenidx-w{w}"),)
+        seenidx.write_str_runs(spark.read.parquet(sd), idx_roots[-1],
+                               n_buckets, f"w{w:04d}")
         t_index = time.time() - t0
 
         # --- executor-side sidecar merge
         t0 = time.time()
-        partial = _build_partials_i64(
-            spark.read.parquet(sd), n_buckets, n_bits)
-        if blob_dir is None:
-            merged = partial
-        else:
-            merged = _or_merge_blobs(spark.read.parquet(blob_dir), partial)
         new_blob_dir = os.path.join(scratch, f"bloom-w{w}")
-        # uncompressed: blobs are incompressible bit-arrays, and the
-        # spool probe's pyarrow loader cannot decode the session's
-        # hadoop-framed lz4 on large binary pages
-        merged.write.mode("overwrite").option("compression", "uncompressed") \
-            .parquet(new_blob_dir)
+        write_blob_table(spark.read.parquet(sd), new_blob_dir, n_buckets,
+                         n_bits, prev=blob_dir)
         t_merge = time.time() - t0
         blob_dir = new_blob_dir
 
@@ -441,55 +320,25 @@ def run_scale_bench(spark: SparkSession, n_keys: int = 100_000_000,
         half = probe_per_wave // 2
         cand = _key_df(spark, hi - half, hi, par).unionByName(
             _key_df(spark, n_keys + w * half, n_keys + (w + 1) * half, par))
-        probe = _spool_probe_udf((blob_dir,), n_buckets)
-        # (a) the SIDECAR path alone (prefilter pass) — this is the
-        # machinery whose per-wave cost must stay flat as the filter
-        # grows; its tasks carry only the path tuple
+        probe = maybe_seen_udf(n_buckets, dirs=(blob_dir,))
+        # (a) the SIDECAR path alone (prefilter pass) — the machinery
+        # whose per-wave cost must stay flat as the filter grows
         t0 = time.time()
-        maybe_n = cand.select(probe(F.col("key")).alias("m")) \
+        maybe_n = cand.select(probe(F.col("key").cast("string")).alias("m")) \
             .filter("m").count()
         t_prefilter = time.time() - t0
-        # (b) the full membership wave, ONE map-only pass: Bloom
-        # prefilter + sorted-run EXACT probe of the maybe-seen sliver
-        # (engine/seenidx.py).  This replaces r04's per-wave
-        # ``left_anti`` against the full seen table — O(seen) scan +
-        # shuffle per wave, whose member_s grew 73→132 s as seen went
-        # 25M→100M (BENCH/frontier_scale_r4.json).  The index probe
-        # touches O(probe × log(run)) pages via memmap searchsorted,
-        # so member_s is bounded by probe size and FLAT in seen size;
-        # no shuffle, no hash-relation build, closure carries paths
-        # only.  Exactness rides on the sorted runs (all seen keys),
-        # not the Bloom — pinned by tests/test_bench_frontier.py and
-        # the per-wave fresh-count assertion below.
+        # (b) the full membership wave: Bloom prefilter + sorted-run
+        # exact probe of the maybe-seen sliver, no join in the plan
         t0 = time.time()
-        fresh_f = seenidx.fresh_udf((blob_dir,), (idx_root,), w, n_buckets)
-        out = cand.filter(fresh_f(F.col("key")))
-        from pyspark.sql import Observation
-
-        obs = Observation(f"scale-w{w}")
-        out = out.observe(obs, F.count(F.lit(1)).alias("fresh"))
-        out.write.format("noop").mode("overwrite").save()
+        fresh_n = _fresh_count(membership_split_spool(
+            cand, (blob_dir,), idx_roots, n_buckets))
         t_member = time.time() - t0
-        fresh_n = int(obs.get["fresh"])
         # xxhash64 collisions between the committed and virgin halves
         # are the only slack — none observed at these sizes
         assert fresh_n == half, (w, fresh_n, half)
-        t_compact = None
-        if compact_at is not None and w == compact_at:
-            # mid-run compaction: k-way merge each bucket's accumulated
-            # runs back to one (the long-crawl hygiene path) — later
-            # waves probe the compacted layout; member_s must stay flat
-            # through it
-            t0 = time.time()
-            n_compacted = seenidx.compact(spark, idx_root, n_buckets,
-                                          min_runs=2)
-            t_compact = round(time.time() - t0, 2)
         waves.append({
             "wave": w, "seen_total": hi,
             "index_s": round(t_index, 2),
-            **({"compact_s": t_compact,
-                "buckets_compacted": n_compacted} if t_compact is not None
-               else {}),
             "merge_s": round(t_merge, 2),
             "prefilter_s": round(t_prefilter, 2),
             "prefilter_keys_per_sec": round(probe_per_wave / t_prefilter),
@@ -535,10 +384,8 @@ def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == "--scale":
         n = int(sys.argv[2]) if len(sys.argv) > 2 else 100_000_000
         waves = int(sys.argv[3]) if len(sys.argv) > 3 else 4
-        compact_at = int(sys.argv[4]) if len(sys.argv) > 4 else None
         res = run_scale_bench(spark, n_keys=n, n_waves=waves,
-                              probe_per_wave=max(10_000_000, n // 10),
-                              compact_at=compact_at)
+                              probe_per_wave=max(10_000_000, n // 10))
     else:
         n = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
         res = run_bench(spark, n_urls=n)

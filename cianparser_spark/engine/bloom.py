@@ -1,7 +1,7 @@
 """Per-bucket Bloom filters: the crawl engine's seen-set sidecar.
 
 The seen set is keyed ``seed_id|deal_url_id`` and routed to
-``n_buckets`` buckets by ``pandas.util.hash_array``; each bucket holds
+``n_buckets`` buckets by ``seenidx.bucket_str``; each bucket holds
 one fixed-size ``BloomFilter``, so partial filters built from
 different slices of the seen table OR-merge (``or_merge_blob_group``).
 The filter is a prefilter in front of the exact tier, never the
@@ -16,19 +16,23 @@ A Bloom filter cannot delete.  It does not need to: after
 stale positives only route those keys to the exact tier, which answers
 "unseen".  The crawler holds the blobs in one of two places: on the
 driver, shipped by ``sc.broadcast``, or in the store's ``bloom`` table,
-loaded per executor (``load_spool_filters``).
+loaded per executor (``load_spool_filters``).  Both modes build with
+``build_partials`` and probe with ``maybe_seen_udf``; the frontier
+bench (bench_frontier.py) and the ``frontier_membership*`` contract
+queries call the same two functions.
 
 Blob format: a 16-byte header (int64 ``n_bits``, int64 ``n_hashes``)
 followed by ``ceil(n_bits / 8)`` bytes of bits; ``from_bytes`` rejects
-anything else.  String keys hash with ``hash_array`` under two hash
-keys, combined by double hashing h1 + i*h2; 64-bit keys (the
-bench_frontier family) use splitmix64 (``mix64``).
+anything else.  Keys hash with ``hash_array`` under two hash keys,
+combined by double hashing h1 + i*h2.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+
+from cianparser_spark.engine.seenidx import bucket_col, bucket_str
 
 _HASH_KEY_1 = "0123456789abcdef"
 _HASH_KEY_2 = "fedcba9876543210"
@@ -38,26 +42,6 @@ def _h2(keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     arr = np.asarray(keys, dtype=object)
     h1 = pd.util.hash_array(arr, hash_key=_HASH_KEY_1)
     h2 = pd.util.hash_array(arr, hash_key=_HASH_KEY_2) | 1  # odd => full cycle
-    return h1, h2
-
-
-def mix64(x: np.ndarray, seed: int) -> np.ndarray:
-    """Vectorized splitmix64 finalizer over uint64 — the i64-key hash
-    family.  String keys go through pandas ``hash_array`` (object
-    arrays, ~µs/key); 64-bit frontier keys (xxhash64 of the canonical
-    URL) deserve a pure-numpy pipeline: ~6 SIMD ops/key, no object
-    boxing.  Different ``seed`` values give independent hash streams
-    (double hashing, bucket routing)."""
-    with np.errstate(over="ignore"):
-        z = x.astype(np.uint64, copy=True) + np.uint64(seed)
-        z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-        z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-        return z ^ (z >> np.uint64(31))
-
-
-def _h2_i64(keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    h1 = mix64(keys, 0x9E3779B97F4A7C15)
-    h2 = mix64(keys, 0xC2B2AE3D27D4EB4F) | np.uint64(1)
     return h1, h2
 
 
@@ -117,17 +101,6 @@ class BloomFilter:
         if keys.size == 0:
             return np.zeros(0, bool)
         return self._probe(*_h2(keys))
-
-    def add_i64(self, keys: np.ndarray) -> None:
-        """Insert uint64/int64 keys via the splitmix64 hash family —
-        the frontier path, where the key already IS a 64-bit hash."""
-        h1, h2 = _h2_i64(keys)
-        _set_bits(self.bits, self.n_bits, h1, h2, self.n_hashes)
-
-    def contains_i64(self, keys: np.ndarray) -> np.ndarray:
-        if keys.size == 0:
-            return np.zeros(0, bool)
-        return self._probe(*_h2_i64(keys))
 
     def _probe(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
         out = np.ones(h1.size, bool)
@@ -204,6 +177,34 @@ def or_merge_blob_group(pdf) -> "pd.DataFrame":
                          "blob": [heads.pop() + acc.tobytes()]})
 
 
+def build_partials(keys_df, n_buckets: int, n_bits: int):
+    """One fixed-size partial filter per bucket from ``keys_df``'s
+    ``key`` column (cast to string), built EXECUTOR-side (one ``applyInPandas`` stage over a
+    narrow 1-column frame) -> DataFrame ``(bucket long, blob binary)``,
+    one row per non-empty bucket.  The driver merges the rows into its
+    filters (driver mode) or the blob table OR-merges them with
+    ``or_merge_blob_group`` (spool mode); either way it never sees a
+    key."""
+    from pyspark.sql import functions as F
+
+    nbits = int(n_bits)
+
+    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+        bf = BloomFilter(nbits)
+        keys = pdf["_k"].to_numpy(dtype=object)
+        if len(keys):
+            bf.add(keys)
+        return pd.DataFrame({"bucket": [int(pdf["bucket"].iloc[0])],
+                             "blob": [bf.to_bytes()]})
+
+    return (
+        keys_df.select(F.col("key").cast("string").alias("_k"))
+        .withColumn("bucket", bucket_col(F.col("_k"), n_buckets))
+        .groupBy("bucket")
+        .applyInPandas(build, "bucket long, blob binary")
+    )
+
+
 def blob_n_bits(blob: bytes) -> int:
     """The ``n_bits`` a serialized blob was built with (header peek)."""
     return int(np.frombuffer(memoryview(blob)[:16], np.int64)[0])
@@ -269,3 +270,41 @@ def load_spool_filters(dirs: tuple[str, ...]) -> dict[int, "BloomFilter"]:
         hit = filters
     return hit
 
+
+def maybe_seen_udf(n_buckets: int, bc=None, dirs: tuple[str, ...] | None = None):
+    """The Bloom prefilter probe as a pandas UDF over a string key
+    column — True = maybe seen, False = definitely unseen.  The filters
+    come from ``bc``, an ``sc.broadcast`` of ``{bucket: blob}`` (driver
+    mode), or from ``dirs``, the committed blob-table directories
+    (spool mode: each executor process loads them once per generation,
+    ``load_spool_filters``, so no task closure carries filter bytes).
+    A bucket with no filter answers "definitely unseen"."""
+    from pyspark.sql import functions as F
+
+    nb = int(n_buckets)
+    spool = tuple(dirs) if dirs is not None else None
+    state: dict = {}
+
+    @F.pandas_udf("boolean")
+    def maybe_seen(keys: pd.Series) -> pd.Series:
+        if spool is not None:
+            local = load_spool_filters(spool)
+        else:
+            # bc.value deserializes the broadcast ONCE per executor;
+            # the zero-copy filter views are additionally cached per
+            # task so Arrow batches skip even the view construction
+            local = state.get("f")
+            if local is None:
+                local = state["f"] = {
+                    b: BloomFilter.from_bytes_ro(raw)
+                    for b, raw in bc.value.items()}
+        arr = keys.to_numpy(dtype=object)
+        bucket = bucket_str(arr, nb)
+        out = np.zeros(len(arr), dtype=bool)
+        for b, f in local.items():
+            mask = bucket == b
+            if mask.any():
+                out[mask] = f.contains(arr[mask])
+        return pd.Series(out)
+
+    return maybe_seen

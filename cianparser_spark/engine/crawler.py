@@ -43,14 +43,17 @@ import json
 import os
 import shutil
 
-import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cianparser_spark.corpus import webgen
 from cianparser_spark.engine import columnar, model, seenidx
-from cianparser_spark.engine.bloom import BloomFilter
+from cianparser_spark.engine.bloom import (
+    BloomFilter,
+    build_partials,
+    maybe_seen_udf,
+)
 from cianparser_spark.engine.stage import make_fetch_parse
 from cianparser_spark.engine.store import WaveStore
 from cianparser_spark.semantics import robots
@@ -74,6 +77,11 @@ _SALT_BUCKETS = 4  # per-host salts of the two-phase selection
 # wall ~30%.  Big waves (any real crawl at scale) keep codegen: the
 # battery's compiled form wins from ~10^4 rows up.
 _CODEGEN_ROW_FLOOR = 16_384
+
+
+def _seen_key(key_col: str = "deal_url_id"):
+    """The string seen-key ``seed_id|<key_col>`` both sidecars store."""
+    return F.concat_ws("|", F.col("seed_id"), F.col(key_col))
 
 
 class CrawlEngine:
@@ -610,20 +618,7 @@ class CrawlEngine:
             # emitted keys leave the ledger (ledger is politeness-
             # bounded; the seen side is the whole corpus)
             if self._seen_nonempty:
-                if self.bloom_spool and self._seenx_usable():
-                    # 10^10 shape: sorted-run probe instead of an
-                    # anti-join that would scan/shuffle the full seen
-                    # table — same exact tier as _dedup's
-                    sx = seenidx.seen_str_udf(
-                        tuple(sorted(self.store.table_paths("seenx"))),
-                        self.bloom_buckets)
-                    ks_live = ks_live.filter(~sx(F.concat_ws(
-                        "|", F.col("seed_id"), F.col("key"))))
-                else:
-                    ks_live = ks_live.join(
-                        self.store.read("seen").select(
-                            "seed_id", F.col("deal_url_id").alias("key")),
-                        ["seed_id", "key"], "left_anti")
+                ks_live = self._exact_unseen(ks_live, "key")
             if emitted_keys_df is not None:
                 ks_live = ks_live.join(emitted_keys_df, ["seed_id", "key"], "left_anti")
 
@@ -1096,9 +1091,7 @@ class CrawlEngine:
             sx_spool = os.path.join(self.store.root, "scratch",
                                     f"seenx-inval-{marker:05d}")
             seenidx.write_str_runs(
-                new_seen.select(F.concat_ws(
-                    "|", F.col("seed_id"),
-                    F.col("deal_url_id")).alias("key")),
+                new_seen.select(_seen_key().alias("key")),
                 sx_spool, self.bloom_buckets, f"w{marker:05d}")
             adopt_replace = {"seenx": sx_spool}
         else:
@@ -1764,8 +1757,7 @@ class CrawlEngine:
                 # collected unconditionally (the frontier count that
                 # decides want_bloom is still in flight on its thread);
                 # a final wave just ignores the politeness-bounded list
-                aggs.append(F.collect_list(
-                    F.concat_ws("|", F.col("seed_id"), F.col("deal_url_id"))).alias("keys"))
+                aggs.append(F.collect_list(_seen_key()).alias("keys"))
             seen_df.observe(obs_seen, *aggs).write.mode("overwrite").parquet(seen_spool)
             row = obs_seen.get
             want_bloom = bool(_finish_frontier())
@@ -1928,31 +1920,10 @@ class CrawlEngine:
                 self._seen_rows is None or self._seen_rows > 50_000):
             maybe_seen = self._maybe_seen_udf()
             keyed = batch_first.withColumn(
-                "_key", F.concat_ws("|", F.col("seed_id"), F.col("_dk"))
-            ).withColumn("_maybe", maybe_seen(F.col("_key")))
-            fresh = keyed.filter(~F.col("_maybe")).drop("_key", "_maybe")
-            suspect = keyed.filter(F.col("_maybe"))
-            if self.bloom_spool and self._seenx_usable():
-                # 10^10 shape (VERDICT r04 ask #1): the exact tier is
-                # the per-bucket sorted-run index (engine/seenidx.py),
-                # probed in the SAME map-only pass style as the Bloom —
-                # no per-wave rescan/shuffle of the full seen table, no
-                # hash-relation build; cost ∝ suspects × log(run).
-                # Exactness rides on the runs holding every committed
-                # seen key (maintained atomically with the seen append;
-                # _seenx_usable falls back to the join otherwise).
-                sx = seenidx.seen_str_udf(
-                    tuple(sorted(self.store.table_paths("seenx"))),
-                    self.bloom_buckets)
-                checked = suspect.filter(~sx(F.col("_key"))) \
-                    .drop("_key", "_maybe")
-            else:
-                checked = suspect.drop("_key", "_maybe").join(
-                    self.store.read("seen").select(
-                        "seed_id", F.col("deal_url_id").alias("_dk")),
-                    ["seed_id", "_dk"],
-                    "left_anti",
-                )
+                "_maybe", maybe_seen(_seen_key("_dk")))
+            fresh = keyed.filter(~F.col("_maybe")).drop("_maybe")
+            checked = self._exact_unseen(
+                keyed.filter(F.col("_maybe")).drop("_maybe"), "_dk")
             return fresh.unionByName(checked).drop("_dk")
         if self._seen_nonempty:
             # no Bloom sidecar but a non-empty seen table (e.g. a
@@ -1966,6 +1937,25 @@ class CrawlEngine:
                 "left_anti",
             ).drop("_dk")
         return batch_first.drop("_dk")
+
+    def _exact_unseen(self, df: DataFrame, key_col: str) -> DataFrame:
+        """Rows of ``df`` whose ``(seed_id, key_col)`` is NOT in the
+        committed seen set — the exact tier.  Spool mode with a
+        complete sidecar probes the per-bucket sorted runs
+        (engine/seenidx.py) in one map-only pass: no per-wave
+        rescan/shuffle of the full seen table, cost ∝ rows ×
+        log(run).  Otherwise (driver mode, or a sidecar
+        ``_seenx_usable`` finds incomplete) an anti-join against
+        ``seen``."""
+        if self.bloom_spool and self._seenx_usable():
+            sx = seenidx.seen_str_udf(
+                tuple(sorted(self.store.table_paths("seenx"))),
+                self.bloom_buckets)
+            return df.filter(~sx(_seen_key(key_col)))
+        return df.join(
+            self.store.read("seen").select(
+                "seed_id", F.col("deal_url_id").alias(key_col)),
+            ["seed_id", key_col], "left_anti")
 
     # ------------------------------------- parked-registry spill (derive mode)
 
@@ -2091,7 +2081,7 @@ class CrawlEngine:
         heal."""
         sx_spool = os.path.join(self.store.root, "scratch",
                                 f"seenx-w{wave:05d}")
-        key = F.concat_ws("|", F.col("seed_id"), F.col("deal_url_id"))
+        key = _seen_key()
         delta = new_seen.select(key.alias("key"))
         # COMPACTION: runs accumulate one per bucket per wave and the
         # probe pays a searchsorted per run — on a 10^4-wave crawl the
@@ -2144,62 +2134,15 @@ class CrawlEngine:
         return bc
 
     def _maybe_seen_udf(self):
-        """The Bloom prefilter probe as a pandas UDF.  Default mode
-        probes the sc.broadcast blobs; spool mode ships ONLY the blob
-        table's committed directory list — each executor process loads
-        the filters once per generation (bloom.load_spool_filters), so
-        neither the driver nor any task closure ever carries filter
-        bytes."""
-        n_buckets = self.bloom_buckets
+        """The Bloom prefilter probe (bloom.maybe_seen_udf).  Default
+        mode probes the sc.broadcast blobs; spool mode ships ONLY the
+        blob table's committed directory list, so neither the driver
+        nor any task closure ever carries filter bytes."""
         if self.bloom_spool:
-            dirs = tuple(sorted(self.store.table_paths("bloom")))
-
-            @F.pandas_udf("boolean")
-            def maybe_seen(keys: pd.Series) -> pd.Series:
-                import numpy as np
-
-                from cianparser_spark.engine.bloom import load_spool_filters
-
-                local = load_spool_filters(dirs)
-                arr = keys.to_numpy(dtype=object)
-                bucket = pd.util.hash_array(
-                    arr, hash_key="0123456789abcdef") % np.uint64(n_buckets)
-                out = np.zeros(len(arr), dtype=bool)
-                for b, f in local.items():
-                    mask = bucket == b
-                    if mask.any():
-                        out[mask] = f.contains(arr[mask])
-                return pd.Series(out)
-
-            return maybe_seen
-
-        bc = self._bloom_broadcast()
-        _state: dict = {}
-
-        @F.pandas_udf("boolean")
-        def maybe_seen(keys: pd.Series) -> pd.Series:
-            import numpy as np
-
-            from cianparser_spark.engine.bloom import BloomFilter as BF
-
-            # bc.value deserializes the broadcast ONCE per executor;
-            # the zero-copy filter views are additionally cached per
-            # task so Arrow batches skip even the view construction.
-            local = _state.get("f")
-            if local is None:
-                local = _state["f"] = {
-                    b: BF.from_bytes_ro(raw) for b, raw in bc.value.items()}
-            arr = keys.to_numpy(dtype=object)
-            bucket = pd.util.hash_array(
-                arr, hash_key="0123456789abcdef") % np.uint64(n_buckets)
-            out = np.zeros(len(arr), dtype=bool)
-            for b, f in local.items():
-                mask = bucket == b
-                if mask.any():
-                    out[mask] = f.contains(arr[mask])
-            return pd.Series(out)
-
-        return maybe_seen
+            return maybe_seen_udf(
+                self.bloom_buckets,
+                dirs=tuple(sorted(self.store.table_paths("bloom"))))
+        return maybe_seen_udf(self.bloom_buckets, bc=self._bloom_broadcast())
 
     def _merge_bloom_keys(self, key_list: list[str]) -> tuple:
         """Merge already-collected ``seed|deal_url_id`` keys into the
@@ -2213,8 +2156,7 @@ class CrawlEngine:
         if key_list:
             self._bloom_gen += 1
             keys = np.array(key_list, dtype=object)
-            bucket = pd.util.hash_array(
-                keys, hash_key="0123456789abcdef") % np.uint64(self.bloom_buckets)
+            bucket = seenidx.bucket_str(keys, self.bloom_buckets)
             for b in np.unique(bucket):
                 bf = merged.get(int(b))
                 if bf is None:
@@ -2231,19 +2173,8 @@ class CrawlEngine:
 
         Small waves (≤ 20k keys — politeness-bounded crawls) never get
         here: ``_run_wave`` collects their keys on the seen write's
-        Observation and calls ``_merge_bloom_keys``.  Bucket hashing is
-        the SAME ``pd.util.hash_array`` expression the query-side
-        prefilter uses — a mismatch would send lookups to the wrong
-        bucket and turn false-positives into false NEGATIVES."""
-        partial = (
-            seen_new.withColumn(
-                "bucket", self._bucket_udf()(
-                    F.concat_ws("|", F.col("seed_id"), F.col("deal_url_id")))
-            )
-            .groupBy("bucket")
-            .applyInPandas(self._bucket_build_fn(), "bucket long, blob binary")
-            .collect()
-        )
+        Observation and calls ``_merge_bloom_keys``."""
+        partial = self._bloom_partials(seen_new).collect()
         merged = self._bloom
         self._bloom_gen += 1
         for r in partial:
@@ -2272,39 +2203,12 @@ class CrawlEngine:
         # per-wave overhead (an empty rows list clears the table)
         return (rows, model.BLOOM_SCHEMA)
 
-    def _bucket_udf(self):
-        """Bucket routing for the string seen-key — the SAME
-        ``pd.util.hash_array`` expression the probe uses (build and
-        probe must share one routing function; a mismatch would turn
-        false-positives into false NEGATIVES)."""
-        import numpy as np
-
-        n_buckets = self.bloom_buckets
-
-        @F.pandas_udf("long")
-        def bucket_of(keys: pd.Series) -> pd.Series:
-            arr = keys.to_numpy(dtype=object)
-            return pd.Series(
-                (pd.util.hash_array(arr, hash_key="0123456789abcdef")
-                 % np.uint64(n_buckets)).astype("int64"))
-
-        return bucket_of
-
-    def _bucket_build_fn(self):
-        """applyInPandas kernel: one fixed-size partial filter per
-        bucket group, built from that group's seen keys."""
-        n_bits = self.bloom_bits
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            bf = BloomFilter(n_bits)
-            keys = (pdf["seed_id"].astype(str) + "|"
-                    + pdf["deal_url_id"]).to_numpy(dtype=object)
-            if len(keys):
-                bf.add(keys)
-            return pd.DataFrame({"bucket": [int(pdf["bucket"].iloc[0])],
-                                 "blob": [bf.to_bytes()]})
-
-        return build
+    def _bloom_partials(self, seen: DataFrame) -> DataFrame:
+        """Per-bucket partial filters of ``seen``'s string keys,
+        built executor-side (bloom.build_partials)."""
+        return build_partials(
+            seen.select(_seen_key().alias("key")), self.bloom_buckets,
+            self.bloom_bits)
 
     def _stored_bloom_bits(self) -> int | None:
         """``n_bits`` of the committed sidecar's first blob (header
@@ -2373,14 +2277,7 @@ class CrawlEngine:
                     .unionByName(seen_new.select("seed_id", "deal_url_id"))
                 merge_prev = False
                 self._stored_bits_cache = self.bloom_bits
-        partial = (
-            seen_new.withColumn(
-                "bucket", self._bucket_udf()(
-                    F.concat_ws("|", F.col("seed_id"), F.col("deal_url_id")))
-            )
-            .groupBy("bucket")
-            .applyInPandas(self._bucket_build_fn(), "bucket long, blob binary")
-        )
+        partial = self._bloom_partials(seen_new)
         if not merge_prev:
             return partial
         return (

@@ -188,8 +188,7 @@ def _register_epoch_spool(d: str) -> None:
 
 def epoch_shuffle(df: DataFrame, id_col: str = "doc_id",
                   salt: str = "epoch0", n_shards: int = 8,
-                  scratch_dir: str | None = None,
-                  purge_previous: bool = True) -> DataFrame:
+                  scratch_dir: str | None = None) -> DataFrame:
     """Deterministic global training shuffle: a reproducible
     permutation of the corpus (the step between "assembled dataset"
     and "epoch export" — every trainer consumes the data in a shuffled
@@ -220,14 +219,11 @@ def epoch_shuffle(df: DataFrame, id_col: str = "doc_id",
     than ``persist()`` — a cached frame would outlive the call with
     no owner to release it (the round-3 advisory's leak: Spark's
     CacheManager holds plan-keyed entries until an explicit
-    unpersist).  Spool lifecycle (the side-effect contract): each call
-    first purges the PREVIOUS epochs' spools (``purge_previous=True``,
-    the default — repeated epochs in a long-lived session hold at most
-    one corpus copy of scratch), so the frame returned by an earlier
-    call must be fully consumed before the next epoch starts; pass
-    ``purge_previous=False`` to keep earlier epochs readable and
-    release them yourself with ``purge_epoch_spools()``.  A
-    best-effort atexit purge covers the rest.
+    unpersist).  Spool lifecycle (the side-effect contract): every
+    returned frame stays readable until its spool is released — by
+    ``purge_epoch_spools()`` once the caller has consumed the epochs
+    it holds, or by the best-effort atexit purge.  A call never
+    deletes the spool behind a frame an earlier call returned.
 
     ``scratch_dir`` must be CLUSTER-VISIBLE storage on a multi-node
     deployment (the warehouse scratch, S3/HDFS) — executors write the
@@ -237,10 +233,9 @@ def epoch_shuffle(df: DataFrame, id_col: str = "doc_id",
     function is therefore EAGER: the exchange runs at call time, the
     returned frame reads the spool.
     """
+    import os
     import tempfile
 
-    if purge_previous:
-        purge_epoch_spools()
     id_type = dict(df.dtypes)[id_col]
     key = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(salt)))
     d = (
@@ -269,6 +264,10 @@ def epoch_shuffle(df: DataFrame, id_col: str = "doc_id",
         local_dir = (df.sparkSession.conf.get("spark.local.dir", None)
                      or "").split(",")[0].strip() or None
         scratch_dir = local_dir
+    if scratch_dir is not None:
+        # spark.local.dir names a root Spark itself may never create
+        # (SPARK_LOCAL_DIRS overrides it) — mkdtemp needs it to exist
+        os.makedirs(scratch_dir, exist_ok=True)
     spool = tempfile.mkdtemp(prefix="epoch_shuffle_", dir=scratch_dir)
     _register_epoch_spool(spool)
     d.mapInPandas(

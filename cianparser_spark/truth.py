@@ -1707,10 +1707,11 @@ def ensure_url_grammar_truth() -> str:
 def ensure_frontier_truth() -> tuple[str, str]:
     """Frontier-membership oracle INPUTS: a candidates table
     (id, url, key) and a seen-key table (key), shared verbatim by both
-    worlds.  The Spark side runs the 10^10 seen-set path
-    (bench_frontier.build_blooms + membership_split: per-bucket Bloom
-    prefilter, exact anti-join only for the maybe-seen sliver); the
-    DuckDB oracle is a plain ANTI JOIN over the same two tables — so
+    worlds.  The Spark side runs the crawler's seen-set path on the key
+    cast to string (bench_frontier.membership_split /
+    membership_split_spool: the engine's per-bucket Bloom prefilter,
+    then an exact anti-join or sorted string-run probe only for the
+    maybe-seen sliver); the DuckDB oracle is a plain ANTI JOIN over the same two tables — so
     any Bloom false NEGATIVE (the one failure mode a Bloom must never
     have) or a build/probe bucket-hash mismatch becomes a driver-visible
     row/hash mismatch.

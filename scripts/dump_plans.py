@@ -5,9 +5,11 @@ of global sort, whole-stage codegen spans)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as em  # noqa: E402
 from cianparser_spark.engine.session import get_spark  # noqa: E402
@@ -67,14 +69,17 @@ PICKS = [
      "(true hits + Bloom false positives) while definitely-fresh rows "
      "bypass it entirely — the union is the fresh frontier, no global "
      "shuffle of the bypass branch"),
-    ("frontier_membership_exact", "the r5 EXACT tier (engine/seenidx): "
-     "the WHOLE membership wave is one map-only ArrowEvalPython pass "
-     "over the candidate scan — Bloom prefilter + sorted-run memmap "
-     "searchsorted inside the same UDF — with NO join operator in the "
-     "plan at all; the seen table contributes zero scan, zero "
-     "exchange, zero hash relation (its keys live in the per-bucket "
-     "run files the closure references by path), so per-wave cost is "
-     "bounded by probe size however large seen grows"),
+    ("frontier_membership_exact", "the crawler's spool-mode membership "
+     "wave (Bloom blob table + engine/seenidx string runs): map-only "
+     "ArrowEvalPython passes over the candidate scan with NO join "
+     "operator in the plan at all; the seen table contributes zero "
+     "scan, zero exchange, zero hash relation (its keys live in the "
+     "per-bucket run files the closure references by path), so "
+     "per-wave cost is bounded by probe size however large seen grows. "
+     "Known cost: the optimizer merges the maybe-seen filter with the "
+     "run probe's filter, so the suspect branch evaluates BOTH UDFs on "
+     "every candidate — the run probe is not limited to the Bloom's "
+     "maybe-seen sliver (ROADMAP D1b)"),
     ("export_shards", "shard manifest: ONE hash aggregate on a uniform "
      "derived key (id-suffix mod 16) with map-side partial aggregation — "
      "the encode UDF feeds partials, so at 10^10 rows the exchange "
@@ -279,7 +284,7 @@ def main() -> None:
         plan = df._jdf.queryExecution().explainString(mode)
         out += [f"## {name}", "", f"**Scale property:** {why}", "", "```",
                 plan.rstrip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
     print("wrote PLANS.md")
     spark.stop()

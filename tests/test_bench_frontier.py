@@ -1,14 +1,17 @@
-"""Frontier membership split: Bloom prefilter + exact-join reunion must
+"""Frontier membership split: Bloom prefilter + exact-tier reunion must
 equal a plain exact anti-join — including under saturated and
-FP-heavy Blooms (bench_frontier is the 10^10 seen-set path; a false
-negative here would silently re-crawl or drop frontier URLs)."""
+FP-heavy Blooms.  bench_frontier drives the crawler's own string-key
+functions (bloom.build_partials / maybe_seen_udf, seenidx string
+runs); a false negative here would silently re-crawl or drop frontier
+URLs."""
 import pyspark.sql.functions as F
 import pytest
 
 from cianparser_spark.bench_frontier import (
     _candidates,
-    build_blooms,
+    collect_blobs,
     membership_split,
+    membership_split_spool,
 )
 
 
@@ -29,7 +32,7 @@ def frames(spark):
 
 def test_split_equals_exact_anti_join(spark, frames):
     cand, seen, want = frames
-    blobs = build_blooms(seen, n_buckets=8)
+    blobs = collect_blobs(seen, n_buckets=8)
     got = membership_split(cand, seen, blobs, n_buckets=8)
     assert _checksum(got) == want
     assert want[0] == 3000
@@ -39,7 +42,7 @@ def test_saturated_bloom_still_exact(spark, frames):
     # 64-bit buckets for 3000 keys: every probe answers maybe-seen, so
     # ALL rows take the exact join — reunion must still be exact
     cand, seen, want = frames
-    blobs = build_blooms(seen, n_buckets=4, n_bits=64)
+    blobs = collect_blobs(seen, n_buckets=4, n_bits=64)
     got = membership_split(cand, seen, blobs, n_buckets=4)
     assert _checksum(got) == want
 
@@ -49,7 +52,7 @@ def test_prefilter_splits_both_ways(spark, frames):
     # false negatives, the Bloom invariant) and the fresh bypass is
     # doing real work (most fresh rows never reach the join)
     cand, seen, _ = frames
-    blobs = build_blooms(seen, n_buckets=8)
+    blobs = collect_blobs(seen, n_buckets=8)
     from cianparser_spark.bench_frontier import _maybe_count
 
     maybe = _maybe_count(cand, blobs, n_buckets=8)
@@ -61,7 +64,7 @@ def test_prefilter_splits_both_ways(spark, frames):
 def test_empty_seen_passes_everything(spark):
     cand = _candidates(spark, 512, 4)
     seen = cand.filter("id < 0").select("key")
-    blobs = build_blooms(seen, n_buckets=4)
+    blobs = collect_blobs(seen, n_buckets=4)
     got = membership_split(cand, seen, blobs, n_buckets=4)
     assert got.count() == 512
 
@@ -85,78 +88,49 @@ def test_scale_bench_small(spark, tmp_path):
 # ----------------------------------------------------- sorted-run exact tier
 
 def test_seenidx_probe_equals_exact_anti_join(spark, frames, tmp_path):
-    """engine/seenidx: the sorted-run exact probe must agree with a
-    plain left_anti join key-for-key — it IS the exact tier of the
-    membership wave (replacing the per-wave full-table join)."""
+    """engine/seenidx: the sorted string-run probe must agree with a
+    plain left_anti join key-for-key — it IS the spool-mode exact tier
+    (replacing the per-wave full-table join)."""
     from cianparser_spark.engine import seenidx
 
     cand, seen, want = frames
     root = str(tmp_path / "idx")
-    n = seenidx.write_runs(seen, root, 8, "w0")
+    n = seenidx.write_str_runs(seen, root, 8, "w0")
     assert n == seen.count()
-    fu = seenidx.fresh_udf((), (root,), 0, 8)
-    got = cand.filter(fu(F.col("key")))
+    sx = seenidx.seen_str_udf((root,), 8)
+    got = cand.filter(~sx(F.col("key").cast("string")))
     assert _checksum(got) == want
 
 
-def test_seenidx_multi_run_and_compaction(spark, tmp_path):
-    """Runs accumulate per wave; probe answers across runs, and
-    compaction (k-way merge to one run per bucket) preserves every
-    answer bit-for-bit."""
+def test_seenidx_multi_run(spark, tmp_path):
+    """Runs accumulate per wave; the probe answers across every run
+    of a bucket, and a newly committed root is a new listing
+    generation in a warm process."""
     from cianparser_spark.engine import seenidx
 
     cand = _candidates(spark, 4000, 4).cache()
-    root = str(tmp_path / "idx")
-    seenidx.write_runs(cand.filter("id % 3 = 0").select("key"), root, 4, "w0")
-    seenidx.write_runs(cand.filter("id % 3 = 1").select("key"), root, 4, "w1")
-    oracle = cand.filter("id % 3 = 2")
-    fu = seenidx.fresh_udf((), (root,), 1, 4)
-    got = cand.filter(fu(F.col("key")))
-    assert _checksum(got) == _checksum(oracle)
-    assert seenidx.compact(spark, root, 4, min_runs=2) == 4
-    fu2 = seenidx.fresh_udf((), (root,), 2, 4)
-    got2 = cand.filter(fu2(F.col("key")))
-    assert _checksum(got2) == _checksum(oracle)
-
-
-def test_seenidx_recompaction_in_warm_process(spark, tmp_path):
-    """Two compactions in one process: run files are memmap-cached by
-    path, so a compaction that reused its output name would leave this
-    process probing the FIRST compaction's inode — keys added between
-    the two compactions would read as unseen."""
-    import numpy as np
-
-    from cianparser_spark.engine import seenidx
-
-    def keys(lo, hi):
-        return spark.range(lo, hi).select(F.col("id").alias("key"))
-
-    root = str(tmp_path / "idx")
-    probe = np.arange(0, 4000, dtype=np.int64)
-    bucket = seenidx.bucket_i64(probe, 4)
-    seenidx.write_runs(keys(0, 1000), root, 4, "w0")
-    seenidx.write_runs(keys(1000, 2000), root, 4, "w1")
-    assert seenidx.compact(spark, root, 4, min_runs=2) == 4
-    got = seenidx.probe_runs((root,), 1, probe, bucket)  # warms the cache
-    assert got[:2000].all() and not got[2000:].any()
-    seenidx.write_runs(keys(2000, 3000), root, 4, "w2")
-    assert seenidx.compact(spark, root, 4, min_runs=2) == 4
-    got = seenidx.probe_runs((root,), 2, probe, bucket)
-    assert got[:3000].all() and not got[3000:].any()
+    key = F.col("key").cast("string")
+    r0, r1 = str(tmp_path / "w0"), str(tmp_path / "w1")
+    seenidx.write_str_runs(cand.filter("id % 3 = 0"), r0, 4, "w0")
+    sx = seenidx.seen_str_udf((r0,), 4)
+    assert _checksum(cand.filter(~sx(key))) \
+        == _checksum(cand.filter("id % 3 != 0"))
+    seenidx.write_str_runs(cand.filter("id % 3 = 1"), r1, 4, "w1")
+    sx = seenidx.seen_str_udf((r0, r1), 4)
+    assert _checksum(cand.filter(~sx(key))) \
+        == _checksum(cand.filter("id % 3 = 2"))
 
 
 def test_seenidx_saturated_bloom_exactness(spark, frames, tmp_path):
     """Exactness must ride the sorted runs, not the Bloom: with a
     fully saturated Bloom tier (every probe answers maybe-seen) the
-    combined fresh filter still returns the exact anti-join answer."""
-    import os
-
+    spool-mode split still returns the exact anti-join answer."""
     from cianparser_spark.engine import seenidx
     from cianparser_spark.engine.bloom import BloomFilter
 
     cand, seen, want = frames
     root = str(tmp_path / "idx")
-    seenidx.write_runs(seen, root, 4, "w0")
+    seenidx.write_str_runs(seen, root, 4, "w0")
     # committed blob table whose every filter is saturated
     sat = BloomFilter(64)
     sat.bits[:] = 0xFF
@@ -166,9 +140,7 @@ def test_seenidx_saturated_bloom_exactness(spark, frames, tmp_path):
         "bucket long, blob binary"
     ).coalesce(1).write.mode("overwrite") \
         .option("compression", "uncompressed").parquet(bdir)
-    assert os.path.isdir(bdir)
-    fu = seenidx.fresh_udf((bdir,), (root,), 0, 4)
-    got = cand.filter(fu(F.col("key")))
+    got = membership_split_spool(cand, (bdir,), (root,), 4)
     assert _checksum(got) == want
 
 

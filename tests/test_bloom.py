@@ -88,3 +88,34 @@ def test_or_merge_blob_group_refuses_mismatched_geometry():
     with _pytest.raises(ValueError, match="geometry mismatch"):
         or_merge_blob_group(pd.DataFrame(
             {"bucket": [3, 3], "blob": [a.to_bytes(), c.to_bytes()]}))
+
+
+# Committed-format pin: routing and blob bytes as written by stores of
+# earlier versions.  A change to either makes a resumed store probe
+# the wrong bucket or the wrong bits, i.e. return false negatives.
+_GOLDEN_KEYS = ["1|294563720", "2|-1", "3|Казань", "12|дом-7", "7|x",
+                "5|a|b", "9|🏠", "4|ñandú", "10|", "11|1234567890123456789",
+                "6|Москва-сити", "8|ÿ"]
+_GOLDEN_BUCKETS_16 = [8, 12, 6, 4, 7, 7, 9, 9, 11, 0, 1, 7]
+_GOLDEN_BLOBS_SHA256 = \
+    "aa42f3e48de6c6e0bd48421f66541d80869284e75a91e206a6837c278c6d8ca4"
+
+
+def test_seen_key_format_golden(spark):
+    import hashlib
+
+    from cianparser_spark.engine import seenidx
+    from cianparser_spark.engine.bloom import build_partials
+
+    keys = np.array(_GOLDEN_KEYS, dtype=object)
+    assert seenidx.bucket_str(keys, 16).tolist() == _GOLDEN_BUCKETS_16
+    part = build_partials(
+        spark.createDataFrame([(k,) for k in _GOLDEN_KEYS], "key string"),
+        16, 4096).collect()
+    h = hashlib.sha256()
+    for b, blob in sorted((int(r["bucket"]), bytes(r["blob"])) for r in part):
+        h.update(b.to_bytes(8, "little"))
+        h.update(blob)
+    assert h.hexdigest() == _GOLDEN_BLOBS_SHA256
+    assert sorted(int(r["bucket"]) for r in part) \
+        == sorted(set(_GOLDEN_BUCKETS_16))

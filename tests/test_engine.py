@@ -249,14 +249,20 @@ def test_invalidate_recrawl_single_wave_adjacent_dups(spark, tmp_run_dir):
 
 
 def test_bloom_prefilter_never_drops_unseen(spark, tmp_run_dir):
-    # run a crawl large enough that waves 2+ consult a non-empty bloom;
-    # equality with the oracle implies no false drops
+    """A resumed engine (seen-row count unknown) always consults the
+    Bloom prefilter; with a tight filter (~17 % false positives on the
+    resumed waves' new keys) both the definitely-unseen leg and the
+    exact leg carry rows.  Equality with the oracle implies no false
+    drops."""
     seed = CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
-                     additional_settings={"end_page": 4})
+                     additional_settings={"end_page": 8})
     sim = ReferenceSimulator(BITMATCH_CFG).run([seed])
-    eng = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG,
-                      host_tokens=2, bloom_buckets=4)
+    kw = dict(host_tokens=2, bloom_buckets=4, bloom_bits=128)
+    CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG, **kw).run(max_waves=2)
+    eng = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG, **kw)
     rows = compat.to_reference_rows(eng.run(), [seed])
+    assert eng._seen_rows is None  # no small-seen skip of the prefilter
+    assert eng.store.last_wave() > 2  # the resumed engine ran waves
     assert rows == sim.rows
     assert eng.store.read("bloom").count() >= 1
 

@@ -1504,6 +1504,33 @@ def test_epoch_shuffle_permutation(spark, docs):
     assert not base["pos"].equals(other["pos"])
 
 
+def test_epoch_shuffle_creates_missing_scratch_dir(spark, docs, tmp_path):
+    """A scratch root that does not exist yet (SPARK_LOCAL_DIRS
+    overriding spark.local.dir leaves the conf's root uncreated) is
+    created, not a FileNotFoundError from mkdtemp."""
+    from cianparser_spark.ops.sampling import epoch_shuffle
+
+    scratch = tmp_path / "not" / "yet"
+    out = epoch_shuffle(docs, n_shards=4, scratch_dir=str(scratch))
+    assert out.count() == docs.count()
+    assert scratch.is_dir()
+
+
+def test_epoch_shuffle_keeps_earlier_frames_readable(spark, docs, tmp_path):
+    """A second epoch must not delete the spool behind the first
+    epoch's frame; purging is the caller's explicit step."""
+    from cianparser_spark.ops.sampling import epoch_shuffle, purge_epoch_spools
+
+    n = docs.count()
+    first = epoch_shuffle(docs, n_shards=4, scratch_dir=str(tmp_path))
+    second = epoch_shuffle(docs, salt="epoch1", n_shards=4,
+                           scratch_dir=str(tmp_path))
+    assert sorted(r["pos"] for r in first.select("pos").collect()) \
+        == list(range(n))
+    assert second.count() == n
+    assert purge_epoch_spools() >= 2
+
+
 def test_chunk_dedup_randomized_vs_bruteforce(spark):
     """Seeded randomized corpus with heavy span duplication, checked
     against an independent brute-force first-wins implementation."""
