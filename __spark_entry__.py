@@ -1187,7 +1187,7 @@ def q_text_bpe(spark, sf_dir):
 # is GC'd, which would serve DataFrames bound to a dead session.
 _BPE_CACHE: dict[tuple, tuple] = {}
 
-# frontier_membership_exact's session-scoped sorted-run index:
+# the frontier_membership* queries' session-scoped seen-set index:
 # {applicationId: (idx_root, blob_dir)}, cleaned at interpreter exit
 _SEENIDX_CONTRACT_CACHE: dict[str, tuple] = {}
 
@@ -1613,26 +1613,56 @@ def q_lineage_waves(spark, sf_dir):
     )
 
 
+def _frontier_contract_index(spark, seen):
+    """The frontier contract queries' seen-set sidecar, built once per
+    session (the truth tables are fixed) and removed at exit: per-bucket
+    sorted string runs and a Bloom blob table (bench_frontier.
+    write_blob_table, 4096 bits/bucket).  A per-call mkdtemp would leak
+    a directory per evaluation AND pin its memmaps in seenidx's process
+    cache.  Returns ``(runs_dir, blob_dir)``."""
+    import os
+    import tempfile
+
+    from cianparser_spark import bench_frontier
+    from cianparser_spark.engine import seenidx
+
+    app_id = spark.sparkContext.applicationId
+    cached = _SEENIDX_CONTRACT_CACHE.get(app_id)
+    if cached is None:
+        import atexit
+        import shutil
+
+        root = tempfile.mkdtemp(prefix="seenidx_contract_")
+        runs = os.path.join(root, "runs")
+        seenidx.write_str_runs(seen, runs, 8, "w0")
+        blob_dir = os.path.join(root, "bloom")
+        bench_frontier.write_blob_table(seen, blob_dir, 8, 4096)
+        _SEENIDX_CONTRACT_CACHE.clear()
+        _SEENIDX_CONTRACT_CACHE[app_id] = cached = (runs, blob_dir)
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return cached
+
+
 def q_frontier_membership(spark, sf_dir):
     """The URL-seen membership path driver-visible, in the crawler's
     driver sidecar mode: candidates vs seen through the engine's
-    per-bucket Bloom PREFILTER (bloom.build_partials + maybe_seen_udf
-    over the key cast to string — the build/probe functions and bucket
-    routing CrawlEngine calls) + exact anti-join for the maybe-seen
-    sliver, against a plain DuckDB ANTI JOIN on the shared input
-    tables.  Blooms are sized deliberately tight (4096 bits/bucket for
-    ~3,500 keys) so the false-positive path does real work; a single
-    false NEGATIVE (dropped fresh URL / silently re-seen key)
-    hash-mismatches.  Reference semantics being scaled: the in-memory
-    result_set of base_list.py:24 + flat/list.py:57-68."""
+    per-bucket Bloom PREFILTER (bloom.build_partials into a blob table
+    + maybe_seen_udf over the key cast to string — the build/probe
+    functions and bucket routing CrawlEngine calls) + exact anti-join
+    for the maybe-seen sliver, against a plain DuckDB ANTI JOIN on the
+    shared input tables.  Blooms are sized deliberately tight (4096
+    bits/bucket for ~3,500 keys) so the false-positive path does real
+    work; a single false NEGATIVE (dropped fresh URL / silently re-seen
+    key) hash-mismatches.  Reference semantics being scaled: the
+    in-memory result_set of base_list.py:24 + flat/list.py:57-68."""
     from cianparser_spark import bench_frontier, truth
 
     cand_path, seen_path = truth.ensure_frontier_truth()
     cand = spark.read.parquet(cand_path)
     seen = spark.read.parquet(seen_path)
-    blobs = bench_frontier.collect_blobs(seen, n_buckets=8, n_bits=4096)
+    _, blob_dir = _frontier_contract_index(spark, seen)
     return (
-        bench_frontier.membership_split(cand, seen, blobs, n_buckets=8)
+        bench_frontier.membership_split(cand, seen, (blob_dir,), n_buckets=8)
         .select("id", "url", "key")
         .orderBy("id")
     )
@@ -1649,33 +1679,12 @@ def q_frontier_membership_exact(spark, sf_dir):
     anti-join anywhere in the plan.  Oracle: plain DuckDB ANTI JOIN
     on the same shared truth tables; one false negative (dropped fresh
     URL) or false positive (re-seen key) mismatches."""
-    import os
-    import tempfile
-
     from cianparser_spark import bench_frontier, truth
-    from cianparser_spark.engine import seenidx
 
     cand_path, seen_path = truth.ensure_frontier_truth()
     cand = spark.read.parquet(cand_path)
-    seen = spark.read.parquet(seen_path)
-    # index built once per session (the truth tables are fixed) and
-    # removed at exit — a per-call mkdtemp would leak a directory per
-    # evaluation AND pin its memmaps in seenidx's process cache
-    app_id = spark.sparkContext.applicationId
-    cached = _SEENIDX_CONTRACT_CACHE.get(app_id)
-    if cached is None:
-        import atexit
-        import shutil
-
-        root = tempfile.mkdtemp(prefix="seenidx_contract_")
-        runs = os.path.join(root, "runs")
-        seenidx.write_str_runs(seen, runs, 8, "w0")
-        blob_dir = os.path.join(root, "bloom")
-        bench_frontier.write_blob_table(seen, blob_dir, 8, 4096)
-        _SEENIDX_CONTRACT_CACHE.clear()
-        _SEENIDX_CONTRACT_CACHE[app_id] = cached = (runs, blob_dir)
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-    runs, blob_dir = cached
+    runs, blob_dir = _frontier_contract_index(
+        spark, spark.read.parquet(seen_path))
     return (
         bench_frontier.membership_split_spool(cand, (blob_dir,), (runs,), 8)
         .select("id", "url", "key")

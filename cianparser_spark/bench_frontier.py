@@ -15,8 +15,8 @@ membership step probes that key CAST TO STRING through the functions
 
 - Bloom build: ``bloom.build_partials`` (one partial filter per
   ``seenidx.bucket_str`` bucket, built executor-side);
-- Bloom probe: ``bloom.maybe_seen_udf``, from broadcast blobs (driver
-  sidecar mode) or from a committed blob table (spool mode);
+- Bloom probe: ``bloom.maybe_seen_udf`` over a committed blob table
+  (``write_blob_table``), in both sidecar modes as in the crawler;
 - exact tier: a ``left_anti`` join against the seen table (driver
   mode) or ``seenidx.write_str_runs`` + ``seenidx.seen_str_udf`` over
   per-bucket sorted string runs (spool mode);
@@ -59,14 +59,6 @@ from cianparser_spark.engine.bloom import (
 from cianparser_spark.ops.urlnorm import canonical_url_expr, messy_url_expr
 
 
-def collect_blobs(seen: DataFrame, n_buckets: int,
-                  n_bits: int = 1 << 20) -> dict[int, bytes]:
-    """Driver-mode sidecar: the per-bucket blobs of ``seen``'s keys
-    (one row per bucket from ``build_partials``), collected."""
-    return {int(r["bucket"]): bytes(r["blob"])
-            for r in build_partials(seen, n_buckets, n_bits).collect()}
-
-
 def _split(cand: DataFrame, maybe_seen, exact, key_col: str) -> DataFrame:
     """``CrawlEngine._dedup``'s shape: Bloom-definitely-fresh rows
     bypass the exact tier, maybe-seen rows take it, reunited."""
@@ -77,18 +69,19 @@ def _split(cand: DataFrame, maybe_seen, exact, key_col: str) -> DataFrame:
         exact(keyed.filter(F.col("_maybe")).drop("_maybe")))
 
 
-def membership_split(cand: DataFrame, seen: DataFrame, blobs: dict[int, bytes],
-                     n_buckets: int, key_col: str = "key") -> DataFrame:
-    """Fresh-URL filter, driver sidecar mode: broadcast Bloom
-    prefilter, exact ``left_anti`` join only for the maybe-seen sliver.
+def membership_split(cand: DataFrame, seen: DataFrame,
+                     blob_dirs: tuple[str, ...], n_buckets: int,
+                     key_col: str = "key") -> DataFrame:
+    """Fresh-URL filter, driver sidecar mode: Bloom prefilter loaded
+    per executor from the blob table, exact ``left_anti`` join only
+    for the maybe-seen sliver.
 
     Returns ``cand`` rows whose key is NOT in ``seen`` — bit-identical
     to a plain ``left_anti`` join, but only the Bloom's maybe-seen
     sliver ever reaches the join.
     """
-    bc = cand.sparkSession.sparkContext.broadcast(blobs)
     return _split(
-        cand, maybe_seen_udf(n_buckets, bc=bc),
+        cand, maybe_seen_udf(n_buckets, dirs=blob_dirs),
         lambda s: s.join(seen.select(key_col), [key_col], "left_anti"),
         key_col)
 
@@ -108,7 +101,7 @@ def membership_split_spool(cand: DataFrame, blob_dirs: tuple[str, ...],
 
 def write_blob_table(seen: DataFrame, path: str, n_buckets: int,
                      n_bits: int, prev: str | None = None) -> None:
-    """Spool-mode sidecar: this delta's partial filters, OR-merged
+    """The sidecar's blob table: this delta's partial filters, OR-merged
     executor-side with the committed table at ``prev`` (if any), written
     as a new blob table.  Uncompressed: blobs are incompressible bit
     arrays, and ``load_spool_filters``' pyarrow reader cannot decode
@@ -145,10 +138,11 @@ def run_bench(spark: SparkSession, n_urls: int = 10_000_000,
 
     1. ``hash``         — canonicalize + xxhash64 over n_urls (pure
                           codegen, noop sink): the key function's ceiling.
-    2. ``build``        — distributed Bloom build over the seen keys.
-    3. ``member``       — driver sidecar mode: broadcast Bloom
-                          prefilter → exact anti-join for the
-                          maybe-seen sliver → count fresh.
+    2. ``build``        — distributed Bloom build over the seen keys,
+                          written as a blob table.
+    3. ``member``       — driver sidecar mode: blob-table prefilter →
+                          exact anti-join for the maybe-seen sliver →
+                          count fresh.
     4. ``member_exact`` — spool sidecar mode: blob-table prefilter →
                           sorted string-run probe, no join in the plan.
     """
@@ -179,24 +173,24 @@ def run_bench(spark: SparkSession, n_urls: int = 10_000_000,
         .mode("overwrite").save()
     t_hash = time.time() - t0
 
+    blob_dir = os.path.join(scratch, "bloomidx")
     t0 = time.time()
-    blobs = collect_blobs(seen, n_buckets)
+    write_blob_table(seen, blob_dir, n_buckets, 1 << 20)
     t_build = time.time() - t0
 
     expect_fresh = n_urls - n_seen
     t0 = time.time()
-    fresh_n = _fresh_count(membership_split(cand, seen, blobs, n_buckets))
+    fresh_n = _fresh_count(membership_split(cand, seen, (blob_dir,),
+                                            n_buckets))
     t_member = time.time() - t0
     assert fresh_n == expect_fresh, (fresh_n, expect_fresh)
     # untimed diagnostic: prefilter selectivity (prefilter-only pass)
-    maybe_n = _maybe_count(cand, blobs, n_buckets)
+    maybe_n = _maybe_count(cand, (blob_dir,), n_buckets)
 
-    # spool mode: run and blob-table builds untimed (cost ∝ delta,
-    # reported per wave in run_scale_bench)
+    # spool mode: run build untimed (cost ∝ delta, reported per wave
+    # in run_scale_bench); the blob table is shared with ``member``
     idx_root = os.path.join(scratch, "seenidx")
     seenidx.write_str_runs(seen, idx_root, n_buckets, "w0")
-    blob_dir = os.path.join(scratch, "bloomidx")
-    write_blob_table(seen, blob_dir, n_buckets, 1 << 20)
     t0 = time.time()
     exact_n = _fresh_count(membership_split_spool(
         cand, (blob_dir,), (idx_root,), n_buckets))
@@ -207,7 +201,7 @@ def run_bench(spark: SparkSession, n_urls: int = 10_000_000,
         shutil.rmtree(scratch, ignore_errors=True)
     return {
         "n_urls": n_urls, "n_seen": n_seen, "n_buckets": n_buckets,
-        "bloom_mbytes": round(sum(len(b) for b in blobs.values()) / 1e6, 2),
+        "bloom_mbytes": round(n_buckets * (16 + (1 << 20) // 8) / 1e6, 2),
         "hash_s": round(t_hash, 3),
         "hash_urls_per_sec": round(n_urls / t_hash),
         "bloom_build_s": round(t_build, 3),
@@ -231,9 +225,8 @@ def _fresh_count(fresh: DataFrame) -> int:
     return int(obs.get["fresh"])
 
 
-def _maybe_count(cand, blobs, n_buckets) -> int:
-    bc = cand.sparkSession.sparkContext.broadcast(blobs)
-    maybe_seen = maybe_seen_udf(n_buckets, bc=bc)
+def _maybe_count(cand, blob_dirs, n_buckets) -> int:
+    maybe_seen = maybe_seen_udf(n_buckets, dirs=blob_dirs)
     return (
         cand.select(maybe_seen(F.col("key").cast("string")).alias("m"))
         .filter("m").count()

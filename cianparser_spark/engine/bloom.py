@@ -14,12 +14,13 @@ answer itself:
 A Bloom filter cannot delete.  It does not need to: after
 ``CrawlEngine.invalidate_and_recrawl`` drops keys from ``seen``, their
 stale positives only route those keys to the exact tier, which answers
-"unseen".  The crawler holds the blobs in one of two places: on the
-driver, shipped by ``sc.broadcast``, or in the store's ``bloom`` table,
-loaded per executor (``load_spool_filters``).  Both modes build with
-``build_partials`` and probe with ``maybe_seen_udf``; the frontier
-bench (bench_frontier.py) and the ``frontier_membership*`` contract
-queries call the same two functions.
+"unseen".  The store's committed ``bloom`` table is the filter's only
+copy: every probe loads it per executor process (``load_spool_filters``
+via ``maybe_seen_udf``), and every merge starts from it — on the driver
+through the same loader, or executor-side with ``or_merge_blob_group``.
+Both sidecar modes build with ``build_partials``; the frontier bench
+(bench_frontier.py) and the ``frontier_membership*`` contract queries
+call the same functions.
 
 Blob format: a 16-byte header (int64 ``n_bits``, int64 ``n_hashes``)
 followed by ``ceil(n_bits / 8)`` bytes of bits; ``from_bytes`` rejects
@@ -28,6 +29,8 @@ combined by double hashing h1 + i*h2.
 """
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 import pandas as pd
@@ -118,16 +121,8 @@ class BloomFilter:
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "BloomFilter":
-        f = cls.from_bytes_ro(blob)
-        f.bits = f.bits.copy()
-        return f
-
-    @classmethod
-    def from_bytes_ro(cls, blob: bytes) -> "BloomFilter":
-        """Zero-copy read-only view for probe-side use (``contains``
-        only reads ``bits``).  Executor prefilters deserialize the
-        broadcast blobs once per task; at 8 MB of filter state a
-        per-batch ``from_bytes`` copy dominates the probe itself.
+        """Zero-copy READ-ONLY view of a serialized filter: ``contains``
+        only reads ``bits``, and a merge ORs out of place.
 
         Raises ``ValueError`` unless the blob is a 16-byte header with
         ``n_bits > 0`` followed by exactly ``ceil(n_bits / 8)`` bytes:
@@ -156,7 +151,7 @@ def or_merge_blob_group(pdf) -> "pd.DataFrame":
     false-positives into FALSE NEGATIVES, i.e. dropped dedup keys).
     The legitimate path to a new ``bloom_bits`` on an existing store
     is a sidecar REBUILD from the exact seen table
-    (crawler._update_bloom_spark handles that automatically)."""
+    (crawler._update_bloom handles that automatically)."""
     heads = {bytes(b[:16]) for b in pdf["blob"]}
     if len(heads) != 1:
         # compare the (n_bits, n_hashes) HEADERS, not derived body
@@ -181,10 +176,10 @@ def build_partials(keys_df, n_buckets: int, n_bits: int):
     """One fixed-size partial filter per bucket from ``keys_df``'s
     ``key`` column (cast to string), built EXECUTOR-side (one ``applyInPandas`` stage over a
     narrow 1-column frame) -> DataFrame ``(bucket long, blob binary)``,
-    one row per non-empty bucket.  The driver merges the rows into its
-    filters (driver mode) or the blob table OR-merges them with
-    ``or_merge_blob_group`` (spool mode); either way it never sees a
-    key."""
+    one row per non-empty bucket.  The driver ORs the collected rows
+    into the committed filters (driver mode) or the blob table
+    OR-merges them with ``or_merge_blob_group`` (spool mode); either
+    way it never sees a key."""
     from pyspark.sql import functions as F
 
     nbits = int(n_bits)
@@ -210,94 +205,91 @@ def blob_n_bits(blob: bytes) -> int:
     return int(np.frombuffer(memoryview(blob)[:16], np.int64)[0])
 
 
-# ------------------------------------------------- executor-side spool probe
+# ------------------------------------------- the committed blob table
 
-# One blob GENERATION per executor process: the probe UDF ships only
-# the blob table's directory list in its closure; the first task of a
+# One blob GENERATION per process: the probe UDF ships only the blob
+# table's directory list in its closure; the first task of a
 # generation on each process loads the blobs from shared storage, every
 # later task (and every Arrow batch) reuses them.  Clearing on
-# generation change bounds per-executor memory to one filter set.
+# generation change bounds per-process memory to one filter set.
 _SPOOL_CACHE: dict[tuple, dict[int, "BloomFilter"]] = {}
 
 
+def _parquet_files(dirs):
+    for d in dirs:
+        for fname in sorted(os.listdir(d)):
+            if fname.endswith(".parquet"):
+                yield os.path.join(d, fname)
+
+
 def load_spool_filters(dirs: tuple[str, ...]) -> dict[int, "BloomFilter"]:
-    """Load (and process-cache) the per-bucket Bloom blobs from the
-    committed blob-table parquet directories — the probe side of the
-    SPOOL sidecar mode, where filters are too big to ship through the
-    driver.  The closure cost of a probe UDF is the path tuple, never
-    the blobs; at 10^10-URL scale each executor reads the blob files
-    once per generation from shared storage (here: the local store
-    root), and the driver never materializes a single blob byte.
+    """Load (and process-cache) the per-bucket Bloom filters of the
+    committed blob-table parquet directories — read-only views, shared
+    by every caller in the process: never write into them.  The
+    closure cost of a probe UDF is the path tuple, never the blobs; at
+    10^10-URL scale each executor reads the blob files once per
+    generation from shared storage (here: the local store root).
 
     Duplicate buckets across files OR-merge (all blobs of a bucket are
     fixed-size by construction)."""
     hit = _SPOOL_CACHE.get(dirs)
     if hit is None:
-        import os
-
         import pyarrow.parquet as pq
 
         filters: dict[int, BloomFilter] = {}
-        for d in dirs:
-            for fname in sorted(os.listdir(d)):
-                if not fname.endswith(".parquet"):
-                    continue
-                tb = pq.read_table(os.path.join(d, fname),
-                                   columns=["bucket", "blob"])
-                for b, blob in zip(tb.column("bucket").to_pylist(),
-                                   tb.column("blob").to_pylist()):
-                    f = BloomFilter.from_bytes(bytes(blob))
-                    have = filters.get(int(b))
-                    if have is None:
-                        filters[int(b)] = f
-                    elif (have.n_bits, have.n_hashes) != (f.n_bits,
-                                                          f.n_hashes):
-                        # same guard as or_merge_blob_group: blobs of
-                        # different geometry must never OR (false
-                        # positives would become false NEGATIVES =
-                        # dropped dedup keys).  Unreachable while the
-                        # blob table is replace-written with uniform
-                        # geometry — which is exactly why it must be
-                        # loud if that ever changes.
-                        raise ValueError(
-                            f"bloom blob geometry mismatch in bucket "
-                            f"{int(b)}: {(have.n_bits, have.n_hashes)}"
-                            f" vs {(f.n_bits, f.n_hashes)}")
-                    else:
-                        have.bits |= f.bits
+        for path in _parquet_files(dirs):
+            tb = pq.read_table(path, columns=["bucket", "blob"])
+            for b, blob in zip(tb.column("bucket").to_pylist(),
+                               tb.column("blob").to_pylist()):
+                f = BloomFilter.from_bytes(bytes(blob))
+                have = filters.get(int(b))
+                if have is None:
+                    filters[int(b)] = f
+                elif (have.n_bits, have.n_hashes) != (f.n_bits, f.n_hashes):
+                    # or_merge_blob_group's guard: mismatched blobs
+                    # must never OR (false negatives = dropped keys)
+                    raise ValueError(
+                        f"bloom blob geometry mismatch in bucket "
+                        f"{int(b)}: {(have.n_bits, have.n_hashes)}"
+                        f" vs {(f.n_bits, f.n_hashes)}")
+                else:
+                    filters[int(b)] = BloomFilter(
+                        f.n_bits, f.n_hashes, have.bits | f.bits)
         _SPOOL_CACHE.clear()
         _SPOOL_CACHE[dirs] = filters
         hit = filters
     return hit
 
 
-def maybe_seen_udf(n_buckets: int, bc=None, dirs: tuple[str, ...] | None = None):
+def stored_n_bits(dirs) -> int | None:
+    """``n_bits`` of the first blob in the blob-table directories
+    (header peek: one pyarrow batch of ONE row, never the whole blob
+    column), or None when they hold no blob."""
+    import pyarrow.parquet as pq
+
+    for path in _parquet_files(dirs):
+        for batch in pq.ParquetFile(path).iter_batches(batch_size=1,
+                                                        columns=["blob"]):
+            if batch.num_rows:
+                return blob_n_bits(batch.column(0)[0].as_py())
+    return None
+
+
+def maybe_seen_udf(n_buckets: int, dirs):
     """The Bloom prefilter probe as a pandas UDF over a string key
     column — True = maybe seen, False = definitely unseen.  The filters
-    come from ``bc``, an ``sc.broadcast`` of ``{bucket: blob}`` (driver
-    mode), or from ``dirs``, the committed blob-table directories
-    (spool mode: each executor process loads them once per generation,
-    ``load_spool_filters``, so no task closure carries filter bytes).
+    come from ``dirs``, the committed blob-table directories: each
+    executor process loads them once per generation
+    (``load_spool_filters``), so no task closure carries filter bytes.
     A bucket with no filter answers "definitely unseen"."""
     from pyspark.sql import functions as F
 
     nb = int(n_buckets)
-    spool = tuple(dirs) if dirs is not None else None
-    state: dict = {}
+    dirs = tuple(dirs)
 
     @F.pandas_udf("boolean")
     def maybe_seen(keys: pd.Series) -> pd.Series:
-        if spool is not None:
-            local = load_spool_filters(spool)
-        else:
-            # bc.value deserializes the broadcast ONCE per executor;
-            # the zero-copy filter views are additionally cached per
-            # task so Arrow batches skip even the view construction
-            local = state.get("f")
-            if local is None:
-                local = state["f"] = {
-                    b: BloomFilter.from_bytes_ro(raw)
-                    for b, raw in bc.value.items()}
+        local = load_spool_filters(dirs)
         arr = keys.to_numpy(dtype=object)
         bucket = bucket_str(arr, nb)
         out = np.zeros(len(arr), dtype=bool)

@@ -33,8 +33,9 @@ everything the driver decides (captcha stops, retries, 429 debt,
 watermarks, metrics, lineage, which tables are even non-empty) derives
 from them.  Collected rows are O(pages-per-wave), bounded by the
 politeness budget, never O(cards).  Empty tables are never written;
-Bloom blobs, stop map, and host debt live in driver memory and are
-rebuilt from the committed snapshot on resume.
+the stop map and host debt live in driver memory and are rebuilt from
+the committed snapshot on resume.  The Bloom sidecar lives only in the
+committed ``bloom`` table: every probe and every merge reads it there.
 """
 
 from __future__ import annotations
@@ -52,7 +53,10 @@ from cianparser_spark.engine import columnar, model, seenidx
 from cianparser_spark.engine.bloom import (
     BloomFilter,
     build_partials,
+    load_spool_filters,
     maybe_seen_udf,
+    or_merge_blob_group,
+    stored_n_bits,
 )
 from cianparser_spark.engine.stage import make_fetch_parse
 from cianparser_spark.engine.store import WaveStore
@@ -111,17 +115,17 @@ class CrawlEngine:
         self.host_tokens = host_tokens
         self.bloom_buckets = bloom_buckets
         self.bloom_bits = int(bloom_bits)
-        # SPOOL sidecar mode (the 10^10-URL shape): when the filter
-        # state outgrows what the driver should hold, blobs live ONLY
-        # in the store's bloom table — built and OR-merged executor-
-        # side (one applyInPandas stage), probed via a per-executor
-        # loader that reads the committed blob files directly
-        # (bloom.load_spool_filters).  The driver never materializes a
-        # blob byte and task closures carry only a path tuple, so
-        # per-wave driver time and task-launch cost stay FLAT as the
-        # filter grows.  Default mode (small fixed blobs) keeps the
-        # driver merge + sc.broadcast probe — cheaper per wave at
-        # politeness-bounded scale.
+        # Bloom sidecar mode.  In both modes the store's committed
+        # bloom table is the filter's only copy, probed by a
+        # per-executor loader that reads the blob files directly
+        # (bloom.load_spool_filters; task closures carry a path tuple).
+        # The mode picks where the OR-merge runs and which exact tier
+        # answers "maybe seen".  Default mode merges on the driver (a
+        # local table write, zero jobs on small waves) and anti-joins
+        # seen.  SPOOL mode (the 10^10-URL shape, chosen when the
+        # filter outgrows what the driver should hold) merges
+        # executor-side in one applyInPandas stage — the driver never
+        # materializes a blob byte — and probes sorted string runs.
         if bloom_spool is None:
             bloom_spool = (self.bloom_buckets * self.bloom_bits) // 8 \
                 > _BLOOM_DRIVER_MAX_BYTES
@@ -154,15 +158,11 @@ class CrawlEngine:
         # driver-cached state, rebuilt from the snapshot on resume
         self._stopped: dict[int, int] | None = None
         self._debt: dict[str, int] = {}
-        self._bloom: dict[int, BloomFilter] | None = None
-        # broadcast handle for the driver-held blobs + its generation:
-        # refreshed (old handle destroyed) only when the sidecar
-        # actually changed, so the blobs ship to executors at most once
-        # per wave via torrent broadcast, never via task closures
-        self._bloom_gen = 0
-        self._bloom_bc: tuple[int, object] | None = None
-        # spool-mode emptiness flag (the blobs themselves stay on disk)
+        # Bloom sidecar flags (the blobs themselves stay on disk):
+        # committed table non-empty, and committed blobs built at
+        # another bloom_bits (None = not yet read)
         self._bloom_nonempty: bool | None = None
+        self._bloom_bits_changed: bool | None = None
         # exact-tier sidecar (sorted string runs, spool mode only):
         # None = completeness not yet checked against the manifest
         self._seenx_ok: bool | None = None
@@ -311,16 +311,8 @@ class CrawlEngine:
                 int(r["seed_id"]): int(r["captcha_page"])
                 for r in self.store.read("stopped").collect()
             }
-        if self.bloom_spool:
-            if self._bloom_nonempty is None:
-                self._bloom_nonempty = bool(self.store.table_paths("bloom"))
-            self._bloom = {}
-        elif self._bloom is None:
-            self._bloom = {
-                int(r["bucket"]): BloomFilter.from_bytes(bytes(r["blob"]))
-                for r in self.store.read("bloom").collect()
-            }
-            self._bloom_gen += 1
+        if self._bloom_nonempty is None:
+            self._bloom_nonempty = bool(self.store.table_paths("bloom"))
         if self._seen_nonempty is None:
             self._seen_nonempty = self.store.read("seen").limit(1).count() > 0
         if self._paused is None:
@@ -1080,11 +1072,8 @@ class CrawlEngine:
         # re-crawl's prefilter routes every still-seen key to the exact
         # join (bloom ⊇ seen restored)
         adopt_replace = None
-        self._bloom = {}
-        self._bloom_gen += 1
+        bloom_df = self._update_bloom(new_seen, fresh=True)
         if self.bloom_spool:
-            bloom_df = self._update_bloom_spark(new_seen, fresh=True)
-            self._bloom_nonempty = True
             # the exact-tier sidecar cannot delete either (sorted runs
             # are immutable) — rebuild it from the post-invalidation
             # seen set in the same atomic commit, like the Bloom
@@ -1094,8 +1083,6 @@ class CrawlEngine:
                 new_seen.select(_seen_key().alias("key")),
                 sx_spool, self.bloom_buckets, f"w{marker:05d}")
             adopt_replace = {"seenx": sx_spool}
-        else:
-            bloom_df = self._update_bloom(new_seen)
         # seen rewritten in every branch: recheck sidecar coverage
         # before the next consult (the spool branch's rebuild passes
         # the recheck by its replace-commit naming)
@@ -1459,7 +1446,7 @@ class CrawlEngine:
                 .withColumn("wave", F.lit(wave).cast("long"))
             )
             cold = (not self._staged_nonempty and not min_pending
-                    and not self._stopped and not self._bloom_exists()
+                    and not self._stopped and not self._bloom_nonempty
                     and not self._seen_nonempty)
             if cold:
                 # cold-start wave (no leftovers, no seen set, no stops):
@@ -1764,23 +1751,22 @@ class CrawlEngine:
             n_seen = int(row["n"])
             if n_seen:
                 adopt["seen"] = seen_spool
-            if want_bloom and small:
+            if want_bloom and n_seen:
                 # the Bloom sidecar only exists to pre-filter FUTURE
                 # waves' dedup; on the final wave (empty frontier)
                 # nothing will ever read it — don't build the index
                 # nobody consults
-                replaces["bloom"] = self._merge_bloom_keys(list(row["keys"]))
-                self._tick("bloom_update")
-            elif want_bloom and n_seen:
-                new_seen = self.spark.read.schema(
-                    model.TABLE_SCHEMAS["seen"]).parquet(seen_spool)
-                if self.bloom_spool:
-                    replaces["bloom"] = self._update_bloom_spark(new_seen)
-                    self._bloom_nonempty = True
-                    self._seenx_update(new_seen, wave, adopt, adopt_replace)
-                    self._tick("seenx_update")
+                if small and not self._bloom_retuned():
+                    replaces["bloom"] = self._merge_bloom_keys(
+                        list(row["keys"]))
                 else:
+                    new_seen = self.spark.read.schema(
+                        model.TABLE_SCHEMAS["seen"]).parquet(seen_spool)
                     replaces["bloom"] = self._update_bloom(new_seen)
+                    if self.bloom_spool:
+                        self._seenx_update(new_seen, wave, adopt,
+                                           adopt_replace)
+                        self._tick("seenx_update")
                 self._tick("bloom_update")
             elif self.bloom_spool and n_seen:
                 # final wave: the seen append lands without a sidecar
@@ -1916,9 +1902,10 @@ class CrawlEngine:
         # the prefilter's Python workers (~0.3-0.5 s/wave); the Bloom
         # sidecar still gets MAINTAINED above so big later waves (and
         # resumes, where the count is unknown) keep the prefilter
-        if self._bloom_exists() and (
+        if self._bloom_nonempty and (
                 self._seen_rows is None or self._seen_rows > 50_000):
-            maybe_seen = self._maybe_seen_udf()
+            maybe_seen = maybe_seen_udf(
+                self.bloom_buckets, dirs=sorted(self.store.table_paths("bloom")))
             keyed = batch_first.withColumn(
                 "_maybe", maybe_seen(_seen_key("_dk")))
             fresh = keyed.filter(~F.col("_maybe")).drop("_maybe")
@@ -2108,176 +2095,83 @@ class CrawlEngine:
             adopt_replace["seenx"] = sx_spool
             self._seenx_ok = True
 
-    def _bloom_exists(self) -> bool:
-        """Any sidecar state to consult? (driver blobs in default mode,
-        a committed blob table in spool mode)."""
-        return bool(self._bloom) or bool(self.bloom_spool and self._bloom_nonempty)
-
-    def _bloom_broadcast(self):
-        """The driver-held blobs as a ``sc.broadcast`` handle, reshipped
-        only when the sidecar actually changed (generation counter) and
-        the previous generation's executor copies destroyed.  Broadcast
-        moves the blob bytes through torrent-style distribution — one
-        copy per EXECUTOR per generation — where the previous closure
-        capture re-serialized them into every task of every wave, a
-        per-task cost that grows with filter size (the 10^10 scale
-        wall; see VERDICT r03 finding 2)."""
-        if self._bloom_bc is not None and self._bloom_bc[0] == self._bloom_gen:
-            return self._bloom_bc[1]
-        if self._bloom_bc is not None:
-            # waves are sequential — no job still references the old
-            # generation when a new one is built
-            self._bloom_bc[1].destroy()
-        bc = self.spark.sparkContext.broadcast(
-            {b: f.to_bytes() for b, f in (self._bloom or {}).items()})
-        self._bloom_bc = (self._bloom_gen, bc)
-        return bc
-
-    def _maybe_seen_udf(self):
-        """The Bloom prefilter probe (bloom.maybe_seen_udf).  Default
-        mode probes the sc.broadcast blobs; spool mode ships ONLY the
-        blob table's committed directory list, so neither the driver
-        nor any task closure ever carries filter bytes."""
-        if self.bloom_spool:
-            return maybe_seen_udf(
-                self.bloom_buckets,
-                dirs=tuple(sorted(self.store.table_paths("bloom"))))
-        return maybe_seen_udf(self.bloom_buckets, bc=self._bloom_broadcast())
+    def _bloom_retuned(self) -> bool:
+        """Were the committed blobs built at another ``bloom_bits``
+        (operator retuned the filter on a resumed store)?  One header
+        peek per engine (bloom.stored_n_bits): every merge after it
+        writes the configured geometry."""
+        if self._bloom_bits_changed is None:
+            stored = stored_n_bits(self.store.table_paths("bloom"))
+            self._bloom_bits_changed = stored not in (None, self.bloom_bits)
+        return self._bloom_bits_changed
 
     def _merge_bloom_keys(self, key_list: list[str]) -> tuple:
-        """Merge already-collected ``seed|deal_url_id`` keys into the
-        driver's Bloom buckets — zero Spark jobs.  The per-wave key
-        list is politeness-bounded; callers feed it from an
-        ``Observation`` riding the seen-table write, so maintaining the
-        sidecar costs no extra job at all on wave-bound crawls."""
+        """Driver-mode merge of already-collected ``seed|deal_url_id``
+        keys — zero Spark jobs.  The per-wave key list is politeness-
+        bounded; callers feed it from an ``Observation`` riding the
+        seen-table write, so maintaining the sidecar costs no extra
+        job at all on wave-bound crawls."""
         import numpy as np
 
-        merged = self._bloom
-        if key_list:
-            self._bloom_gen += 1
-            keys = np.array(key_list, dtype=object)
-            bucket = seenidx.bucket_str(keys, self.bloom_buckets)
-            for b in np.unique(bucket):
-                bf = merged.get(int(b))
-                if bf is None:
-                    bf = merged[int(b)] = BloomFilter(self.bloom_bits)
-                bf.add(keys[bucket == b])
+        keys = np.array(key_list, dtype=object)
+        bucket = seenidx.bucket_str(keys, self.bloom_buckets)
+        partials = {}
+        for b in np.unique(bucket):
+            partials[int(b)] = BloomFilter(self.bloom_bits)
+            partials[int(b)].add(keys[bucket == b])
+        return self._or_committed(partials, bool(self._bloom_nonempty))
+
+    def _or_committed(self, partials: dict[int, BloomFilter],
+                      merge_prev: bool) -> tuple:
+        """Driver-mode OR of per-bucket ``partials`` into the committed
+        filters (``merge_prev``), read through the probe's own loader
+        (bloom.load_spool_filters).  Its filters are shared read-only
+        views, so the merge copies the dict and ORs out of place: the
+        loader's process cache is never written.  Returns ``(rows,
+        schema)`` — the WaveStore local-write path, no Spark job."""
+        merged = dict(load_spool_filters(
+            tuple(sorted(self.store.table_paths("bloom"))))) \
+            if merge_prev else {}
+        for b, f in partials.items():
+            have = merged.get(b)
+            merged[b] = f if have is None else BloomFilter(
+                f.n_bits, f.n_hashes, have.bits | f.bits)
+        self._bloom_nonempty = bool(merged)
         return ([(b, f.to_bytes()) for b, f in sorted(merged.items())],
                 model.BLOOM_SCHEMA)
 
-    def _update_bloom(self, seen_new: DataFrame) -> tuple:
-        """Merge this wave's accepted keys into fixed-size per-bucket
-        Bloom blobs.  Partial filters are built per bucket with
-        applyInPandas (UDAF-shaped), then OR-merged driver-side —
-        blobs are small and fixed-size by construction.
+    def _update_bloom(self, seen_new: DataFrame, fresh: bool = False):
+        """Merge ``seen_new``'s keys into the committed Bloom sidecar
+        and return the replacement ``bloom`` table.  Per-bucket partial
+        filters are built executor-side (bloom.build_partials).  Default
+        mode collects those O(buckets) rows and ORs them on the driver
+        (``_or_committed``); spool mode OR-merges them with the
+        committed table executor-side (bloom.or_merge_blob_group) and
+        returns the DataFrame WaveStore writes — the driver holds zero
+        blob bytes.  ``fresh=True`` builds from ``seen_new`` alone
+        (re-crawl invalidation).
 
-        Small waves (≤ 20k keys — politeness-bounded crawls) never get
-        here: ``_run_wave`` collects their keys on the seen write's
-        Observation and calls ``_merge_bloom_keys``."""
-        partial = self._bloom_partials(seen_new).collect()
-        merged = self._bloom
-        self._bloom_gen += 1
-        for r in partial:
-            b = int(r["bucket"])
-            incoming = BloomFilter.from_bytes(bytes(r["blob"]))
-            have = merged.get(b)
-            if have is None:
-                merged[b] = incoming
-            elif have.n_bits == incoming.n_bits:
-                have.bits |= incoming.bits
-            else:
-                # operator retuned bloom_bits on a resumed store:
-                # per-bucket filters are self-describing so MIXED
-                # geometries probe fine, but same-bucket blobs cannot
-                # OR.  SATURATE the bucket (all maybe-seen → exact
-                # anti-join) — bloom ⊇ seen holds trivially; the
-                # bucket's prefilter win is lost until a rebuild
-                # (invalidate_and_recrawl) restores it.  Never a
-                # crash, never a false negative.
-                sat = BloomFilter(incoming.n_bits, incoming.n_hashes)
-                sat.bits[:] = 0xFF
-                merged[b] = sat
-        rows = [(b, f.to_bytes()) for b, f in sorted(merged.items())]
-        # (rows, schema) = WaveStore local-write path: the merged blobs
-        # live on the driver already; a Spark job to write them is pure
-        # per-wave overhead (an empty rows list clears the table)
-        return (rows, model.BLOOM_SCHEMA)
+        Committed blobs built at a DIFFERENT ``bloom_bits`` cannot
+        OR-merge: the sidecar is REBUILT over ``seen ∪ seen_new`` at the
+        configured geometry instead (the same fresh build), which keeps
+        bloom ⊇ seen at the cost of one seen-table pass.
 
-    def _bloom_partials(self, seen: DataFrame) -> DataFrame:
-        """Per-bucket partial filters of ``seen``'s string keys,
-        built executor-side (bloom.build_partials)."""
-        return build_partials(
-            seen.select(_seen_key().alias("key")), self.bloom_buckets,
-            self.bloom_bits)
-
-    def _stored_bloom_bits(self) -> int | None:
-        """``n_bits`` of the committed sidecar's first blob (header
-        peek: one pyarrow batch of ONE row, never the whole blob
-        column), or None when no sidecar is committed.  Checked at
-        most once per run (``bloom_bits`` is fixed for the engine's
-        lifetime and every wave after the first writes the configured
-        geometry), so the driver touches blob bytes O(1) times, not
-        per wave."""
-        if getattr(self, "_stored_bits_cache", False) is not False:
-            return self._stored_bits_cache
-        import pyarrow.parquet as pq
-
-        from cianparser_spark.engine.bloom import blob_n_bits
-
-        found = None
-        for d in self.store.table_paths("bloom"):
-            for fname in sorted(os.listdir(d)):
-                if not fname.endswith(".parquet"):
-                    continue
-                pf = pq.ParquetFile(os.path.join(d, fname))
-                for batch in pf.iter_batches(batch_size=1,
-                                             columns=["blob"]):
-                    if batch.num_rows:
-                        found = blob_n_bits(batch.column(0)[0].as_py())
-                        break
-                if found is not None:
-                    break
-            if found is not None:
-                break
-        self._stored_bits_cache = found
-        return found
-
-    def _update_bloom_spark(self, seen_new: DataFrame,
-                            fresh: bool = False) -> DataFrame:
-        """SPOOL-mode sidecar merge, fully executor-side: partial
-        per-bucket filters from this wave's keys UNION the committed
-        blob table, OR-merged per bucket with applyInPandas
-        (bloom.or_merge_blob_group — the single definition of the blob
-        merge), returned as the replacement blob DataFrame (WaveStore
-        writes it with a Spark job).  The driver schedules two stages
-        and holds zero blob bytes — per-wave driver time is flat in
-        filter size, the executor-side cost is one bounded exchange of
-        O(buckets × blob) rows.  ``fresh=True`` rebuilds from scratch
-        (re-crawl invalidation) instead of merging the old table.
-
-        A resumed store whose committed blobs were built at a
-        DIFFERENT ``bloom_bits`` (operator retuned the filter) cannot
-        OR-merge — the sidecar is REBUILT from the exact seen table
-        instead (old ∪ new keys), which preserves the bloom ⊇ seen
-        safety invariant at the cost of one seen-table pass."""
-        from cianparser_spark.engine.bloom import or_merge_blob_group
-
+        Small default-mode waves (≤ 20k keys) take ``_merge_bloom_keys``
+        instead: their keys ride the seen write's Observation."""
         merge_prev = not fresh and bool(self._bloom_nonempty)
-        if merge_prev:
-            stored = self._stored_bloom_bits()
-            if stored is not None and stored != self.bloom_bits:
-                # geometry changed: rebuild from ALL seen keys (the
-                # committed table + this wave's delta); never OR
-                # mismatched blobs (bloom.or_merge_blob_group would
-                # refuse anyway — false negatives otherwise).  The
-                # rebuild writes the configured geometry, so later
-                # waves merge normally (cache updated).
-                seen_new = self.store.read("seen") \
-                    .select("seed_id", "deal_url_id") \
-                    .unionByName(seen_new.select("seed_id", "deal_url_id"))
-                merge_prev = False
-                self._stored_bits_cache = self.bloom_bits
-        partial = self._bloom_partials(seen_new)
+        if merge_prev and self._bloom_retuned():
+            seen_new = self.store.read("seen") \
+                .select("seed_id", "deal_url_id") \
+                .unionByName(seen_new.select("seed_id", "deal_url_id"))
+            merge_prev = False
+        self._bloom_bits_changed = False  # written at bloom_bits below
+        partial = build_partials(seen_new.select(_seen_key().alias("key")),
+                                 self.bloom_buckets, self.bloom_bits)
+        if not self.bloom_spool:
+            return self._or_committed(
+                {int(r["bucket"]): BloomFilter.from_bytes(bytes(r["blob"]))
+                 for r in partial.collect()}, merge_prev)
+        self._bloom_nonempty = True
         if not merge_prev:
             return partial
         return (

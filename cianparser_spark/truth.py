@@ -1710,8 +1710,9 @@ def ensure_frontier_truth() -> tuple[str, str]:
     worlds.  The Spark side runs the crawler's seen-set path on the key
     cast to string (bench_frontier.membership_split /
     membership_split_spool: the engine's per-bucket Bloom prefilter,
-    then an exact anti-join or sorted string-run probe only for the
-    maybe-seen sliver); the DuckDB oracle is a plain ANTI JOIN over the same two tables — so
+    loaded from a committed blob table, then an exact anti-join or
+    sorted string-run probe only for the maybe-seen sliver); the DuckDB
+    oracle is a plain ANTI JOIN over the same two tables — so
     any Bloom false NEGATIVE (the one failure mode a Bloom must never
     have) or a build/probe bucket-hash mismatch becomes a driver-visible
     row/hash mismatch.

@@ -12,7 +12,9 @@ cover the branches we know about; the fuzz hunts interactions we
 don't.
 
 Deterministic: trial i of --seed S always draws the same config, so a
-failure reproduces with ``--seed S --only i``.
+failure reproduces with ``--seed S --only i``.  Trial parity picks the
+Bloom sidecar mode (odd trials run ``bloom_spool=True``), so every
+sweep covers both; each trial's JSON line records it.
 
 Usage:
     python scripts/fuzz_crawl.py --seed 0 --n 24
@@ -190,6 +192,7 @@ def run_trial(spark, rng: random.Random, trial: int,
           and maint_ok is not False)
     info = {
         "trial": trial,
+        "bloom_spool": (engine_kw or {}).get("bloom_spool"),
         "ok": ok,
         "resume_ok": resume_ok,
         "maint_ok": maint_ok,
@@ -235,15 +238,10 @@ def main() -> int:
                     help="force the parked-ledger spill (ledger_spill_"
                          "rows=0): every trial runs the derive-mode "
                          "registry path")
-    ap.add_argument("--bloom-spool", action="store_true",
-                    help="force SPOOL sidecar mode (executor-side "
-                         "blob merge + file-cache probe) in every trial")
     args = ap.parse_args()
     engine_kw = {}
     if args.spill:
         engine_kw["ledger_spill_rows"] = 0
-    if args.bloom_spool:
-        engine_kw["bloom_spool"] = True
 
     spark = get_spark(master=f"local[{args.cpus}]",
                       shuffle_partitions=args.cpus,
@@ -255,7 +253,8 @@ def main() -> int:
             continue
         info = run_trial(spark, rng, trial, resume=args.resume,
                          maintenance=args.maintenance,
-                         engine_kw=engine_kw)
+                         engine_kw=dict(engine_kw,
+                                        bloom_spool=trial % 2 == 1))
         print(json.dumps(info, ensure_ascii=False), flush=True)
         if not info["ok"]:
             failures += 1

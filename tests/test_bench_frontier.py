@@ -9,9 +9,9 @@ import pytest
 
 from cianparser_spark.bench_frontier import (
     _candidates,
-    collect_blobs,
     membership_split,
     membership_split_spool,
+    write_blob_table,
 )
 
 
@@ -22,6 +22,12 @@ def _checksum(df):
     return (row["n"], row["s"], row["u"])
 
 
+def _blob_dirs(seen, tmp_path, n_buckets, n_bits=1 << 20):
+    path = str(tmp_path / "bloom")
+    write_blob_table(seen, path, n_buckets, n_bits)
+    return (path,)
+
+
 @pytest.fixture(scope="module")
 def frames(spark):
     cand = _candidates(spark, 6000, 8).cache()
@@ -30,42 +36,41 @@ def frames(spark):
     return cand, seen, _checksum(oracle)
 
 
-def test_split_equals_exact_anti_join(spark, frames):
+def test_split_equals_exact_anti_join(spark, frames, tmp_path):
     cand, seen, want = frames
-    blobs = collect_blobs(seen, n_buckets=8)
-    got = membership_split(cand, seen, blobs, n_buckets=8)
+    got = membership_split(cand, seen, _blob_dirs(seen, tmp_path, 8),
+                           n_buckets=8)
     assert _checksum(got) == want
     assert want[0] == 3000
 
 
-def test_saturated_bloom_still_exact(spark, frames):
+def test_saturated_bloom_still_exact(spark, frames, tmp_path):
     # 64-bit buckets for 3000 keys: every probe answers maybe-seen, so
     # ALL rows take the exact join — reunion must still be exact
     cand, seen, want = frames
-    blobs = collect_blobs(seen, n_buckets=4, n_bits=64)
-    got = membership_split(cand, seen, blobs, n_buckets=4)
+    got = membership_split(cand, seen, _blob_dirs(seen, tmp_path, 4, 64),
+                           n_buckets=4)
     assert _checksum(got) == want
 
 
-def test_prefilter_splits_both_ways(spark, frames):
+def test_prefilter_splits_both_ways(spark, frames, tmp_path):
     # honest sizing: the maybe-seen set covers every true hit (no
     # false negatives, the Bloom invariant) and the fresh bypass is
     # doing real work (most fresh rows never reach the join)
     cand, seen, _ = frames
-    blobs = collect_blobs(seen, n_buckets=8)
     from cianparser_spark.bench_frontier import _maybe_count
 
-    maybe = _maybe_count(cand, blobs, n_buckets=8)
+    maybe = _maybe_count(cand, _blob_dirs(seen, tmp_path, 8), n_buckets=8)
     n_seen = seen.count()
     assert maybe >= n_seen  # zero false negatives
     assert maybe < cand.count()  # bypass nonempty
 
 
-def test_empty_seen_passes_everything(spark):
+def test_empty_seen_passes_everything(spark, tmp_path):
     cand = _candidates(spark, 512, 4)
     seen = cand.filter("id < 0").select("key")
-    blobs = collect_blobs(seen, n_buckets=4)
-    got = membership_split(cand, seen, blobs, n_buckets=4)
+    got = membership_split(cand, seen, _blob_dirs(seen, tmp_path, 4),
+                           n_buckets=4)
     assert got.count() == 512
 
 

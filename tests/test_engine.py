@@ -248,22 +248,32 @@ def test_invalidate_recrawl_single_wave_adjacent_dups(spark, tmp_run_dir):
     assert after2 == before
 
 
-def test_bloom_prefilter_never_drops_unseen(spark, tmp_run_dir):
+def test_bloom_prefilter_never_drops_unseen(spark, tmp_run_dir, monkeypatch):
     """A resumed engine (seen-row count unknown) always consults the
     Bloom prefilter; with a tight filter (~17 % false positives on the
     resumed waves' new keys) both the definitely-unseen leg and the
     exact leg carry rows.  Equality with the oracle implies no false
-    drops."""
+    drops.  The driver-mode engine probes and merges the committed
+    blob files directly: it never reads the bloom table through Spark,
+    on resume or in any wave."""
+    from cianparser_spark.engine.store import WaveStore
+
     seed = CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
                      additional_settings={"end_page": 8})
     sim = ReferenceSimulator(BITMATCH_CFG).run([seed])
     kw = dict(host_tokens=2, bloom_buckets=4, bloom_bits=128)
     CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG, **kw).run(max_waves=2)
+    reads = []
+    read = WaveStore.read
+    monkeypatch.setattr(WaveStore, "read",
+                        lambda self, name: reads.append(name) or read(self, name))
     eng = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG, **kw)
+    assert not eng.bloom_spool
     rows = compat.to_reference_rows(eng.run(), [seed])
     assert eng._seen_rows is None  # no small-seen skip of the prefilter
     assert eng.store.last_wave() > 2  # the resumed engine ran waves
     assert rows == sim.rows
+    assert reads and "bloom" not in reads
     assert eng.store.read("bloom").count() >= 1
 
 
@@ -336,12 +346,13 @@ def test_bloom_spool_auto_threshold():
     assert big.bloom_spool  # 64 x 1 GiB blobs must never hit the driver
 
 
-def test_bloom_spool_bits_change_rebuilds(spark, tmp_run_dir):
-    """An operator retuning bloom_bits on an existing spool store must
-    NOT OR mismatched blobs (silent false negatives = dropped dedup
-    keys); the sidecar is rebuilt from the exact seen table instead,
-    preserving bloom ⊇ seen.  The resumed crawl stays bit-identical
-    and the committed blobs carry the NEW geometry."""
+@pytest.mark.parametrize("bloom_spool", [False, True])
+def test_bloom_spool_bits_change_rebuilds(spark, tmp_run_dir, bloom_spool):
+    """An operator retuning bloom_bits on an existing store must NOT
+    OR mismatched blobs (silent false negatives = dropped dedup keys);
+    in either sidecar mode the sidecar is rebuilt from the exact seen
+    table instead, preserving bloom ⊇ seen.  The resumed crawl stays
+    bit-identical and the committed blobs carry the NEW geometry."""
     from cianparser_spark.engine.bloom import blob_n_bits
 
     seeds = [CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
@@ -353,15 +364,15 @@ def test_bloom_spool_bits_change_rebuilds(spark, tmp_run_dir):
     # such waves exist
     cfg = dataclasses.replace(BITMATCH_CFG, universe_base=300,
                               universe_span=1)
-    e1 = CrawlEngine(spark, tmp_run_dir, seeds, cfg,
-                     host_tokens=2, bloom_spool=True, bloom_bits=1 << 17)
+    e1 = CrawlEngine(spark, tmp_run_dir, seeds, cfg, host_tokens=2,
+                     bloom_spool=bloom_spool, bloom_bits=1 << 17)
     e1.run(max_waves=1)
     assert e1.store.last_wave() == 1
     blobs = e1.store.read("bloom").collect()
     assert blobs and blob_n_bits(bytes(blobs[0]["blob"])) == 1 << 17
     # resume at DOUBLE the filter size
-    e2 = CrawlEngine(spark, tmp_run_dir, seeds, cfg,
-                     host_tokens=2, bloom_spool=True, bloom_bits=1 << 18)
+    e2 = CrawlEngine(spark, tmp_run_dir, seeds, cfg, host_tokens=2,
+                     bloom_spool=bloom_spool, bloom_bits=1 << 18)
     resumed = compat.to_reference_rows(e2.run(), seeds)
     assert resumed == ReferenceSimulator(cfg).run(seeds).rows
     blobs2 = e2.store.read("bloom").collect()
@@ -541,22 +552,28 @@ def test_recrawl_final_wave_lag(spark, tmp_run_dir):
 def test_non_bloom_blob_rejected_in_both_modes(spark, tmp_run_dir):
     """A bloom-table blob that is not a Bloom filter (here a blob in
     the retired cuckoo format: int64 header -2, then a slot table)
-    must fail loudly when loaded — on the driver and by the spool
-    loader — instead of being probed as Bloom bits."""
+    must fail loudly when loaded — by a resumed driver-mode crawl at
+    its first consult of the table, and by the loader both modes'
+    probes use — instead of being probed as Bloom bits."""
     import numpy as np
 
     from cianparser_spark.engine import model
     from cianparser_spark.engine.bloom import load_spool_filters
 
-    seed = CrawlSeed(1, "Москва", "flat", "sale")
+    seed = CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
+                     additional_settings={"end_page": 4})
     blob = (np.array([-2, 16], np.int64).tobytes()
             + np.zeros((8, 4), np.uint16).tobytes())
     eng = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG,
-                      bloom_spool=False)
+                      host_tokens=2, bloom_spool=False)
+    eng.run(max_waves=1)
     eng.store.commit_wave(
-        1, replaces={"bloom": ([(0, blob)], model.BLOOM_SCHEMA)})
-    with pytest.raises(ValueError, match="not a bloom blob"):
-        eng._load_state()
+        eng.store.last_wave(),
+        replaces={"bloom": ([(0, blob)], model.BLOOM_SCHEMA)})
+    resumed = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG,
+                          host_tokens=2, bloom_spool=False)
+    with pytest.raises(Exception, match="not a bloom blob"):
+        resumed.run()
     with pytest.raises(ValueError, match="not a bloom blob"):
         load_spool_filters(tuple(sorted(eng.store.table_paths("bloom"))))
 
