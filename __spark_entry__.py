@@ -156,8 +156,9 @@ def q_u7_filter_pushdown(spark, sf_dir):
 
 def q_url_canonical(spark, sf_dir):
     """U9 (graft addition): URL canonicalization — the frontier
-    seen-set's key function at 10^10-URL scale (north star:
-    "Bloom-filter URL-seen set keyed by canonicalized URL hash").
+    seen-set's key function at 10^10-URL scale (north star: a
+    URL-seen set "keyed by canonicalized URL hash"; the engine answers
+    membership on it exactly, with no Bloom prefilter).
     Four messy spelling families (scheme/host case, default ports,
     duplicate slashes, unsorted query params, fragments) synthesized
     deterministically from o_orderkey, canonicalized by the NATIVE
@@ -1187,9 +1188,9 @@ def q_text_bpe(spark, sf_dir):
 # is GC'd, which would serve DataFrames bound to a dead session.
 _BPE_CACHE: dict[tuple, tuple] = {}
 
-# the frontier_membership* queries' session-scoped seen-set index:
-# {applicationId: (idx_root, blob_dir)}, cleaned at interpreter exit
-_SEENIDX_CONTRACT_CACHE: dict[str, tuple] = {}
+# the frontier_membership_exact query's session-scoped seen-set index:
+# {applicationId: runs_dir}, cleaned at interpreter exit
+_SEENIDX_CONTRACT_CACHE: dict[str, str] = {}
 
 
 def _trained_bpe(spark, sf_dir):
@@ -1370,7 +1371,7 @@ def q_crawl_resume(spark, sf_dir):
     """North-rule resumability, driver-visible: the fault+detail crawl
     is KILLED after its second committed wave (``max_waves=2`` — list
     fetches + the first detail-group walks are committed; paused walks,
-    keystate ledger, retry-burn counters, Bloom sidecar and 429 debt
+    keystate ledger, retry-burn counters, seen set and 429 debt
     all live only in the snapshot), then a FRESH CrawlEngine on the
     same run_dir resumes from the checkpoint (``_load_state`` rebuilds
     every driver cache from committed tables) and runs to completion.
@@ -1614,16 +1615,14 @@ def q_lineage_waves(spark, sf_dir):
 
 
 def _frontier_contract_index(spark, seen):
-    """The frontier contract queries' seen-set sidecar, built once per
-    session (the truth tables are fixed) and removed at exit: per-bucket
-    sorted string runs and a Bloom blob table (bench_frontier.
-    write_blob_table, 4096 bits/bucket).  A per-call mkdtemp would leak
-    a directory per evaluation AND pin its memmaps in seenidx's process
-    cache.  Returns ``(runs_dir, blob_dir)``."""
+    """The spool-mode frontier contract query's sorted string runs,
+    built once per session (the truth tables are fixed) and removed at
+    exit.  A per-call mkdtemp would leak a directory per evaluation AND
+    pin its memmaps in seenidx's process cache.  Returns the runs
+    directory."""
     import os
     import tempfile
 
-    from cianparser_spark import bench_frontier
     from cianparser_spark.engine import seenidx
 
     app_id = spark.sparkContext.applicationId
@@ -1635,47 +1634,37 @@ def _frontier_contract_index(spark, seen):
         root = tempfile.mkdtemp(prefix="seenidx_contract_")
         runs = os.path.join(root, "runs")
         seenidx.write_str_runs(seen, runs, 8, "w0")
-        blob_dir = os.path.join(root, "bloom")
-        bench_frontier.write_blob_table(seen, blob_dir, 8, 4096)
         _SEENIDX_CONTRACT_CACHE.clear()
-        _SEENIDX_CONTRACT_CACHE[app_id] = cached = (runs, blob_dir)
+        _SEENIDX_CONTRACT_CACHE[app_id] = cached = runs
         atexit.register(shutil.rmtree, root, ignore_errors=True)
     return cached
 
 
 def q_frontier_membership(spark, sf_dir):
     """The URL-seen membership path driver-visible, in the crawler's
-    driver sidecar mode: candidates vs seen through the engine's
-    per-bucket Bloom PREFILTER (bloom.build_partials into a blob table
-    + maybe_seen_udf over the key cast to string — the build/probe
-    functions and bucket routing CrawlEngine calls) + exact anti-join
-    for the maybe-seen sliver, against a plain DuckDB ANTI JOIN on the
-    shared input tables.  Blooms are sized deliberately tight (4096
-    bits/bucket for ~3,500 keys) so the false-positive path does real
-    work; a single false NEGATIVE (dropped fresh URL / silently re-seen
-    key) hash-mismatches.  Reference semantics being scaled: the
-    in-memory result_set of base_list.py:24 + flat/list.py:57-68."""
+    default mode: candidates vs seen through the exact anti-join
+    CrawlEngine runs, against a plain DuckDB ANTI JOIN on the shared
+    input tables.  A single false NEGATIVE (dropped fresh URL) or
+    false positive (silently re-seen key) hash-mismatches.  Reference
+    semantics being scaled: the in-memory result_set of
+    base_list.py:24 + flat/list.py:57-68."""
     from cianparser_spark import bench_frontier, truth
 
     cand_path, seen_path = truth.ensure_frontier_truth()
     cand = spark.read.parquet(cand_path)
     seen = spark.read.parquet(seen_path)
-    _, blob_dir = _frontier_contract_index(spark, seen)
     return (
-        bench_frontier.membership_split(cand, seen, (blob_dir,), n_buckets=8)
+        bench_frontier.membership_split(cand, seen)
         .select("id", "url", "key")
         .orderBy("id")
     )
 
 
 def q_frontier_membership_exact(spark, sf_dir):
-    """The membership wave in the crawler's SPOOL sidecar mode: the
-    seen keys (cast to string) become per-bucket sorted string runs
-    (seenidx.write_str_runs, built executor-side) and a committed
-    Bloom blob table (bloom.build_partials); candidates take the
-    deliberately tight Bloom prefilter (4096 bits/bucket, real
-    false-positive traffic, bloom.maybe_seen_udf) and the maybe-seen
-    sliver the memmap searchsorted probe (seenidx.seen_str_udf) — NO
+    """The membership wave in the crawler's SPOOL mode: the seen keys
+    (cast to string) become per-bucket sorted string runs
+    (seenidx.write_str_runs, built executor-side) and every candidate
+    takes the memmap searchsorted probe (seenidx.seen_str_udf) — NO
     anti-join anywhere in the plan.  Oracle: plain DuckDB ANTI JOIN
     on the same shared truth tables; one false negative (dropped fresh
     URL) or false positive (re-seen key) mismatches."""
@@ -1683,10 +1672,9 @@ def q_frontier_membership_exact(spark, sf_dir):
 
     cand_path, seen_path = truth.ensure_frontier_truth()
     cand = spark.read.parquet(cand_path)
-    runs, blob_dir = _frontier_contract_index(
-        spark, spark.read.parquet(seen_path))
+    runs = _frontier_contract_index(spark, spark.read.parquet(seen_path))
     return (
-        bench_frontier.membership_split_spool(cand, (blob_dir,), (runs,), 8)
+        bench_frontier.membership_split_spool(cand, (runs,), 8)
         .select("id", "url", "key")
         .orderBy("id")
     )
@@ -2270,10 +2258,8 @@ def q_store_merge(spark, sf_dir):
 def q_crawl_recrawl(spark, sf_dir):
     """Invalidation + re-crawl driver-visible (the J4 delete path): a
     completed flagship run has its LAST list page invalidated — its
-    offers leave the table, their keys leave the exact seen set, the
-    Bloom sidecar is rebuilt (deletes make it stale; a stale positive
-    routes to the exact join, crawler.py invalidate_and_recrawl) — and
-    the page re-fetched.  The deterministic web is unchanged, so the
+    offers leave the table, their keys leave the exact seen set
+    (crawler.py invalidate_and_recrawl) — and the page re-fetched.  The deterministic web is unchanged, so the
     final table must equal the ORIGINAL simulator truth: rows lost by
     the delete, keys left dangling in the seen set, or duplicates
     introduced by the re-fetch all become driver-visible mismatches.
@@ -3888,7 +3874,7 @@ def oracle_sql() -> dict[str, str]:
             ) GROUP BY wave ORDER BY wave
         """,
         # Frontier seen-set membership: plain ANTI JOIN twin of the
-        # Bloom-prefilter + exact-join split (bench_frontier)
+        # default-mode exact anti-join (bench_frontier)
         "frontier_membership": f"""
             SELECT c.id, c.url, c.key
             FROM read_parquet('{frontier_cand_path}') c
@@ -3898,7 +3884,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         # same oracle, but the Spark side is the r5 EXACT tier (sorted
         # -run memmap probe, no join in the plan) instead of the
-        # prefilter+anti-join shape
+        # anti-join
         "frontier_membership_exact": f"""
             SELECT c.id, c.url, c.key
             FROM read_parquet('{frontier_cand_path}') c

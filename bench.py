@@ -135,10 +135,9 @@ def run_queries() -> tuple[dict, float, dict, dict, dict]:
         print(f"  {name}: {dt:.2f}s ({n} rows)", file=sys.stderr)
     # frontier seen-set microbench: the north-rule metric's per-URL
     # machinery at 10^7 URLs / 5×10^6 seen keys — canonicalize+hash
-    # codegen ceiling, distributed Bloom build, and the prefilter+
-    # anti-join membership wave (bench_frontier docstring has the
-    # 10^10 extrapolation).  Runs inside the suite session, after the
-    # timed queries; set SPARK_GRAFT_FRONTIER_URLS=0 to skip.
+    # codegen ceiling and the exact membership wave in both modes
+    # (anti-join; sorted string runs).  Runs inside the suite session,
+    # after the timed queries; set SPARK_GRAFT_FRONTIER_URLS=0 to skip.
     frontier: dict = {}
     if FRONTIER_URLS:
         from cianparser_spark.bench_frontier import run_bench as _fr

@@ -1,3 +1,3 @@
 """Spark execution layer: wave-scheduled crawl frontier over
-snapshot-committed tables, politeness budgets, Bloom-accelerated
-first-wins dedup, and the reference-compatible facade."""
+snapshot-committed tables, politeness budgets, first-wins dedup against
+an exact seen set, and the reference-compatible facade."""

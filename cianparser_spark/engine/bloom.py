@@ -1,26 +1,14 @@
-"""Per-bucket Bloom filters: the crawl engine's seen-set sidecar.
+"""Per-bucket Bloom filters and the loader of a committed blob table.
 
-The seen set is keyed ``seed_id|deal_url_id`` and routed to
-``n_buckets`` buckets by ``seenidx.bucket_str``; each bucket holds
-one fixed-size ``BloomFilter``, so partial filters built from
-different slices of the seen table OR-merge (``or_merge_blob_group``).
-The filter is a prefilter in front of the exact tier, never the
-answer itself:
-
-* "definitely unseen" -> the candidate skips the exact tier;
-* "maybe seen"        -> the exact tier (anti-join against ``seen`` or
-  the sorted runs of engine/seenidx.py) decides.
-
-A Bloom filter cannot delete.  It does not need to: after
-``CrawlEngine.invalidate_and_recrawl`` drops keys from ``seen``, their
-stale positives only route those keys to the exact tier, which answers
-"unseen".  The store's committed ``bloom`` table is the filter's only
-copy: every probe loads it per executor process (``load_spool_filters``
-via ``maybe_seen_udf``), and every merge starts from it — on the driver
-through the same loader, or executor-side with ``or_merge_blob_group``.
-Both sidecar modes build with ``build_partials``; the frontier bench
-(bench_frontier.py) and the ``frontier_membership*`` contract queries
-call the same functions.
+The crawl engine no longer uses a Bloom filter: seen-set membership is
+answered by the exact tier alone (``CrawlEngine._exact_unseen``: an
+anti-join against ``seen``, or the sorted runs of engine/seenidx.py).
+This module remains because the crawl benchmark's per-layer legs
+(perfbench/layers.py) import ``load_spool_filters`` to probe a
+committed ``bloom`` table when a store has one.  Stores written before
+the prefilter was removed still list their ``bloom`` directories in
+the manifest; ``WaveStore.commit_wave`` carries them forward and the
+engine never reads them.
 
 Blob format: a 16-byte header (int64 ``n_bits``, int64 ``n_hashes``)
 followed by ``ceil(n_bits / 8)`` bytes of bits; ``from_bytes`` rejects
@@ -34,8 +22,6 @@ import os
 
 import numpy as np
 import pandas as pd
-
-from cianparser_spark.engine.seenidx import bucket_col, bucket_str
 
 _HASH_KEY_1 = "0123456789abcdef"
 _HASH_KEY_2 = "fedcba9876543210"
@@ -60,10 +46,8 @@ def _set_bits(bits: np.ndarray, n_bits: int, h1: np.ndarray, h2: np.ndarray,
     filters are fixed-size by construction; above the cap (huge filter,
     tiny batch) fall back to the scatter so memory stays proportional
     to the batch.  The plane size is ALSO absolutely capped at 512 MB
-    (n_bits = 2^29): for huge geometries (e.g. the auto-spool shape at
-    bloom_bits=1<<33) a large applyInPandas group could otherwise
-    allocate a multi-GiB plane per task executor-side however the
-    batch-size heuristic lands."""
+    (n_bits = 2^29), so a huge geometry never allocates a multi-GiB
+    plane however the batch-size heuristic lands."""
     if h1.size and n_bits <= (1 << 29) and (
             n_bits <= (1 << 27) or h1.size * 64 >= n_bits):
         plane = np.zeros(bits.size * 8, np.bool_)
@@ -122,7 +106,7 @@ class BloomFilter:
     @classmethod
     def from_bytes(cls, blob: bytes) -> "BloomFilter":
         """Zero-copy READ-ONLY view of a serialized filter: ``contains``
-        only reads ``bits``, and a merge ORs out of place.
+        only reads ``bits``, and ``load_spool_filters`` ORs out of place.
 
         Raises ``ValueError`` unless the blob is a 16-byte header with
         ``n_bits > 0`` followed by exactly ``ceil(n_bits / 8)`` bytes:
@@ -139,78 +123,10 @@ class BloomFilter:
         return cls(n_bits, n_hashes, np.frombuffer(mv[16:], np.uint8))
 
 
-def or_merge_blob_group(pdf) -> "pd.DataFrame":
-    """applyInPandas kernel: OR-merge one bucket's blob rows into one
-    blob.  Lives HERE, beside ``to_bytes``/``from_bytes``, because it
-    hard-codes the 16-byte (n_bits, n_hashes) header of the blob
-    format — the crawler's spool merge and the frontier scale bench
-    both use this single definition.
-
-    Refuses mismatched filter geometries loudly: blobs of different
-    ``n_bits`` cannot OR (a silent truncating merge would turn Bloom
-    false-positives into FALSE NEGATIVES, i.e. dropped dedup keys).
-    The legitimate path to a new ``bloom_bits`` on an existing store
-    is a sidecar REBUILD from the exact seen table
-    (crawler._update_bloom handles that automatically)."""
-    heads = {bytes(b[:16]) for b in pdf["blob"]}
-    if len(heads) != 1:
-        # compare the (n_bits, n_hashes) HEADERS, not derived body
-        # sizes — distinct n_bits can round to the same byte count,
-        # and an n_hashes mismatch has no size signature at all
-        geoms = sorted(tuple(np.frombuffer(h, np.int64)) for h in heads)
-        raise ValueError(
-            f"bloom blob geometry mismatch in bucket "
-            f"{int(pdf['bucket'].iloc[0])}: (n_bits, n_hashes) {geoms} — "
-            "filter geometry changed across waves; rebuild the sidecar "
-            "from the seen table instead of merging")
-    bodies = [np.frombuffer(memoryview(b)[16:], np.uint8)
-              for b in pdf["blob"]]
-    acc = bodies[0].copy()
-    for b in bodies[1:]:
-        acc |= b
-    return pd.DataFrame({"bucket": [int(pdf["bucket"].iloc[0])],
-                         "blob": [heads.pop() + acc.tobytes()]})
-
-
-def build_partials(keys_df, n_buckets: int, n_bits: int):
-    """One fixed-size partial filter per bucket from ``keys_df``'s
-    ``key`` column (cast to string), built EXECUTOR-side (one ``applyInPandas`` stage over a
-    narrow 1-column frame) -> DataFrame ``(bucket long, blob binary)``,
-    one row per non-empty bucket.  The driver ORs the collected rows
-    into the committed filters (driver mode) or the blob table
-    OR-merges them with ``or_merge_blob_group`` (spool mode); either
-    way it never sees a key."""
-    from pyspark.sql import functions as F
-
-    nbits = int(n_bits)
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        bf = BloomFilter(nbits)
-        keys = pdf["_k"].to_numpy(dtype=object)
-        if len(keys):
-            bf.add(keys)
-        return pd.DataFrame({"bucket": [int(pdf["bucket"].iloc[0])],
-                             "blob": [bf.to_bytes()]})
-
-    return (
-        keys_df.select(F.col("key").cast("string").alias("_k"))
-        .withColumn("bucket", bucket_col(F.col("_k"), n_buckets))
-        .groupBy("bucket")
-        .applyInPandas(build, "bucket long, blob binary")
-    )
-
-
-def blob_n_bits(blob: bytes) -> int:
-    """The ``n_bits`` a serialized blob was built with (header peek)."""
-    return int(np.frombuffer(memoryview(blob)[:16], np.int64)[0])
-
-
 # ------------------------------------------- the committed blob table
 
-# One blob GENERATION per process: the probe UDF ships only the blob
-# table's directory list in its closure; the first task of a
-# generation on each process loads the blobs from shared storage, every
-# later task (and every Arrow batch) reuses them.  Clearing on
+# One blob GENERATION per process: the first call for a directory
+# tuple loads the blobs, every later call reuses them.  Clearing on
 # generation change bounds per-process memory to one filter set.
 _SPOOL_CACHE: dict[tuple, dict[int, "BloomFilter"]] = {}
 
@@ -225,13 +141,11 @@ def _parquet_files(dirs):
 def load_spool_filters(dirs: tuple[str, ...]) -> dict[int, "BloomFilter"]:
     """Load (and process-cache) the per-bucket Bloom filters of the
     committed blob-table parquet directories — read-only views, shared
-    by every caller in the process: never write into them.  The
-    closure cost of a probe UDF is the path tuple, never the blobs; at
-    10^10-URL scale each executor reads the blob files once per
-    generation from shared storage (here: the local store root).
+    by every caller in the process: never write into them.
 
-    Duplicate buckets across files OR-merge (all blobs of a bucket are
-    fixed-size by construction)."""
+    Duplicate buckets across files OR-merge; blobs of different
+    geometry refuse to (an OR across geometries would turn false
+    positives into false negatives)."""
     hit = _SPOOL_CACHE.get(dirs)
     if hit is None:
         import pyarrow.parquet as pq
@@ -246,8 +160,6 @@ def load_spool_filters(dirs: tuple[str, ...]) -> dict[int, "BloomFilter"]:
                 if have is None:
                     filters[int(b)] = f
                 elif (have.n_bits, have.n_hashes) != (f.n_bits, f.n_hashes):
-                    # or_merge_blob_group's guard: mismatched blobs
-                    # must never OR (false negatives = dropped keys)
                     raise ValueError(
                         f"bloom blob geometry mismatch in bucket "
                         f"{int(b)}: {(have.n_bits, have.n_hashes)}"
@@ -259,44 +171,3 @@ def load_spool_filters(dirs: tuple[str, ...]) -> dict[int, "BloomFilter"]:
         _SPOOL_CACHE[dirs] = filters
         hit = filters
     return hit
-
-
-def stored_n_bits(dirs) -> int | None:
-    """``n_bits`` of the first blob in the blob-table directories
-    (header peek: one pyarrow batch of ONE row, never the whole blob
-    column), or None when they hold no blob."""
-    import pyarrow.parquet as pq
-
-    for path in _parquet_files(dirs):
-        for batch in pq.ParquetFile(path).iter_batches(batch_size=1,
-                                                        columns=["blob"]):
-            if batch.num_rows:
-                return blob_n_bits(batch.column(0)[0].as_py())
-    return None
-
-
-def maybe_seen_udf(n_buckets: int, dirs):
-    """The Bloom prefilter probe as a pandas UDF over a string key
-    column — True = maybe seen, False = definitely unseen.  The filters
-    come from ``dirs``, the committed blob-table directories: each
-    executor process loads them once per generation
-    (``load_spool_filters``), so no task closure carries filter bytes.
-    A bucket with no filter answers "definitely unseen"."""
-    from pyspark.sql import functions as F
-
-    nb = int(n_buckets)
-    dirs = tuple(dirs)
-
-    @F.pandas_udf("boolean")
-    def maybe_seen(keys: pd.Series) -> pd.Series:
-        local = load_spool_filters(dirs)
-        arr = keys.to_numpy(dtype=object)
-        bucket = bucket_str(arr, nb)
-        out = np.zeros(len(arr), dtype=bool)
-        for b, f in local.items():
-            mask = bucket == b
-            if mask.any():
-                out[mask] = f.contains(arr[mask])
-        return pd.Series(out)
-
-    return maybe_seen

@@ -7,7 +7,8 @@ micro-batch waves over snapshot-committed tables:
   frontier scan → politeness budget selection (salted two-phase
   groupBy-host — kills the single-domain skew) → fused fetch+parse
   (mapInPandas, Arrow) → per-seed ordered finalization (watermarks)
-  → first-wins dedup (window + Bloom-prefiltered anti-join vs seen)
+  → first-wins dedup (in-batch keep-first, then the exact seen-set
+  tier: sorted-run probe or anti-join)
   → detail enqueue / offer emission → metrics + lineage → one atomic
   commit per wave.
 
@@ -34,8 +35,8 @@ watermarks, metrics, lineage, which tables are even non-empty) derives
 from them.  Collected rows are O(pages-per-wave), bounded by the
 politeness budget, never O(cards).  Empty tables are never written;
 the stop map and host debt live in driver memory and are rebuilt from
-the committed snapshot on resume.  The Bloom sidecar lives only in the
-committed ``bloom`` table: every probe and every merge reads it there.
+the committed snapshot on resume.  Seen-set membership has one
+definition, ``CrawlEngine._exact_unseen``.
 """
 
 from __future__ import annotations
@@ -50,23 +51,12 @@ from pyspark.sql import types as T
 
 from cianparser_spark.corpus import webgen
 from cianparser_spark.engine import columnar, model, seenidx
-from cianparser_spark.engine.bloom import (
-    BloomFilter,
-    build_partials,
-    load_spool_filters,
-    maybe_seen_udf,
-    or_merge_blob_group,
-    stored_n_bits,
-)
 from cianparser_spark.engine.stage import make_fetch_parse
 from cianparser_spark.engine.store import WaveStore
 from cianparser_spark.semantics import robots
 from cianparser_spark.semantics.simulator import CrawlSeed
 
 MAX_ATTEMPTS = 3  # (reference: cianparser/cianparser.py:73)
-_BLOOM_BITS = 1 << 20  # per-bucket fixed size so blobs OR-merge
-# auto bloom_spool: filter state above this stays off the driver
-_BLOOM_DRIVER_MAX_BYTES = 64 << 20
 _429_DEBT = 5  # 10 s penalty / 2 s-per-list-token
 _DETAIL_COST = 2  # tokens per detail fetch (4 s / 2 s-per-list-token)
 _SALT_BUCKETS = 4  # per-host salts of the two-phase selection
@@ -81,10 +71,18 @@ _SALT_BUCKETS = 4  # per-host salts of the two-phase selection
 # wall ~30%.  Big waves (any real crawl at scale) keep codegen: the
 # battery's compiled form wins from ~10^4 rows up.
 _CODEGEN_ROW_FLOOR = 16_384
+# In-batch keep-first (_dedup): waves up to this many card rows pick
+# winners with a broadcast semi-join, bigger ones with a min_by
+# aggregate.
+_DEDUP_BROADCAST_ROWS = 100_000
+# The wave's physical dedup strategy (_run_wave): "auto" picks
+# map-only when the wave has enough seeds to spread, "map_only" and
+# "shuffle" force one.
+_DEDUP_STRATEGY = "auto"
 
 
 def _seen_key(key_col: str = "deal_url_id"):
-    """The string seen-key ``seed_id|<key_col>`` both sidecars store."""
+    """The string seen-key ``seed_id|<key_col>`` the sorted runs store."""
     return F.concat_ws("|", F.col("seed_id"), F.col(key_col))
 
 
@@ -97,38 +95,25 @@ class CrawlEngine:
         web_cfg: webgen.WebConfig = webgen.DEFAULT_CONFIG,
         host_tokens: int = 64,
         bloom_buckets: int = 16,
-        dedup_broadcast_rows: int = 100_000,
         respect_robots: bool = True,
         verbose: bool = False,
-        dedup_strategy: str = "auto",
-        bloom_bits: int = _BLOOM_BITS,
-        bloom_spool: bool | None = None,
+        bloom_spool: bool = False,
         ledger_spill_rows: int = 50_000,
     ):
-        if dedup_strategy not in ("auto", "map_only", "shuffle"):
-            raise ValueError(f"unknown dedup_strategy: {dedup_strategy!r}")
-        self.dedup_strategy = dedup_strategy
         self._cg_saved: tuple | None = None
         self.spark = spark
         self.seeds = seeds
         self.web_cfg = web_cfg
         self.host_tokens = host_tokens
+        # Seen-set membership (_exact_unseen) is exact;
+        # ``bloom_spool`` (default False) picks its tier.  Default
+        # mode anti-joins the committed ``seen`` table.  SPOOL
+        # mode (the 10^10-URL shape) also keeps per-bucket sorted
+        # string runs (``seenx``, engine/seenidx.py) and probes them
+        # map-only, falling back to the anti-join while they are
+        # incomplete.  ``bloom_buckets`` is the runs' routing bucket
+        # count (seenidx.bucket_str).
         self.bloom_buckets = bloom_buckets
-        self.bloom_bits = int(bloom_bits)
-        # Bloom sidecar mode.  In both modes the store's committed
-        # bloom table is the filter's only copy, probed by a
-        # per-executor loader that reads the blob files directly
-        # (bloom.load_spool_filters; task closures carry a path tuple).
-        # The mode picks where the OR-merge runs and which exact tier
-        # answers "maybe seen".  Default mode merges on the driver (a
-        # local table write, zero jobs on small waves) and anti-joins
-        # seen.  SPOOL mode (the 10^10-URL shape, chosen when the
-        # filter outgrows what the driver should hold) merges
-        # executor-side in one applyInPandas stage — the driver never
-        # materializes a blob byte — and probes sorted string runs.
-        if bloom_spool is None:
-            bloom_spool = (self.bloom_buckets * self.bloom_bits) // 8 \
-                > _BLOOM_DRIVER_MAX_BYTES
         self.bloom_spool = bool(bloom_spool)
         # exact-tier sidecar: full rebuild (replace) past this many
         # committed run dirs — bounds the probe's per-run cost on long
@@ -138,7 +123,6 @@ class CrawlEngine:
         # store table instead of growing the driver dicts (see
         # _detail_ledger) — the enforced bound on driver-held state
         self.ledger_spill_rows = int(ledger_spill_rows)
-        self.dedup_broadcast_rows = dedup_broadcast_rows
         self.verbose = verbose
         self._t0 = 0.0
         self.runtimes = {s.seed_id: model.seed_runtime(s) for s in seeds}
@@ -158,11 +142,6 @@ class CrawlEngine:
         # driver-cached state, rebuilt from the snapshot on resume
         self._stopped: dict[int, int] | None = None
         self._debt: dict[str, int] = {}
-        # Bloom sidecar flags (the blobs themselves stay on disk):
-        # committed table non-empty, and committed blobs built at
-        # another bloom_bits (None = not yet read)
-        self._bloom_nonempty: bool | None = None
-        self._bloom_bits_changed: bool | None = None
         # exact-tier sidecar (sorted string runs, spool mode only):
         # None = completeness not yet checked against the manifest
         self._seenx_ok: bool | None = None
@@ -199,11 +178,6 @@ class CrawlEngine:
         self._parked_spill_rows: list[tuple] | None = None  # transition wave
         self._ks_nonempty: bool = False
         self._seeds_df: DataFrame | None = None
-        # running seen-table row count (upper bound): small-seen waves
-        # skip the Bloom prefilter's pandas_udf launch in _dedup — the
-        # exact anti-join alone is cheaper until seen outgrows it.
-        # None = unknown (resumed store) → always take the Bloom path.
-        self._seen_rows: int | None = None
 
     def _seed_dim(self):
         """Literal per-seed constant columns for bounded seed lists
@@ -311,8 +285,6 @@ class CrawlEngine:
                 int(r["seed_id"]): int(r["captcha_page"])
                 for r in self.store.read("stopped").collect()
             }
-        if self._bloom_nonempty is None:
-            self._bloom_nonempty = bool(self.store.table_paths("bloom"))
         if self._seen_nonempty is None:
             self._seen_nonempty = self.store.read("seen").limit(1).count() > 0
         if self._paused is None:
@@ -990,7 +962,6 @@ class CrawlEngine:
 
     def run(self, max_waves: int = 10_000) -> DataFrame:
         if self.store.last_wave() < 0:
-            self._seen_rows = 0  # fresh store: exact count is trackable
             self.store.commit_wave(0, appends={"frontier": self._initial_frontier()})
         self._load_state()
         wave = self.store.last_wave() + 1
@@ -1016,14 +987,11 @@ class CrawlEngine:
         re-crawl them: their offers leave the table, their deal-url-ids
         leave the seen set, and fresh frontier rows re-fetch the pages.
 
-        Deletes hit the EXACT seen table only.  The Bloom sidecar needs
-        no delete support: a now-stale positive merely routes the key
-        to the exact anti-join, which no longer contains it — the URL
-        is correctly treated as unseen.  The sidecar is nevertheless
-        rebuilt from the post-invalidation seen table (below), so this
-        method costs O(seen), not O(invalidated keys).  Offers first
-        seen on OTHER pages keep their seen keys, so a re-crawl never
-        duplicates them.
+        Deletes rewrite the seen table.  In spool mode the sorted runs,
+        which cannot delete, are rebuilt from the post-invalidation
+        seen table in the same commit, so this method costs O(seen),
+        not O(invalidated keys).  Offers first seen on OTHER pages keep
+        their seen keys, so a re-crawl never duplicates them.
 
         Known limitation (documented, accepted): only the invalidated
         pages are re-fetched.  An offer that FIRST won on an
@@ -1066,17 +1034,10 @@ class CrawlEngine:
             rows.append((rt["template"].format(p), "list",
                          rt["template"].split("/")[2], None,
                          sid, p, -1, 0, marker + 1))
-        # the Bloom sidecar may lag the seen table (the final wave of a
-        # completed crawl skips its rebuild) and deletes make it stale
-        # anyway — rebuild it from the post-invalidation seen set so the
-        # re-crawl's prefilter routes every still-seen key to the exact
-        # join (bloom ⊇ seen restored)
         adopt_replace = None
-        bloom_df = self._update_bloom(new_seen, fresh=True)
         if self.bloom_spool:
-            # the exact-tier sidecar cannot delete either (sorted runs
-            # are immutable) — rebuild it from the post-invalidation
-            # seen set in the same atomic commit, like the Bloom
+            # sorted runs are immutable: rebuild them from the
+            # post-invalidation seen set in the same atomic commit
             sx_spool = os.path.join(self.store.root, "scratch",
                                     f"seenx-inval-{marker:05d}")
             seenidx.write_str_runs(
@@ -1093,7 +1054,6 @@ class CrawlEngine:
             replaces={
                 "offers": offers_cur.filter(~cond),
                 "seen": new_seen,
-                "bloom": bloom_df,
             },
             adopt_replace=adopt_replace,
         )
@@ -1203,8 +1163,8 @@ class CrawlEngine:
         # page order" == global min_by(page_number, card_index).
         is_card = F.col("row_type") == "card"
         n_seeds = len(self.runtimes)
-        map_only = self.dedup_strategy == "map_only" or (
-            self.dedup_strategy == "auto"
+        map_only = _DEDUP_STRATEGY == "map_only" or (
+            _DEDUP_STRATEGY == "auto"
             and (n_seeds >= dp or n_selected <= 256 * dp)
         )
         # card count + mean price observed DURING the spool write (no
@@ -1446,8 +1406,7 @@ class CrawlEngine:
                 .withColumn("wave", F.lit(wave).cast("long"))
             )
             cold = (not self._staged_nonempty and not min_pending
-                    and not self._stopped and not self._bloom_nonempty
-                    and not self._seen_nonempty)
+                    and not self._stopped and not self._seen_nonempty)
             if cold:
                 # cold-start wave (no leftovers, no seen set, no stops):
                 # the in-stage fused dedup already produced the final
@@ -1633,8 +1592,8 @@ class CrawlEngine:
 
         def _finish_frontier() -> int:
             """Join the frontier spool write (idempotent); the paused
-            deadlock invariant and every want_bloom decision depend on
-            its count."""
+            deadlock invariant and the sorted-run update depend on its
+            count."""
             nonlocal fr_thread, n_frontier_next
             if fr_thread is not None:
                 fr_thread.join()
@@ -1729,52 +1688,28 @@ class CrawlEngine:
             )
         n_seen = 0
         if seen_df is not None:
-            # same write-once + adopt pattern as the frontier; when the
-            # Bloom sidecar will be consulted again (non-final wave)
-            # and the wave is politeness-bounded, the keys ride the
-            # SAME write as a collect_list Observation and the sidecar
-            # merge becomes pure driver work — the separate
-            # bloom-collect job disappears from the wave
-            n_keys = n_accepted + n_detail_ok
-            small = (not self.bloom_spool) and n_keys <= 20_000
+            # same write-once + adopt pattern as the frontier
             seen_spool = os.path.join(self.store.root, "scratch", f"seen-w{wave:05d}")
             obs_seen = Observation(f"seen-w{wave}")
-            aggs = [F.count(F.lit(1)).alias("n")]
-            if small:
-                # collected unconditionally (the frontier count that
-                # decides want_bloom is still in flight on its thread);
-                # a final wave just ignores the politeness-bounded list
-                aggs.append(F.collect_list(_seen_key()).alias("keys"))
-            seen_df.observe(obs_seen, *aggs).write.mode("overwrite").parquet(seen_spool)
-            row = obs_seen.get
-            want_bloom = bool(_finish_frontier())
-            n_seen = int(row["n"])
+            seen_df.observe(obs_seen, F.count(F.lit(1)).alias("n")) \
+                .write.mode("overwrite").parquet(seen_spool)
+            n_seen = int(obs_seen.get["n"])
             if n_seen:
                 adopt["seen"] = seen_spool
-            if want_bloom and n_seen:
-                # the Bloom sidecar only exists to pre-filter FUTURE
-                # waves' dedup; on the final wave (empty frontier)
-                # nothing will ever read it — don't build the index
-                # nobody consults
-                if small and not self._bloom_retuned():
-                    replaces["bloom"] = self._merge_bloom_keys(
-                        list(row["keys"]))
+            if self.bloom_spool and n_seen:
+                if _finish_frontier():
+                    # the sorted runs only serve FUTURE waves' dedup;
+                    # on the final wave (empty frontier) nothing will
+                    # read them — don't build the index nobody consults
+                    self._seenx_update(
+                        self.spark.read.schema(model.TABLE_SCHEMAS["seen"])
+                        .parquet(seen_spool), wave, adopt, adopt_replace)
+                    self._tick("seenx_update")
                 else:
-                    new_seen = self.spark.read.schema(
-                        model.TABLE_SCHEMAS["seen"]).parquet(seen_spool)
-                    replaces["bloom"] = self._update_bloom(new_seen)
-                    if self.bloom_spool:
-                        self._seenx_update(new_seen, wave, adopt,
-                                           adopt_replace)
-                        self._tick("seenx_update")
-                self._tick("bloom_update")
-            elif self.bloom_spool and n_seen:
-                # final wave: the seen append lands without a sidecar
-                # update (nothing in THIS run reads it) — recheck
-                # completeness before any later consult on this engine
-                self._seenx_ok = None
-            if self._seen_rows is not None:
-                self._seen_rows += n_seen
+                    # final wave: the seen append lands without a
+                    # sidecar update — recheck completeness before any
+                    # later consult on this engine
+                    self._seenx_ok = None
 
         n_frontier_next = _finish_frontier()  # no-op if already joined
         self._commit_parked(wave, replaces)
@@ -1830,9 +1765,8 @@ class CrawlEngine:
     def _dedup(self, finalize: DataFrame, approx_rows: int = 0,
                in_batch: bool = True, detail_ids: list[int] | None = None) -> DataFrame:
         """First-wins dedup in crawl order: keep-first inside the batch,
-        then Bloom-prefiltered anti-join against the seen set (A1/J4 in
-        SURVEY.md §2.6) — maybe-seen rows take the exact join;
-        definitely-unseen rows bypass it.
+        then the exact seen-set tier (``_exact_unseen``: sorted-run
+        probe or anti-join; A1/J4 in SURVEY.md §2.6).
 
         Keep-first never shuffles the wide card rows when it can avoid
         it: winner selection runs on FOUR narrow columns
@@ -1842,7 +1776,7 @@ class CrawlEngine:
         (seed_id, page_number, card_index), which uniquely identifies
         one card.  Broadcast pays a serial driver-side hash-relation
         build, so it only wins for politeness-bounded waves
-        (≲10^5 cards); above ``dedup_broadcast_rows`` a ``min_by`` hash
+        (≲10^5 cards); above ``_DEDUP_BROADCAST_ROWS`` a ``min_by`` hash
         aggregate carrying the whole row through one shuffle — still no
         sort (a window would shuffle the same rows AND sort every
         partition to keep only the minimum).  Both paths are
@@ -1850,7 +1784,7 @@ class CrawlEngine:
         (seed_id, deal_url_id) group.
 
         Null deal_url_id keys as the literal "-1" in every path (group
-        keys, seen table, Bloom keys) — the reference's extractor
+        keys, seen table, sorted runs) — the reference's extractor
         default, so all null-key cards of a seed collapse to the first
         exactly like its seen-set does (helpers.py:34 + flat/list.py:57).
 
@@ -1873,7 +1807,7 @@ class CrawlEngine:
             # aggregate already kept first per key this wave); only the
             # seen-set membership check below applies
             batch_first = finalize
-        elif approx_rows <= self.dedup_broadcast_rows:
+        elif approx_rows <= _DEDUP_BROADCAST_ROWS:
             winners = (
                 finalize.select("seed_id", "_dk", "page_number", "card_index")
                 .groupBy(*keys)
@@ -1898,31 +1832,8 @@ class CrawlEngine:
             batch_first = batch_first.select(*detail_passthrough.columns) \
                 .unionByName(detail_passthrough)
 
-        # small seen table: the exact anti-join alone beats launching
-        # the prefilter's Python workers (~0.3-0.5 s/wave); the Bloom
-        # sidecar still gets MAINTAINED above so big later waves (and
-        # resumes, where the count is unknown) keep the prefilter
-        if self._bloom_nonempty and (
-                self._seen_rows is None or self._seen_rows > 50_000):
-            maybe_seen = maybe_seen_udf(
-                self.bloom_buckets, dirs=sorted(self.store.table_paths("bloom")))
-            keyed = batch_first.withColumn(
-                "_maybe", maybe_seen(_seen_key("_dk")))
-            fresh = keyed.filter(~F.col("_maybe")).drop("_maybe")
-            checked = self._exact_unseen(
-                keyed.filter(F.col("_maybe")).drop("_maybe"), "_dk")
-            return fresh.unionByName(checked).drop("_dk")
         if self._seen_nonempty:
-            # no Bloom sidecar but a non-empty seen table (e.g. a
-            # re-crawl after a completed run whose final wave skipped
-            # the bloom rebuild): plain exact anti-join — correctness
-            # never depends on the sidecar existing
-            return batch_first.join(
-                self.store.read("seen").select(
-                    "seed_id", F.col("deal_url_id").alias("_dk")),
-                ["seed_id", "_dk"],
-                "left_anti",
-            ).drop("_dk")
+            batch_first = self._exact_unseen(batch_first, "_dk")
         return batch_first.drop("_dk")
 
     def _exact_unseen(self, df: DataFrame, key_col: str) -> DataFrame:
@@ -1931,7 +1842,7 @@ class CrawlEngine:
         complete sidecar probes the per-bucket sorted runs
         (engine/seenidx.py) in one map-only pass: no per-wave
         rescan/shuffle of the full seen table, cost ∝ rows ×
-        log(run).  Otherwise (driver mode, or a sidecar
+        log(run).  Otherwise (default mode, or a sidecar
         ``_seenx_usable`` finds incomplete) an anti-join against
         ``seen``."""
         if self.bloom_spool and self._seenx_usable():
@@ -2094,88 +2005,3 @@ class CrawlEngine:
                                    f"heal-w{wave:05d}")
             adopt_replace["seenx"] = sx_spool
             self._seenx_ok = True
-
-    def _bloom_retuned(self) -> bool:
-        """Were the committed blobs built at another ``bloom_bits``
-        (operator retuned the filter on a resumed store)?  One header
-        peek per engine (bloom.stored_n_bits): every merge after it
-        writes the configured geometry."""
-        if self._bloom_bits_changed is None:
-            stored = stored_n_bits(self.store.table_paths("bloom"))
-            self._bloom_bits_changed = stored not in (None, self.bloom_bits)
-        return self._bloom_bits_changed
-
-    def _merge_bloom_keys(self, key_list: list[str]) -> tuple:
-        """Driver-mode merge of already-collected ``seed|deal_url_id``
-        keys — zero Spark jobs.  The per-wave key list is politeness-
-        bounded; callers feed it from an ``Observation`` riding the
-        seen-table write, so maintaining the sidecar costs no extra
-        job at all on wave-bound crawls."""
-        import numpy as np
-
-        keys = np.array(key_list, dtype=object)
-        bucket = seenidx.bucket_str(keys, self.bloom_buckets)
-        partials = {}
-        for b in np.unique(bucket):
-            partials[int(b)] = BloomFilter(self.bloom_bits)
-            partials[int(b)].add(keys[bucket == b])
-        return self._or_committed(partials, bool(self._bloom_nonempty))
-
-    def _or_committed(self, partials: dict[int, BloomFilter],
-                      merge_prev: bool) -> tuple:
-        """Driver-mode OR of per-bucket ``partials`` into the committed
-        filters (``merge_prev``), read through the probe's own loader
-        (bloom.load_spool_filters).  Its filters are shared read-only
-        views, so the merge copies the dict and ORs out of place: the
-        loader's process cache is never written.  Returns ``(rows,
-        schema)`` — the WaveStore local-write path, no Spark job."""
-        merged = dict(load_spool_filters(
-            tuple(sorted(self.store.table_paths("bloom"))))) \
-            if merge_prev else {}
-        for b, f in partials.items():
-            have = merged.get(b)
-            merged[b] = f if have is None else BloomFilter(
-                f.n_bits, f.n_hashes, have.bits | f.bits)
-        self._bloom_nonempty = bool(merged)
-        return ([(b, f.to_bytes()) for b, f in sorted(merged.items())],
-                model.BLOOM_SCHEMA)
-
-    def _update_bloom(self, seen_new: DataFrame, fresh: bool = False):
-        """Merge ``seen_new``'s keys into the committed Bloom sidecar
-        and return the replacement ``bloom`` table.  Per-bucket partial
-        filters are built executor-side (bloom.build_partials).  Default
-        mode collects those O(buckets) rows and ORs them on the driver
-        (``_or_committed``); spool mode OR-merges them with the
-        committed table executor-side (bloom.or_merge_blob_group) and
-        returns the DataFrame WaveStore writes — the driver holds zero
-        blob bytes.  ``fresh=True`` builds from ``seen_new`` alone
-        (re-crawl invalidation).
-
-        Committed blobs built at a DIFFERENT ``bloom_bits`` cannot
-        OR-merge: the sidecar is REBUILT over ``seen ∪ seen_new`` at the
-        configured geometry instead (the same fresh build), which keeps
-        bloom ⊇ seen at the cost of one seen-table pass.
-
-        Small default-mode waves (≤ 20k keys) take ``_merge_bloom_keys``
-        instead: their keys ride the seen write's Observation."""
-        merge_prev = not fresh and bool(self._bloom_nonempty)
-        if merge_prev and self._bloom_retuned():
-            seen_new = self.store.read("seen") \
-                .select("seed_id", "deal_url_id") \
-                .unionByName(seen_new.select("seed_id", "deal_url_id"))
-            merge_prev = False
-        self._bloom_bits_changed = False  # written at bloom_bits below
-        partial = build_partials(seen_new.select(_seen_key().alias("key")),
-                                 self.bloom_buckets, self.bloom_bits)
-        if not self.bloom_spool:
-            return self._or_committed(
-                {int(r["bucket"]): BloomFilter.from_bytes(bytes(r["blob"]))
-                 for r in partial.collect()}, merge_prev)
-        self._bloom_nonempty = True
-        if not merge_prev:
-            return partial
-        return (
-            self.store.read("bloom").unionByName(partial)
-            .groupBy("bucket")
-            .applyInPandas(or_merge_blob_group, "bucket long, blob binary")
-        )

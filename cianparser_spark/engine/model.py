@@ -90,10 +90,6 @@ DEAD_SCHEMA = T.StructType(
 
 STOPPED_SCHEMA = T.StructType(_fields(longs=["seed_id", "captcha_page"]))
 
-BLOOM_SCHEMA = T.StructType(
-    [T.StructField("bucket", T.LongType()), T.StructField("blob", T.BinaryType())]
-)
-
 # Detail-ledger key state (page-coupled detail scheduler, crawler.py):
 # one row per dedup key whose emission is UNRESOLVED — ``inflight``
 # (its winning occurrence is inside a dispatched/paused detail group)
@@ -176,13 +172,12 @@ TABLE_SCHEMAS = {
     "lineage": LINEAGE_SCHEMA,
     "dead": DEAD_SCHEMA,
     "stopped": STOPPED_SCHEMA,
-    "bloom": BLOOM_SCHEMA,
     "keystate": KEYSTATE_SCHEMA,
     "paused": PAUSED_SCHEMA,
     "parkreg": PARKREG_SCHEMA,
 }
-REPLACE_TABLES = frozenset({"staged", "stopped", "bloom", "keystate",
-                            "paused", "parkreg"})
+REPLACE_TABLES = frozenset({"staged", "stopped", "keystate", "paused",
+                            "parkreg"})
 
 
 # ------------------------------------------------------------ seed helpers

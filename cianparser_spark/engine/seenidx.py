@@ -1,12 +1,10 @@
 """Sorted string-key runs — the EXACT tier of the crawler's seen set.
 
-The Bloom sidecar (engine/bloom.py) bounds the *probe* side of the
-membership wave; its maybe-seen sliver still needs an exact answer.
-An anti-join against ``seen`` gives one, but rescans and reshuffles
-the whole seen table every wave — O(seen) work per wave.  In spool
-mode the crawler instead keeps the seen keys as disk-resident sorted
-runs, bucketed by the SAME routing (``bucket_str``) the Bloom blobs
-use:
+Every wave's candidates need an exact "seen?" answer.  An anti-join
+against ``seen`` gives one, but rescans and reshuffles the whole seen
+table every wave — O(seen) work per wave.  In spool mode the crawler
+instead keeps the seen keys as disk-resident sorted runs, bucketed by
+``bucket_str``:
 
     root/bucket=<b>/run-<tag>.skeys
 
@@ -28,7 +26,7 @@ hit/miss is exactly the ``left_anti`` answer for that key column.
 
 Reference parity: the reference's seen set is an in-memory Python
 ``set`` per run (cianparser/base_list.py:24, flat/list.py:57-68) —
-this is that set's second (exact) tier, beside the Bloom first tier.
+these runs are that set, on disk.
 """
 
 from __future__ import annotations
@@ -55,10 +53,9 @@ _STR_HASH_KEY = "0123456789abcdef"
 
 def bucket_str(keys: np.ndarray, n_buckets: int) -> np.ndarray:
     """Bucket routing of string seen-keys — the ONE definition shared
-    by the Bloom blobs and the sorted runs, build and probe side.  A
-    probe routed differently from its build reads a bucket that never
-    saw the key and turns a hit into a false MISS (a duplicate
-    fetch)."""
+    by the sorted runs' build and probe side.  A probe routed
+    differently from its build reads a bucket that never saw the key
+    and turns a hit into a false MISS (a duplicate fetch)."""
     return pd.util.hash_array(keys, hash_key=_STR_HASH_KEY) \
         % np.uint64(n_buckets)
 

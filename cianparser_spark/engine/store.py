@@ -117,23 +117,16 @@ class WaveStore:
         # write at the plan's own parallelism — coalescing here would cap
         # the write of large appends (offers/seen) at a handful of tasks;
         # AQE already right-sizes post-shuffle partition counts
-        w = df.write.mode("overwrite")
-        if name == "bloom":
-            # blob tables are incompressible bit-arrays (compression
-            # wastes CPU) AND must stay readable by the spool probe's
-            # per-executor pyarrow loader — the session's hadoop-framed
-            # lz4 codec is not pyarrow-decodable on large binary pages
-            w = w.option("compression", "uncompressed")
-        w.parquet(os.path.join(self.root, rel))
+        df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
         return rel
 
     def _dispatch_write(self, name: str, df, wave: int) -> str | None:
         """A table value is either a DataFrame (executor-scale data —
         written by Spark at the plan's parallelism) or ``(rows,
         spark_schema)`` with plain Python rows (driver-BUILT tables:
-        metrics, lineage, stopped, bloom blobs — all O(hosts)/
-        O(buckets) rows the driver aggregated anyway).  The latter are
-        written driver-side with pyarrow: a tiny Spark write job costs
+        metrics, lineage, stopped — all O(hosts) rows the driver
+        aggregated anyway).  The latter are written driver-side with
+        pyarrow: a tiny Spark write job costs
         ~300 ms of scheduling for a 5-row table, the local file ~1 ms —
         per wave, per table, that overhead is what caps small-wave
         scaling.  The read path is identical: ``read()`` applies the
@@ -341,8 +334,8 @@ class WaveStore:
 
     def table_paths(self, name: str) -> list[str]:
         """Absolute data directories of the CURRENT snapshot for one
-        table — for readers that bypass Spark (e.g. the Bloom spool
-        probe's per-executor pyarrow loader)."""
+        table — for readers that bypass Spark (e.g. the sorted-run
+        probe's per-executor memmaps)."""
         snap = self._load_snapshot()
         return [os.path.join(self.root, d)
                 for d in snap["tables"].get(name, [])]

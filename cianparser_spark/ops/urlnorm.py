@@ -32,7 +32,7 @@ Two implementations, pinned equal by ``test_canonical_url_expr``:
   regexp + ``array_sort``), whole-stage codegen, zero Python per row —
   the form the frontier pipeline uses at scale;
 * ``canonical_url_hash`` — ``xxhash64`` of the canonical form: the
-  64-bit Bloom-filter / seen-table key.
+  64-bit seen-table key.
 """
 
 from __future__ import annotations
@@ -90,8 +90,8 @@ def canonical_url_expr(col) -> Column:
 
 
 def canonical_url_hash(col) -> Column:
-    """64-bit seen-set key: xxhash64 of the canonical URL (the Bloom
-    bucket/bit source at frontier scale — fixed width, shuffle-cheap)."""
+    """64-bit seen-set key: xxhash64 of the canonical URL (fixed
+    width, shuffle-cheap at frontier scale)."""
     return F.xxhash64(canonical_url_expr(col))
 
 

@@ -1707,15 +1707,13 @@ def ensure_url_grammar_truth() -> str:
 def ensure_frontier_truth() -> tuple[str, str]:
     """Frontier-membership oracle INPUTS: a candidates table
     (id, url, key) and a seen-key table (key), shared verbatim by both
-    worlds.  The Spark side runs the crawler's seen-set path on the key
-    cast to string (bench_frontier.membership_split /
-    membership_split_spool: the engine's per-bucket Bloom prefilter,
-    loaded from a committed blob table, then an exact anti-join or
-    sorted string-run probe only for the maybe-seen sliver); the DuckDB
-    oracle is a plain ANTI JOIN over the same two tables — so
-    any Bloom false NEGATIVE (the one failure mode a Bloom must never
-    have) or a build/probe bucket-hash mismatch becomes a driver-visible
-    row/hash mismatch.
+    worlds.  The Spark side runs the crawler's exact seen-set tier
+    (bench_frontier.membership_split: an anti-join;
+    membership_split_spool: the sorted string-run probe on the key
+    cast to string); the DuckDB oracle is a plain ANTI JOIN over the
+    same two tables — so a false negative, a false positive or a
+    build/probe bucket-hash mismatch becomes a driver-visible row/hash
+    mismatch.
 
     Keys are pre-hashed here (pandas hash_array of the canonical URL,
     stored in the table — both sides read values, neither recomputes)

@@ -63,23 +63,17 @@ PICKS = [
      "here since vectorization made the kernel cheap); banding/candidate "
      "join and the Jaccard verify (candidates only, never all-pairs) are "
      "native joins on derived keys"),
-    ("frontier_membership", "the 10^10 seen-set path: ONE vectorized "
-     "ArrowEvalPython Bloom probe per branch over the candidate scan; "
-     "the exact LeftAnti join receives only the maybe-seen sliver "
-     "(true hits + Bloom false positives) while definitely-fresh rows "
-     "bypass it entirely — the union is the fresh frontier, no global "
-     "shuffle of the bypass branch"),
+    ("frontier_membership", "the crawler's default-mode seen-set path: "
+     "ONE LeftAnti join of the candidate scan against the seen keys, "
+     "no Python anywhere in the plan and no prefilter in front of it "
+     "(CrawlEngine._exact_unseen builds the same join)"),
     ("frontier_membership_exact", "the crawler's spool-mode membership "
-     "wave (Bloom blob table + engine/seenidx string runs): map-only "
-     "ArrowEvalPython passes over the candidate scan with NO join "
-     "operator in the plan at all; the seen table contributes zero "
-     "scan, zero exchange, zero hash relation (its keys live in the "
-     "per-bucket run files the closure references by path), so "
-     "per-wave cost is bounded by probe size however large seen grows. "
-     "Known cost: the optimizer merges the maybe-seen filter with the "
-     "run probe's filter, so the suspect branch evaluates BOTH UDFs on "
-     "every candidate — the run probe is not limited to the Bloom's "
-     "maybe-seen sliver (ROADMAP D1b)"),
+     "wave (engine/seenidx string runs): ONE map-only ArrowEvalPython "
+     "run probe over the candidate scan with NO join operator in the "
+     "plan at all; the seen table contributes zero scan, zero exchange, "
+     "zero hash relation (its keys live in the per-bucket run files the "
+     "closure references by path), so per-wave cost is bounded by probe "
+     "size however large seen grows"),
     ("export_shards", "shard manifest: ONE hash aggregate on a uniform "
      "derived key (id-suffix mod 16) with map-side partial aggregation — "
      "the encode UDF feeds partials, so at 10^10 rows the exchange "

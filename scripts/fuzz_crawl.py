@@ -13,8 +13,9 @@ don't.
 
 Deterministic: trial i of --seed S always draws the same config, so a
 failure reproduces with ``--seed S --only i``.  Trial parity picks the
-Bloom sidecar mode (odd trials run ``bloom_spool=True``), so every
-sweep covers both; each trial's JSON line records it.
+seen-set tier (odd trials run ``bloom_spool=True``: sorted runs; even
+trials the anti-join), so every sweep covers both; each trial's JSON
+line records it.
 
 Usage:
     python scripts/fuzz_crawl.py --seed 0 --n 24

@@ -1,4 +1,5 @@
-"""Bloom seen-set sidecar: zero false negatives (property), low FP."""
+"""Bloom filters and the committed blob-table loader: zero false
+negatives (property), low FP, strict blob format."""
 
 import numpy as np
 import pytest
@@ -54,69 +55,72 @@ def test_from_bytes_accepts_odd_geometry():
     assert rt.n_bits == 1025 and rt.contains(["a", "b"]).all()
 
 
-def test_bloom_incremental_or_merge():
-    # fixed-size filters OR-merge associatively (the store's update path)
+def _blob_dir(path, rows):
+    """A committed blob-table directory: one parquet file per element
+    of ``rows``, each a list of (bucket, blob bytes)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path.mkdir()
+    for i, part in enumerate(rows):
+        pq.write_table(pa.table({
+            "bucket": pa.array([b for b, _ in part], pa.int64()),
+            "blob": pa.array([blob for _, blob in part], pa.binary()),
+        }), str(path / f"part-{i:05d}.parquet"))
+    return (str(path),)
+
+
+def test_bloom_incremental_or_merge(tmp_path):
+    # fixed-size filters of one bucket in different files OR-merge
+    # associatively in the loader
+    from cianparser_spark.engine.bloom import load_spool_filters
+
     a = BloomFilter(1 << 12)
     b = BloomFilter(1 << 12)
     a.add(np.asarray(["one", "two"], dtype=object))
     b.add(np.asarray(["three"], dtype=object))
-    a.bits |= b.bits
-    assert a.contains(np.asarray(["one", "two", "three"], dtype=object)).all()
+    got = load_spool_filters(_blob_dir(
+        tmp_path / "t", [[(3, a.to_bytes())], [(3, b.to_bytes())]]))
+    assert set(got) == {3}
+    assert got[3].contains(np.asarray(["one", "two", "three"], dtype=object)).all()
 
 
-def test_or_merge_blob_group_refuses_mismatched_geometry():
+def test_load_spool_filters_refuses_mismatched_geometry(tmp_path):
     """OR-merging blobs of different n_bits must refuse loudly — a
     silent truncating merge would turn Bloom false-positives into
-    false NEGATIVES (dropped dedup keys)."""
-    import numpy as np
-    import pandas as pd
-    import pytest as _pytest
-
-    from cianparser_spark.engine.bloom import (
-        BloomFilter, blob_n_bits, or_merge_blob_group)
+    false NEGATIVES."""
+    from cianparser_spark.engine.bloom import load_spool_filters
 
     a = BloomFilter(1 << 12)
-    b = BloomFilter(1 << 12)
-    a.add(np.asarray(["x", "y"], dtype=object))
-    b.add(np.asarray(["z"], dtype=object))
-    merged = or_merge_blob_group(pd.DataFrame(
-        {"bucket": [3, 3], "blob": [a.to_bytes(), b.to_bytes()]}))
-    m = BloomFilter.from_bytes(bytes(merged["blob"].iloc[0]))
-    assert m.contains(["x", "y", "z"]).all()
-    assert blob_n_bits(merged["blob"].iloc[0]) == 1 << 12
-
     c = BloomFilter(1 << 13)  # different geometry
-    with _pytest.raises(ValueError, match="geometry mismatch"):
-        or_merge_blob_group(pd.DataFrame(
-            {"bucket": [3, 3], "blob": [a.to_bytes(), c.to_bytes()]}))
+    with pytest.raises(ValueError, match="geometry mismatch"):
+        load_spool_filters(_blob_dir(
+            tmp_path / "t", [[(3, a.to_bytes())], [(3, c.to_bytes())]]))
 
 
-# Committed-format pin: routing and blob bytes as written by stores of
-# earlier versions.  A change to either makes a resumed store probe
-# the wrong bucket or the wrong bits, i.e. return false negatives.
+# Committed-format pin: bucket routing as written by stores of earlier
+# versions.  A change makes a resumed store probe the wrong bucket of
+# its sorted runs, i.e. return false negatives.
 _GOLDEN_KEYS = ["1|294563720", "2|-1", "3|Казань", "12|дом-7", "7|x",
                 "5|a|b", "9|🏠", "4|ñandú", "10|", "11|1234567890123456789",
                 "6|Москва-сити", "8|ÿ"]
 _GOLDEN_BUCKETS_16 = [8, 12, 6, 4, 7, 7, 9, 9, 11, 0, 1, 7]
-_GOLDEN_BLOBS_SHA256 = \
-    "aa42f3e48de6c6e0bd48421f66541d80869284e75a91e206a6837c278c6d8ca4"
 
 
-def test_seen_key_format_golden(spark):
-    import hashlib
-
+def test_seen_key_format_golden():
     from cianparser_spark.engine import seenidx
-    from cianparser_spark.engine.bloom import build_partials
 
     keys = np.array(_GOLDEN_KEYS, dtype=object)
     assert seenidx.bucket_str(keys, 16).tolist() == _GOLDEN_BUCKETS_16
-    part = build_partials(
-        spark.createDataFrame([(k,) for k in _GOLDEN_KEYS], "key string"),
-        16, 4096).collect()
-    h = hashlib.sha256()
-    for b, blob in sorted((int(r["bucket"]), bytes(r["blob"])) for r in part):
-        h.update(b.to_bytes(8, "little"))
-        h.update(blob)
-    assert h.hexdigest() == _GOLDEN_BLOBS_SHA256
-    assert sorted(int(r["bucket"]) for r in part) \
-        == sorted(set(_GOLDEN_BUCKETS_16))
+
+
+def test_load_spool_filters_rejects_non_bloom_blob(tmp_path):
+    """A committed blob that is not a Bloom filter (here the retired
+    cuckoo format: int64 header -2, then a slot table) fails loudly in
+    the loader instead of being probed as Bloom bits."""
+    from cianparser_spark.engine.bloom import load_spool_filters
+
+    blob = (np.array([-2, 16], np.int64).tobytes()
+            + np.zeros((8, 4), np.uint16).tobytes())
+    with pytest.raises(ValueError, match="not a bloom blob"):
+        load_spool_filters(_blob_dir(tmp_path / "t", [[(0, blob)]]))

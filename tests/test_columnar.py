@@ -85,10 +85,11 @@ def test_card_dedup_key_edge_cases():
     assert card_dedup_key('<a href="ab/cd">x</a>', "flat") == "-1"
 
 
-def test_map_only_equals_shuffle_path(spark, tmp_path):
+def test_map_only_equals_shuffle_path(spark, tmp_path, monkeypatch):
     """The two wave dedup strategies produce identical offers."""
     import shutil
 
+    from cianparser_spark.engine import crawler
     from cianparser_spark.engine.crawler import CrawlEngine
 
     seeds = [
@@ -100,8 +101,8 @@ def test_map_only_equals_shuffle_path(spark, tmp_path):
     results = {}
     for mode in ("map_only", "shuffle"):
         d = str(tmp_path / mode)
-        eng = CrawlEngine(spark, d, seeds, web_cfg=CFG, host_tokens=64,
-                          dedup_strategy=mode)
+        monkeypatch.setattr(crawler, "_DEDUP_STRATEGY", mode)
+        eng = CrawlEngine(spark, d, seeds, web_cfg=CFG, host_tokens=64)
         eng.run()
         results[mode] = sorted(
             tuple(r) for r in eng.offers().collect()

@@ -46,14 +46,16 @@ def test_bitmatch_multiseed_with_faults(spark, tmp_run_dir):
     _bit_match(spark, tmp_run_dir, seeds, BITMATCH_CFG, host_tokens=16)
 
 
-def test_bitmatch_minby_dedup_path(spark, tmp_run_dir):
-    """dedup_broadcast_rows=0 forces the large-wave min_by fallback;
+def test_bitmatch_minby_dedup_path(spark, tmp_run_dir, monkeypatch):
+    """_DEDUP_BROADCAST_ROWS=0 forces the large-wave min_by fallback;
     it must produce the identical crawl-ordered output as the
     broadcast-semi winner join the small waves take."""
+    from cianparser_spark.engine import crawler
+
+    monkeypatch.setattr(crawler, "_DEDUP_BROADCAST_ROWS", 0)
     seeds = [CrawlSeed(1, "Москва", "flat", "sale", rooms=(1, 2),
                        additional_settings={"end_page": 3})]
-    _bit_match(spark, tmp_run_dir, seeds, BITMATCH_CFG, host_tokens=16,
-               dedup_broadcast_rows=0)
+    _bit_match(spark, tmp_run_dir, seeds, BITMATCH_CFG, host_tokens=16)
 
 
 def test_bitmatch_extra_data_and_newobject(spark, tmp_run_dir):
@@ -210,8 +212,7 @@ def test_progress_metrics_single_wave(spark, tmp_run_dir):
 def test_invalidate_and_recrawl_idempotent(spark, tmp_run_dir):
     """Re-crawl invalidation: drop page 2's offers + seen keys, re-fetch
     the page — the final table must be bit-identical to the original
-    crawl (stale Bloom positives fall through to the exact join, so no
-    re-accepted URL is lost and none duplicates)."""
+    crawl (no re-accepted URL is lost and none duplicates)."""
     seed = CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
                      additional_settings={"end_page": 3})
     eng = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG, host_tokens=2,
@@ -233,10 +234,10 @@ def test_invalidate_and_recrawl_idempotent(spark, tmp_run_dir):
 
 
 def test_invalidate_recrawl_single_wave_adjacent_dups(spark, tmp_run_dir):
-    """Regression: a single-wave crawl skips the final bloom rebuild, so
-    a later re-crawl must fall back to the exact seen anti-join —
-    otherwise adjacent-page duplicates owned by page 1 get re-admitted
-    when page 2 is re-crawled."""
+    """Regression: a re-crawl after a single-wave crawl must still
+    dedup against the exact seen set — otherwise adjacent-page
+    duplicates owned by page 1 get re-admitted when page 2 is
+    re-crawled."""
     seed = CrawlSeed(1, "Казань", "flat", "sale", rooms=(1, 2),
                      additional_settings={"end_page": 3})
     eng = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG, host_tokens=4)
@@ -249,19 +250,15 @@ def test_invalidate_recrawl_single_wave_adjacent_dups(spark, tmp_run_dir):
 
 
 def test_bloom_prefilter_never_drops_unseen(spark, tmp_run_dir, monkeypatch):
-    """A resumed engine (seen-row count unknown) always consults the
-    Bloom prefilter; with a tight filter (~17 % false positives on the
-    resumed waves' new keys) both the definitely-unseen leg and the
-    exact leg carry rows.  Equality with the oracle implies no false
-    drops.  The driver-mode engine probes and merges the committed
-    blob files directly: it never reads the bloom table through Spark,
-    on resume or in any wave."""
+    """A resumed engine answers membership with the exact tier alone
+    and stays bit-identical to the oracle; it never reads a ``bloom``
+    table, on resume or in any wave, and commits none."""
     from cianparser_spark.engine.store import WaveStore
 
     seed = CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
                      additional_settings={"end_page": 8})
     sim = ReferenceSimulator(BITMATCH_CFG).run([seed])
-    kw = dict(host_tokens=2, bloom_buckets=4, bloom_bits=128)
+    kw = dict(host_tokens=2, bloom_buckets=4)
     CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG, **kw).run(max_waves=2)
     reads = []
     read = WaveStore.read
@@ -270,52 +267,31 @@ def test_bloom_prefilter_never_drops_unseen(spark, tmp_run_dir, monkeypatch):
     eng = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG, **kw)
     assert not eng.bloom_spool
     rows = compat.to_reference_rows(eng.run(), [seed])
-    assert eng._seen_rows is None  # no small-seen skip of the prefilter
     assert eng.store.last_wave() > 2  # the resumed engine ran waves
     assert rows == sim.rows
     assert reads and "bloom" not in reads
-    assert eng.store.read("bloom").count() >= 1
+    assert eng.store.table_paths("bloom") == []
 
 
 # ------------------------------------------------- SPOOL sidecar mode
 
 def test_bloom_spool_bitmatch_and_blob_parity(spark, tmp_run_dir):
-    """bloom_spool=True (the 10^10-URL shape: executor-side OR-merge,
-    blobs never on the driver) must (a) bit-match the sequential
-    oracle and (b) commit a blob table BYTE-IDENTICAL to the default
-    driver-merged mode — build and probe share one routing function
-    and OR is order-free, so the two merge topologies must agree
-    exactly."""
-    import tempfile
-    import shutil
-
+    """bloom_spool=True (the 10^10-URL shape: the exact tier probes
+    sorted string runs) must bit-match the sequential oracle."""
     seed = CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
                      additional_settings={"end_page": 4})
     sim = ReferenceSimulator(BITMATCH_CFG).run([seed])
-    d2 = tempfile.mkdtemp()
-    try:
-        spool = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG,
-                            host_tokens=2, bloom_buckets=4, bloom_spool=True)
-        assert spool.bloom_spool
-        rows = compat.to_reference_rows(spool.run(), [seed])
-        assert rows == sim.rows
-        drv = CrawlEngine(spark, d2, [seed], BITMATCH_CFG,
-                          host_tokens=2, bloom_buckets=4, bloom_spool=False)
-        compat.to_reference_rows(drv.run(), [seed])
-        blobs_spool = {int(r["bucket"]): bytes(r["blob"])
-                       for r in spool.store.read("bloom").collect()}
-        blobs_drv = {int(r["bucket"]): bytes(r["blob"])
-                     for r in drv.store.read("bloom").collect()}
-        assert blobs_spool == blobs_drv and blobs_spool
-    finally:
-        shutil.rmtree(d2, ignore_errors=True)
+    spool = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG,
+                        host_tokens=2, bloom_buckets=4, bloom_spool=True)
+    assert spool.bloom_spool
+    rows = compat.to_reference_rows(spool.run(), [seed])
+    assert rows == sim.rows
 
 
 def test_bloom_spool_resume_forces_spool_probe(spark, tmp_run_dir):
-    """Resume leaves _seen_rows unknown, so every remaining wave MUST
-    take the spool-probe path (per-executor blob load from the
-    committed table) — bit-match proves the executor-side probe is
-    safety-preserving."""
+    """A resumed spool engine finds the committed sorted runs complete
+    and probes them for every remaining wave — bit-match proves the
+    executor-side run probe is safety-preserving."""
     seeds = [CrawlSeed(1, "Москва", "flat", "sale", rooms=(1, 2),
                        additional_settings={"end_page": 3})]
     e1 = CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG,
@@ -324,61 +300,9 @@ def test_bloom_spool_resume_forces_spool_probe(spark, tmp_run_dir):
     assert e1.store.last_wave() == 2
     e2 = CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG,
                      host_tokens=2, bloom_spool=True)
-    assert e2.bloom_spool
+    assert e2.bloom_spool and e2._seenx_usable()
     resumed = compat.to_reference_rows(e2.run(), seeds)
     assert resumed == ReferenceSimulator(BITMATCH_CFG).run(seeds).rows
-    assert e2._seen_rows is None  # the probe gate stayed open
-
-
-def test_bloom_spool_auto_threshold():
-    """Auto mode flips to spool exactly when the filter state outgrows
-    the driver budget."""
-    import tempfile
-
-    from cianparser_spark.engine.session import get_spark
-
-    spark = get_spark(master="local[2]", shuffle_partitions=2)
-    seed = CrawlSeed(1, "Москва", "flat", "sale")
-    small = CrawlEngine(spark, tempfile.mkdtemp(), [seed], BITMATCH_CFG)
-    assert not small.bloom_spool  # 16 x 1 Mbit = 2 MB << 64 MB
-    big = CrawlEngine(spark, tempfile.mkdtemp(), [seed], BITMATCH_CFG,
-                      bloom_buckets=64, bloom_bits=1 << 33)
-    assert big.bloom_spool  # 64 x 1 GiB blobs must never hit the driver
-
-
-@pytest.mark.parametrize("bloom_spool", [False, True])
-def test_bloom_spool_bits_change_rebuilds(spark, tmp_run_dir, bloom_spool):
-    """An operator retuning bloom_bits on an existing store must NOT
-    OR mismatched blobs (silent false negatives = dropped dedup keys);
-    in either sidecar mode the sidecar is rebuilt from the exact seen
-    table instead, preserving bloom ⊇ seen.  The resumed crawl stays
-    bit-identical and the committed blobs carry the NEW geometry."""
-    from cianparser_spark.engine.bloom import blob_n_bits
-
-    seeds = [CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
-                       additional_settings={"end_page": 8})]
-    # universe big enough that every page carries cards (204 offers ≈
-    # 8 content pages) — the rebuild needs a mid-resume wave with
-    # BOTH new seen keys and pending pages (a wave only updates the
-    # sidecar when a later wave will consult it); cut after wave 1 so
-    # such waves exist
-    cfg = dataclasses.replace(BITMATCH_CFG, universe_base=300,
-                              universe_span=1)
-    e1 = CrawlEngine(spark, tmp_run_dir, seeds, cfg, host_tokens=2,
-                     bloom_spool=bloom_spool, bloom_bits=1 << 17)
-    e1.run(max_waves=1)
-    assert e1.store.last_wave() == 1
-    blobs = e1.store.read("bloom").collect()
-    assert blobs and blob_n_bits(bytes(blobs[0]["blob"])) == 1 << 17
-    # resume at DOUBLE the filter size
-    e2 = CrawlEngine(spark, tmp_run_dir, seeds, cfg, host_tokens=2,
-                     bloom_spool=bloom_spool, bloom_bits=1 << 18)
-    resumed = compat.to_reference_rows(e2.run(), seeds)
-    assert resumed == ReferenceSimulator(cfg).run(seeds).rows
-    blobs2 = e2.store.read("bloom").collect()
-    assert blobs2  # a rebuild-triggering wave really ran
-    for r in blobs2:
-        assert blob_n_bits(bytes(r["blob"])) == 1 << 18
 
 
 def test_identical_seeds_independent_attempt_counters(spark, tmp_run_dir):
@@ -436,15 +360,15 @@ def test_seenx_heal_on_mode_switch(spark, tmp_run_dir):
         e3.bloom_buckets)
     assert got[:len(seen_keys)].all() and not got[len(seen_keys):].any()
     # finish on the healed sidecar: still bit-identical to the oracle;
-    # the completed store then shows the DESIGNED final-wave lag (same
-    # policy as the Bloom: nothing in this run reads it)
+    # the completed store then shows the DESIGNED final-wave lag
+    # (nothing in this run reads it)
     resumed = compat.to_reference_rows(e3.run(), seeds)
     assert resumed == ReferenceSimulator(BITMATCH_CFG).run(seeds).rows
 
 
 def test_invalidate_and_recrawl_spool_mode(spark, tmp_run_dir):
     """Re-crawl invalidation in SPOOL mode: the sorted-run exact tier
-    is rebuilt (replace-committed) alongside the Bloom, and the
+    is rebuilt (replace-committed) with the seen table, and the
     re-crawled table is bit-identical to the original crawl."""
     seed = CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
                      additional_settings={"end_page": 3})
@@ -488,8 +412,8 @@ def test_invalidate_and_recrawl_spool_mode(spark, tmp_run_dir):
 
 def test_bitmatch_two_seeds_tight_budget(spark, tmp_run_dir):
     """Two seeds sharing one host at host_tokens=2: each wave after the
-    first consults the Bloom sidecar built from earlier waves, and the
-    crawl must stay crawl-order bit-identical to the oracle."""
+    first consults the seen set built by earlier waves, and the crawl
+    must stay crawl-order bit-identical to the oracle."""
     seeds = [CrawlSeed(1, "Москва", "flat", "sale", rooms=(1, 2),
                        additional_settings={"end_page": 3}),
              CrawlSeed(2, "Казань", "flat", "rent_long", rooms="all",
@@ -530,13 +454,12 @@ def test_bloom_spool_detail_bitmatch(spark, tmp_run_dir):
 
 
 def test_recrawl_final_wave_lag(spark, tmp_run_dir):
-    """The crawl's final wave appends seen keys without a sidecar
-    update, so a FRESH engine's invalidate-and-recrawl must not trust
-    the lagging sidecar — else a final-wave winner whose suppressed
-    duplicate sits on an invalidated same-wave sibling page probes
-    definitely-unseen and is re-admitted (a sidecar that skipped the
-    lagged keys gave 107 rows vs 106 at bloom_buckets=64, where
-    per-bucket saturation no longer masks the hole)."""
+    """A FRESH engine's invalidate-and-recrawl after a completed crawl
+    must dedup against every seen key, the final wave's included —
+    else a final-wave winner whose suppressed duplicate sits on an
+    invalidated same-wave sibling page is re-admitted (a sidecar that
+    skipped the final wave's keys gave 107 rows vs 106 at
+    bloom_buckets=64)."""
     seed = CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
                      additional_settings={"end_page": 4})
     eng = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG,
@@ -547,35 +470,6 @@ def test_recrawl_final_wave_lag(spark, tmp_run_dir):
     after = compat.to_reference_rows(
         e2.invalidate_and_recrawl([(1, 4)]), [seed])
     assert after == before
-
-
-def test_non_bloom_blob_rejected_in_both_modes(spark, tmp_run_dir):
-    """A bloom-table blob that is not a Bloom filter (here a blob in
-    the retired cuckoo format: int64 header -2, then a slot table)
-    must fail loudly when loaded — by a resumed driver-mode crawl at
-    its first consult of the table, and by the loader both modes'
-    probes use — instead of being probed as Bloom bits."""
-    import numpy as np
-
-    from cianparser_spark.engine import model
-    from cianparser_spark.engine.bloom import load_spool_filters
-
-    seed = CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
-                     additional_settings={"end_page": 4})
-    blob = (np.array([-2, 16], np.int64).tobytes()
-            + np.zeros((8, 4), np.uint16).tobytes())
-    eng = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG,
-                      host_tokens=2, bloom_spool=False)
-    eng.run(max_waves=1)
-    eng.store.commit_wave(
-        eng.store.last_wave(),
-        replaces={"bloom": ([(0, blob)], model.BLOOM_SCHEMA)})
-    resumed = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG,
-                          host_tokens=2, bloom_spool=False)
-    with pytest.raises(Exception, match="not a bloom blob"):
-        resumed.run()
-    with pytest.raises(ValueError, match="not a bloom blob"):
-        load_spool_filters(tuple(sorted(eng.store.table_paths("bloom"))))
 
 
 def test_seenx_gate_fails_closed_after_seen_compaction(spark, tmp_run_dir):
@@ -595,3 +489,82 @@ def test_seenx_gate_fails_closed_after_seen_compaction(spark, tmp_run_dir):
     assert not e2._seenx_usable()
     resumed = compat.to_reference_rows(e2.run(), seeds)
     assert resumed == ReferenceSimulator(BITMATCH_CFG).run(seeds).rows
+
+
+# ------------------------------------- one membership definition (no Bloom)
+
+def test_spool_wave_loop_never_reads_seen(spark, tmp_run_dir, monkeypatch):
+    """Spool mode's wave loop does no O(seen) work: after the first
+    wave every membership probe reads the sorted runs, never the
+    ``seen`` table, and a ≥3-wave list-only crawl stays bit-identical
+    to the simulator."""
+    from cianparser_spark.engine.store import WaveStore
+
+    seed = CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
+                     additional_settings={"end_page": 4})
+    sim = ReferenceSimulator(BITMATCH_CFG).run([seed])
+    eng = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG,
+                      host_tokens=1, bloom_spool=True)
+    eng.run(max_waves=1)
+    reads = []
+    read = WaveStore.read
+    monkeypatch.setattr(WaveStore, "read",
+                        lambda self, name: reads.append(name) or read(self, name))
+    rows = compat.to_reference_rows(eng.run(), [seed])
+    assert eng.store.last_wave() >= 3
+    assert reads and "seen" not in reads
+    assert rows == sim.rows
+
+
+@pytest.mark.parametrize("bloom_spool", [False, True])
+def test_invalidate_commits_no_bloom_table(spark, tmp_run_dir, bloom_spool):
+    """Neither the wave loop nor invalidation builds a Bloom table in
+    either mode, and the re-crawl converges to the original crawl."""
+    seed = CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
+                     additional_settings={"end_page": 3})
+    eng = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG,
+                      host_tokens=2, bloom_spool=bloom_spool)
+    before = compat.to_reference_rows(eng.run(), [seed])
+    assert eng.store.last_wave() >= 2
+    after = compat.to_reference_rows(
+        eng.invalidate_and_recrawl([(1, 2)]), [seed])
+    assert after == before
+    assert eng.store.table_paths("bloom") == []
+
+
+@pytest.mark.parametrize("bloom_spool", [False, True])
+def test_resume_ignores_legacy_bloom_table(spark, tmp_run_dir, bloom_spool):
+    """A store from before the prefilter was removed still lists a
+    ``bloom`` table.  A resumed crawl never consults it (here it is
+    deliberately empty, so a probe would re-admit every seen key),
+    carries it forward untouched, and bit-matches in both modes."""
+    from pyspark.sql import types as T
+
+    from cianparser_spark.engine import model
+    from cianparser_spark.engine.bloom import BloomFilter
+    from cianparser_spark.engine.store import WaveStore
+
+    seeds = [CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
+                       additional_settings={"end_page": 4})]
+    sim = ReferenceSimulator(BITMATCH_CFG).run(seeds)
+    CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG, host_tokens=1,
+                bloom_spool=bloom_spool).run(max_waves=1)
+    schema = T.StructType([T.StructField("bucket", T.LongType()),
+                           T.StructField("blob", T.BinaryType())])
+    legacy = WaveStore(spark, tmp_run_dir,
+                       {**model.TABLE_SCHEMAS, "bloom": schema},
+                       model.REPLACE_TABLES | {"bloom"})
+    empty = BloomFilter(1 << 12)
+    legacy.commit_wave(legacy.last_wave(), replaces={
+        "bloom": ([(b, empty.to_bytes()) for b in range(16)], schema)})
+    planted = legacy.table_paths("bloom")
+    assert planted
+
+    eng = CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG,
+                      host_tokens=1, bloom_spool=bloom_spool)
+    rows = compat.to_reference_rows(eng.run(), seeds)
+    assert eng.store.last_wave() >= 3
+    assert rows == sim.rows
+    assert {(r["seed_id"], r["deal_url_id"])
+            for r in eng.store.read("seen").collect()} == sim.seen
+    assert eng.store.table_paths("bloom") == planted

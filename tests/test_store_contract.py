@@ -20,7 +20,7 @@ from cianparser_spark.engine.store import WaveStore
 
 def _store(spark, root) -> WaveStore:
     return WaveStore(spark, root, model.TABLE_SCHEMAS,
-                     replace_tables=frozenset({"bloom"}))
+                     replace_tables=frozenset({"parkreg"}))
 
 
 def _stopped(spark, rows):
@@ -47,16 +47,16 @@ def test_multi_table_append_is_one_txn(spark, tmp_run_dir):
 def test_append_accumulates_replace_overwrites(spark, tmp_run_dir):
     """Append tables accumulate across waves; replace tables expose
     ONLY the latest commit's data (overwritePartitions semantics)."""
-    def bloom(rows):
-        return spark.createDataFrame(rows, model.BLOOM_SCHEMA)
+    def parkreg(rows):
+        return spark.createDataFrame(rows, model.PARKREG_SCHEMA)
 
     st = _store(spark, tmp_run_dir)
     st.commit_wave(0, appends={"stopped": _stopped(spark, [(1, 10)])})
     st.commit_wave(1, appends={"stopped": _stopped(spark, [(2, 20)])},
-                   replaces={"bloom": bloom([(0, b"aa"), (1, b"bb")])})
-    st.commit_wave(2, replaces={"bloom": bloom([(0, b"cc")])})
+                   replaces={"parkreg": parkreg([("aa", 1, 1), ("bb", 1, 2)])})
+    st.commit_wave(2, replaces={"parkreg": parkreg([("cc", 2, 1)])})
     assert st.read("stopped").count() == 2          # appends accumulated
-    assert st.read("bloom").count() == 1            # only wave-2 replace
+    assert st.read("parkreg").count() == 1          # only wave-2 replace
     assert st.last_wave() == 2
 
 
@@ -101,16 +101,16 @@ def test_local_write_rows_roundtrip(spark, tmp_path):
                       "details_fetched": 1, "avg_price": 12.5, "captcha": False}],
                     model.METRICS_SCHEMA),
         "lineage": ([(0, 7, 100, 90)], model.LINEAGE_SCHEMA),
-    }, replaces={"bloom": ([(0, b"\x01\x02")], model.BLOOM_SCHEMA)})
+    }, replaces={"parkreg": ([("k\x1f", 1, 2)], model.PARKREG_SCHEMA)})
     m = st.read("metrics").collect()
     assert len(m) == 1 and m[0]["avg_price"] == 12.5 and m[0]["captcha"] is False
     assert m[0]["offers_emitted"] is None and m[0]["pages_fetched"] == 3
     assert st.read("lineage").collect()[0]["output_rows"] == 90
-    b = st.read("bloom").collect()
-    assert bytes(b[0]["blob"]) == b"\x01\x02"
+    p = st.read("parkreg").collect()
+    assert (p[0]["key"], p[0]["seed_id"], p[0]["page_number"]) == ("k\x1f", 1, 2)
     # empty rows on a replace clears the table
-    st.commit_wave(1, replaces={"bloom": ([], model.BLOOM_SCHEMA)})
-    assert st.read("bloom").count() == 0
+    st.commit_wave(1, replaces={"parkreg": ([], model.PARKREG_SCHEMA)})
+    assert st.read("parkreg").count() == 0
     # mixed commit: Spark DataFrame append still works alongside
     st.commit_wave(2, appends={"stopped": ([(9, 2)], model.STOPPED_SCHEMA)})
     assert st.read("stopped").collect()[0]["seed_id"] == 9
@@ -331,11 +331,11 @@ def test_changelog_refuses_replace_tables_and_rewrites(spark, tmp_run_dir):
 
     st = _store(spark, tmp_run_dir)
     st.commit_wave(0, appends={"stopped": _stopped(spark, [(1, 10)])},
-                   replaces={"bloom": spark.createDataFrame(
-                       [], model.TABLE_SCHEMAS["bloom"])})
+                   replaces={"parkreg": spark.createDataFrame(
+                       [], model.TABLE_SCHEMAS["parkreg"])})
     st.commit_wave(1, appends={"stopped": _stopped(spark, [(2, 20)])})
     with pytest.raises(ValueError, match="replace"):
-        st.changelog("bloom", 1, 2)
+        st.changelog("parkreg", 1, 2)
     st.compact("stopped", target_file_bytes=1 << 30)
     v_after = st.versions()[-1][0]
     with pytest.raises(ValueError, match="compaction"):
