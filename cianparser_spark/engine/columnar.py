@@ -547,14 +547,22 @@ def _build_plan() -> tuple[list, list, list, list]:
     return c1, c2, c3, cols
 
 
-def seed_dim_cols(runtimes: dict[int, dict], max_literal: int = 256) -> dict | None:
+# Driver-held lookup tables up to this many rows become plan literals
+# (``create_map``/``isin``); larger ones are broadcast-joined.  The one
+# threshold for seed_dim_cols and the crawler's lookup helper
+# (CrawlEngine._lookup); both read it at call time.
+LIT_LOOKUP_MAX = 256
+
+
+def seed_dim_cols(runtimes: dict[int, dict], max_literal: int | None = None) -> dict | None:
     """The per-seed constants (P3) as literal ``create_map`` lookup
     Columns keyed by seed_id, or None when the seed set exceeds the
-    plan-literal threshold.  A broadcast hash join of the O(seeds) dim
-    is the right plan at 10^6-seed scale, but its broadcast-exchange
-    build is a separate ~0.25 s job EVERY wave — for wave-bound crawls
-    over a bounded seed list the literal map costs zero jobs."""
-    if len(runtimes) > max_literal:
+    plan-literal threshold (``LIT_LOOKUP_MAX`` unless ``max_literal``
+    is given).  A broadcast hash join of the O(seeds) dim is the right
+    plan at 10^6-seed scale, but its broadcast-exchange build is a
+    separate ~0.25 s job EVERY wave — for wave-bound crawls over a
+    bounded seed list the literal map costs zero jobs."""
+    if len(runtimes) > (LIT_LOOKUP_MAX if max_literal is None else max_literal):
         return None
     out = {}
     for name in ("kind", "deal", "location", "suburban_type"):

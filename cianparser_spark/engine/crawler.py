@@ -35,8 +35,12 @@ watermarks, metrics, lineage, which tables are even non-empty) derives
 from them.  Collected rows are O(pages-per-wave), bounded by the
 politeness budget, never O(cards).  Empty tables are never written;
 the stop map and host debt live in driver memory and are rebuilt from
-the committed snapshot on resume.  Seen-set membership has one
-definition, ``CrawlEngine._exact_unseen``.
+the committed snapshot on resume.  Seen-set membership is answered
+in two places: ``CrawlEngine._exact_unseen`` for DataFrame rows (the
+wave's cards and the detail-key ledger), and ``_resolve_paused`` for
+the driver-held paused blocker keys (a driver-side sorted-run probe in
+spool mode, a semi-join over ``seen`` otherwise).  Every driver-held
+lookup table reaches Spark through one helper, ``CrawlEngine._lookup``.
 """
 
 from __future__ import annotations
@@ -75,10 +79,10 @@ _CODEGEN_ROW_FLOOR = 16_384
 # winners with a broadcast semi-join, bigger ones with a min_by
 # aggregate.
 _DEDUP_BROADCAST_ROWS = 100_000
-# The wave's physical dedup strategy (_run_wave): "auto" picks
-# map-only when the wave has enough seeds to spread, "map_only" and
-# "shuffle" force one.
-_DEDUP_STRATEGY = "auto"
+# Parked/paused detail-ledger entries above this spill to a store
+# table instead of growing the driver dicts (see _detail_ledger) — the
+# enforced bound on driver-held state.
+_LEDGER_SPILL_ROWS = 50_000
 
 
 def _seen_key(key_col: str = "deal_url_id"):
@@ -98,7 +102,6 @@ class CrawlEngine:
         respect_robots: bool = True,
         verbose: bool = False,
         bloom_spool: bool = False,
-        ledger_spill_rows: int = 50_000,
     ):
         self._cg_saved: tuple | None = None
         self.spark = spark
@@ -119,10 +122,6 @@ class CrawlEngine:
         # committed run dirs — bounds the probe's per-run cost on long
         # crawls (see _seenx_update)
         self.seenx_compact_dirs = 64
-        # parked/paused detail-ledger entries above this spill to a
-        # store table instead of growing the driver dicts (see
-        # _detail_ledger) — the enforced bound on driver-held state
-        self.ledger_spill_rows = int(ledger_spill_rows)
         self.verbose = verbose
         self._t0 = 0.0
         self.runtimes = {s.seed_id: model.seed_runtime(s) for s in seeds}
@@ -166,7 +165,7 @@ class CrawlEngine:
         # entries are removed exactly when the marker arrives.
         self._parked_disp: dict[tuple[int, int], set] = {}
         # derive mode (ENFORCED ledger bound): when _parked_disp
-        # outgrows ledger_spill_rows it spills once into the store's
+        # outgrows _LEDGER_SPILL_ROWS it spills once into the store's
         # "parkreg" table and every later consultation runs as
         # DataFrame ops — see model.PARKREG_SCHEMA.  Per-wave driver
         # deltas stay bounded by the politeness budget (markers arrive
@@ -177,7 +176,6 @@ class CrawlEngine:
         self._parked_add_df: DataFrame | None = None  # this wave's additions
         self._parked_spill_rows: list[tuple] | None = None  # transition wave
         self._ks_nonempty: bool = False
-        self._seeds_df: DataFrame | None = None
 
     def _seed_dim(self):
         """Literal per-seed constant columns for bounded seed lists
@@ -337,7 +335,7 @@ class CrawlEngine:
                             self._parked_disp[
                                 (int(r["seed_id"]), int(r["page_number"]))] = ph
                             n_parked += len(ph)
-                    if n_parked > self.ledger_spill_rows:
+                    if n_parked > _LEDGER_SPILL_ROWS:
                         self._spill_parked()
         if self._staged_nonempty is None:
             last = self.store.last_wave()
@@ -443,28 +441,14 @@ class CrawlEngine:
         # 2 × cards), so without this a small token budget would defer
         # it forever.  The per-host first-row keys ride the demand
         # aggregate the caller already collected (``first_rows``), so
-        # this is a broadcast join of driver rows, NOT a second
-        # aggregate job (and NOT a global per-host window, which would
-        # un-do the salting and sort every over-budget host's rows).
-        row_key = F.concat_ws(
-            "\x1f", F.col("host"), F.col("page_number"), F.col("_krank"),
-            F.col("seed_id"), F.col("card_index"), F.col("url"))
-        if len(first_rows) <= self._LIT_LOOKUP_MAX:
-            first_keys = ["\x1f".join(str(x) for x in r) for r in first_rows]
-            df = df.withColumn("_is_first", row_key.isin(first_keys))
-        else:  # many over-budget hosts: broadcast-join fallback
-            fdf = self.spark.createDataFrame(
-                first_rows,
-                "host string, _f_pn long, _f_kr int, _f_sid long, _f_ci long, _f_url string")
-            df = df.join(F.broadcast(fdf), "host") \
-                .withColumn(
-                    "_is_first",
-                    (F.col("page_number") == F.col("_f_pn"))
-                    & (F.col("_krank") == F.col("_f_kr"))
-                    & (F.col("seed_id") == F.col("_f_sid"))
-                    & (F.col("card_index") == F.col("_f_ci"))
-                    & (F.col("url") == F.col("_f_url"))) \
-                .drop("_f_pn", "_f_kr", "_f_sid", "_f_ci", "_f_url")
+        # this is a lookup of driver rows, NOT a second aggregate job
+        # (and NOT a global per-host window, which would un-do the
+        # salting and sort every over-budget host's rows).  The mark is
+        # never null: ``~_selected`` below would drop deferred rows.
+        df = self._lookup(
+            df, first_rows,
+            "host string, page_number long, _krank int, seed_id long, "
+            "card_index long, url string", mark="_is_first")
         df = df.withColumn(
             "_salt", F.pmod(F.xxhash64("url", "seed_id"), F.lit(_SALT_BUCKETS))
         )
@@ -510,32 +494,6 @@ class CrawlEngine:
         return (F.col("kind") == "list") & cond
 
     # ----------------------------------------- page-coupled detail ledger
-
-    def _seed_template_cols(self):
-        """(prefix, suffix, host) literal-map Columns keyed by seed_id,
-        or None when the seed set exceeds the plan-literal threshold
-        (caller broadcast-joins ``_seed_frontier_df`` instead)."""
-        if len(self.runtimes) > self._LIT_LOOKUP_MAX:
-            return None
-        pre, suf, hst = {}, {}, {}
-        for sid, rt in self.runtimes.items():
-            p, s = rt["template"].split("{}", 1)
-            pre[sid], suf[sid] = p, s
-            hst[sid] = rt["template"].split("/")[2]
-        key = F.col("seed_id")
-        return (self._lit_map(pre, key, "string"),
-                self._lit_map(suf, key, "string"),
-                self._lit_map(hst, key, "string"))
-
-    def _seed_frontier_df(self) -> DataFrame:
-        if self._seeds_df is None:
-            rows = []
-            for sid, rt in self.runtimes.items():
-                prefix, suffix = rt["template"].split("{}", 1)
-                rows.append((sid, prefix, suffix, rt["template"].split("/")[2]))
-            self._seeds_df = self.spark.createDataFrame(
-                rows, "seed_id long, prefix string, suffix string, host string")
-        return self._seeds_df
 
     def _detail_ledger(self, wave: int, ks_delta: list[tuple],
                        emitted_keys_df: DataFrame | None,
@@ -645,31 +603,19 @@ class CrawlEngine:
                     bdf = bdf.unionByName(self.spark.createDataFrame(
                         list(paused_parked), "seed_id long, _k string"))
                 bdf = bdf.distinct().withColumn("_blk", F.lit(True))
-                j = j.join(bdf, ["seed_id", "_k"], "left")
+                j = j.join(bdf, ["seed_id", "_k"], "left") \
+                    .withColumn("_blk", F.col("_blk").isNotNull())
             else:
                 parked: set = set(paused_parked)
                 for (s, _pn), keys in self._parked_disp.items():
                     parked.update((s, k) for k in keys)
-                blocked = sorted(parked)
-                if blocked and len(blocked) <= self._LIT_LOOKUP_MAX:
-                    bkeys = [f"{s}\x1f{k}" for s, k in blocked]
-                    j = j.withColumn(
-                        "_blk",
-                        F.when(F.concat_ws("\x1f", F.col("seed_id"), F.col("_k"))
-                               .isin(bkeys), F.lit(True)))
-                elif blocked:  # huge parked set: broadcast-join fallback
-                    bdf = self.spark.createDataFrame(
-                        list(blocked), "seed_id long, _k string") \
-                        .withColumn("_blk", F.lit(True))
-                    j = j.join(F.broadcast(bdf), ["seed_id", "_k"], "left")
-                else:
-                    j = j.withColumn("_blk", F.lit(None).cast("boolean"))
+                j = self._lookup(j, sorted(parked), "seed_id long, _k string",
+                                 mark="_blk")
             w = Window.partitionBy("seed_id", "_k").orderBy("page_number", "card_index")
             j = (j.withColumn("_rk", F.row_number().over(w))
                  .withColumn("_win", (F.col("_rk") == 1)
                              & (F.col("_st").isNull()
-                                | ((F.col("_st") == "dead")
-                                   & F.col("_blk").isNull())))
+                                | ((F.col("_st") == "dead") & ~F.col("_blk"))))
                  .withColumn("_a0", F.when(F.col("_st") == "dead", F.col("_cons"))
                              .otherwise(F.lit(0))))
             card_j = F.to_json(F.struct(
@@ -686,23 +632,14 @@ class CrawlEngine:
                         lambda x: x["j"]), ","),
                     F.lit("]")).alias("_cards"),
                 F.sum(F.when(F.col("_win"), 1).otherwise(0)).alias("_nf"))
-            seed_cols = self._seed_template_cols()
-            if seed_cols is not None:
-                grp = grp.withColumn("prefix", seed_cols[0]) \
-                    .withColumn("suffix", seed_cols[1]) \
-                    .withColumn("host", seed_cols[2])
-            else:  # many-seed fallback: broadcast dim join
-                grp = grp.join(F.broadcast(self._seed_frontier_df()), "seed_id")
-            burn_col = self._lit_map(
-                {f"{sid}|{pn}": b for (sid, pn), b in self._page_burn.items()},
-                F.concat_ws("|", F.col("seed_id"), F.col("page_number")), "long")
-            if burn_col is None:
-                burn_rows = [(sid, pn, b) for (sid, pn), b in self._page_burn.items()]
-                burn_df = self.spark.createDataFrame(
-                    burn_rows, "seed_id long, page_number long, _burn long")
-                grp = grp.join(F.broadcast(burn_df), ["seed_id", "page_number"], "left")
-            else:
-                grp = grp.withColumn("_burn", burn_col)
+            grp = self._lookup(
+                grp, [(sid, *rt["template"].split("{}", 1),
+                       rt["template"].split("/")[2])
+                      for sid, rt in self.runtimes.items()],
+                "seed_id long", "prefix string, suffix string, host string")
+            grp = self._lookup(
+                grp, [(sid, pn, b) for (sid, pn), b in self._page_burn.items()],
+                "seed_id long, page_number long", "_burn long")
             b = F.coalesce(F.col("_burn"), F.lit(0))
             groups_df = grp.select(
                 F.concat("prefix", F.col("page_number").cast("string"),
@@ -723,7 +660,7 @@ class CrawlEngine:
             # (winner outside their own page): these block out-of-order
             # resurrection until the group's marker resolves them.
             # Collect is bounded by the wave's cross-page duplicate
-            # count; the ENFORCED cap (ledger_spill_rows): when the
+            # count; the ENFORCED cap (_LEDGER_SPILL_ROWS): when the
             # cumulative registry outgrows it, spill to the store's
             # parkreg table and keep additions as a DataFrame from
             # then on — driver memory stays capped at any backlog.
@@ -744,7 +681,7 @@ class CrawlEngine:
                     self._parked_disp.setdefault(
                         (int(r["seed_id"]), int(r["page_number"])),
                         set()).add(r["key"])
-                if self._parked_size() > self.ledger_spill_rows:
+                if self._parked_size() > _LEDGER_SPILL_ROWS:
                     self._spill_parked()
 
         ks_replace = None
@@ -775,16 +712,10 @@ class CrawlEngine:
         emitted: set = set()
         ksmap: dict = {}
         if b_keys:
-            # membership probes for a driver-held key list: filter the
-            # big side on a literal isin instead of broadcasting a
-            # createDataFrame of the keys — one fewer broadcast-build
-            # job each, same rows back (b_keys is bounded by the parked
-            # placeholder count, but keep the join fallback anyway)
-            use_isin = len(b_keys) <= self._LIT_LOOKUP_MAX
-            ckey = F.concat_ws("\x1f", F.col("seed_id"), F.col("key"))
-            lits = [f"{s}\x1f{k}" for s, k in b_keys]
-            kdf = (None if use_isin else self.spark.createDataFrame(
-                list(b_keys), "seed_id long, key string"))
+            # seen-set membership of a driver-held key list, the one
+            # answer outside _exact_unseen: spool mode probes the sorted
+            # runs from the driver, otherwise the seen table (and this
+            # wave's emissions) is semi-joined against the keys
             spoolx = (self.bloom_spool and self._seen_nonempty
                       and self._seenx_usable())
             if spoolx:
@@ -811,14 +742,13 @@ class CrawlEngine:
                 s = seen_srcs[0]
                 for p in seen_srcs[1:]:
                     s = s.unionByName(p)
-                hits = (s.filter(ckey.isin(lits)).select("seed_id", "key")
-                        if use_isin
-                        else kdf.join(s, ["seed_id", "key"], "left_semi"))
+                hits = self._lookup(s, b_keys, "seed_id long, key string",
+                                    how="left_semi") \
+                    .select("seed_id", "key")
                 emitted |= {(int(r["seed_id"]), r["key"]) for r in hits.collect()}
             if self._ks_nonempty:
-                ks = self.store.read("keystate")
-                ks = (ks.filter(ckey.isin(lits)) if use_isin
-                      else kdf.join(ks, ["seed_id", "key"], "inner"))
+                ks = self._lookup(self.store.read("keystate"), b_keys,
+                                  "seed_id long, key string", how="left_semi")
                 for r in (ks.groupBy("seed_id", "key")
                           .agg(F.max_by(F.struct("state", "consumed"), "ver").alias("_s"))
                           .select("seed_id", "key", "_s.state", "_s.consumed")
@@ -845,15 +775,8 @@ class CrawlEngine:
                 pv = srcs[0]
                 for p in srcs[1:]:
                     pv = pv.unionByName(p)
-                pk = F.concat_ws("\x1f", F.col("seed_id"), F.col("key"))
-                plits = [f"{s}\x1f{k}" for s, k in b_keys]
-                if len(b_keys) <= self._LIT_LOOKUP_MAX:
-                    pv = pv.filter(pk.isin(plits))
-                else:
-                    kdf2 = self.spark.createDataFrame(
-                        list(b_keys), "seed_id long, key string")
-                    pv = pv.join(F.broadcast(kdf2), ["seed_id", "key"],
-                                 "left_semi")
+                pv = self._lookup(pv, b_keys, "seed_id long, key string",
+                                  how="left_semi")
                 for r in (pv.groupBy("seed_id", "key")
                           .agg(F.min("page_number").alias("mn")).collect()):
                     parked_min[(int(r["seed_id"]), r["key"])] = int(r["mn"])
@@ -921,28 +844,62 @@ class CrawlEngine:
 
     # ------------------------------------------------------------- helpers
 
-    # Small driver-built lookup tables (watermarks, retry-burn counters,
-    # parked keys, per-host first-priority rows) are joined as literal
-    # ``create_map``/``isin`` expressions instead of
-    # createDataFrame+broadcast joins when they fit: every broadcast of
-    # a driver-row table costs a separate broadcast-build job
-    # (~0.25-0.3 s of scheduling on tiny waves) plus a py4j
-    # createDataFrame round trip — at a handful of such joins per wave
-    # that overhead is what caps politeness-wave throughput.  Above the
-    # threshold (the plan-literal blowup limit, NOT a data limit) the
-    # callers keep their broadcast-join fallback, which is the right
-    # physical plan at 10^6-seed scale.
-    _LIT_LOOKUP_MAX = 256
+    def _lookup(self, df: DataFrame, rows: list[tuple], keys: str,
+                values: str = "", *, how: str = "left",
+                mark: str | None = None) -> DataFrame:
+        """Join driver-held ``rows`` onto ``df`` — the one place the
+        engine turns a driver dict/set into Spark.
 
-    def _lit_map(self, mapping: dict, key_col, value_type: str):
-        """``mapping`` as a literal map-lookup Column, or None if too
-        large (caller falls back to a broadcast join)."""
-        if len(mapping) > self._LIT_LOOKUP_MAX:
-            return None
-        pairs = [x for k, v in mapping.items() for x in (F.lit(k), F.lit(v))]
-        if not pairs:
-            return F.lit(None).cast(value_type)
-        return F.element_at(F.create_map(*pairs), key_col).cast(value_type)
+        ``rows`` are tuples laid out as the DDL ``keys`` (the join
+        columns, named as in ``df``) followed by ``values``; they must
+        be unique on the keys.  Three shapes:
+
+        * ``values``: add the value columns, null where the key is
+          absent;
+        * ``mark=name``: add boolean ``name``, True where the key is
+          present and False (never null) where it is absent;
+        * ``how="left_semi"``/``"left_anti"``: keep the rows of ``df``
+          whose key is / is not present.
+
+        Small tables (watermarks, retry-burn counters, parked keys,
+        per-host first-priority rows, seed templates) become plan
+        literals — one ``create_map`` per value column, an ``isin`` on
+        the ``\\x1f``-joined key for marks and filters — instead of a
+        createDataFrame + broadcast join: every broadcast of a
+        driver-row table costs a separate broadcast-build job
+        (~0.25-0.3 s of scheduling on tiny waves) plus a py4j
+        createDataFrame round trip, and at a handful of such joins per
+        wave that overhead is what caps politeness-wave throughput.
+        Past ``columnar.LIT_LOOKUP_MAX`` rows (the plan-literal blowup
+        limit, NOT a data limit) the rows are broadcast-joined, the
+        right physical plan at 10^6-seed scale.  Empty rows always take
+        the literal side: no job runs."""
+        names = [f.split()[0] for f in keys.split(",")]
+        if len(rows) <= columnar.LIT_LOOKUP_MAX:
+            joined = F.concat_ws("\x1f", *names)
+            lits = ["\x1f".join(map(str, r[:len(names)])) for r in rows]
+            if values:
+                key, ks = ((F.col(names[0]), [r[0] for r in rows])
+                           if len(names) == 1 else (joined, lits))
+                for i, (name, typ) in enumerate(
+                        (f.split() for f in values.split(",")), len(names)):
+                    pairs = [x for k, r in zip(ks, rows)
+                             for x in (F.lit(k), F.lit(r[i]))]
+                    df = df.withColumn(name, F.element_at(
+                        F.create_map(*pairs), key).cast(typ)
+                        if pairs else F.lit(None).cast(typ))
+                return df
+            hit = joined.isin(lits) if rows else F.lit(False)
+            if mark:
+                return df.withColumn(mark, hit)
+            return df.filter(hit if how == "left_semi" else ~hit)
+        bdf = self.spark.createDataFrame(
+            rows, ", ".join(p for p in (keys, values) if p))
+        if mark:
+            return df.join(F.broadcast(bdf.withColumn(mark, F.lit(True))),
+                           names, "left") \
+                .withColumn(mark, F.coalesce(F.col(mark), F.lit(False)))
+        return df.join(F.broadcast(bdf), names, how)
 
     def _apply_stop_filter(self, df: DataFrame, page_col="page_number") -> DataFrame:
         """Drop rows of stopped seeds at/beyond their captcha page."""
@@ -1142,88 +1099,40 @@ class CrawlEngine:
         # breaks scaling at high core counts disappears.  On a real
         # cluster this spool is the per-wave shuffle/staging file.
         dp = self.spark.sparkContext.defaultParallelism
-        par = max(1, min(4 * dp, (n_selected + 63) // 64))
         spool = os.path.join(self.store.root, "scratch", f"stage-w{wave:05d}")
-        # The wave's first-wins dedup has two physical strategies:
+        # The wave's first-wins dedup is MAP-ONLY: partition the NARROW
+        # frontier by seed_id (politeness bounds each seed's per-wave
+        # volume, so partitions are budget-bounded by construction),
+        # sort within partitions by (seed_id, page_number) and let the
+        # fetch kernel drop in-wave duplicate keys with a local seen-set
+        # (stage.card_dedup_key): "first key wins in per-seed page
+        # order".  The wide rows then go kernel → columnar widen →
+        # spool write in ONE map-side stage: zero wide shuffle, no AQE
+        # barrier.  The only shuffle is the tiny narrow-frontier
+        # repartition.
         #
-        # (a) MAP-ONLY (default): partition the NARROW frontier by
-        #     seed_id (politeness bounds each seed's per-wave volume,
-        #     so partitions are budget-bounded by construction), sort
-        #     within partitions by (seed_id, page_number) and let the
-        #     fetch kernel drop in-wave duplicate keys with a local
-        #     seen-set (stage.card_dedup_key).  The wide rows then go
-        #     kernel → columnar widen → spool write in ONE map-side
-        #     stage: zero wide shuffle, no AQE barrier.  The only
-        #     shuffle is the tiny narrow-frontier repartition.
-        # (b) SHUFFLE: groupBy(key).min_by(full row) — the general
-        #     fallback when the wave has too few seeds to spread (a
-        #     single-seed mega-wave would make (a) serial).
-        #
-        # Both produce identical rows: "first key wins in per-seed
-        # page order" == global min_by(page_number, card_index).
-        is_card = F.col("row_type") == "card"
-        n_seeds = len(self.runtimes)
-        map_only = _DEDUP_STRATEGY == "map_only" or (
-            _DEDUP_STRATEGY == "auto"
-            and (n_seeds >= dp or n_selected <= 256 * dp)
-        )
         # card count + mean price observed DURING the spool write (no
         # separate aggregate job) — consumed by the cold-start adopt
         # path, where the spool's card partition IS the accepted set
         obs_spool = Observation(f"spool-w{wave}")
-        is_card_obs = F.col("row_type") == "card"
-        spool_metrics = (
-            F.count(F.when(is_card_obs, 1)).alias("n_cards"),
-            F.avg(F.when(is_card_obs,
-                         F.coalesce("price", "price_per_month"))).alias("avg_price"),
+        is_card = F.col("row_type") == "card"
+        raw = (
+            selected.repartition(max(1, min(4 * dp, len(self.runtimes))), "seed_id")
+            .sortWithinPartitions("seed_id", "page_number", "card_index")
+            .mapInPandas(
+                make_fetch_parse(self.runtimes, self.web_cfg, in_wave_dedup=True,
+                                 respect_robots=self.respect_robots),
+                model.RAW_STAGE_SCHEMA)
         )
-        if map_only:
-            par_k = max(1, min(4 * dp, n_seeds))
-            raw = (
-                selected.repartition(par_k, "seed_id")
-                .sortWithinPartitions("seed_id", "page_number", "card_index")
-                .mapInPandas(
-                    make_fetch_parse(self.runtimes, self.web_cfg, in_wave_dedup=True,
-                                     respect_robots=self.respect_robots),
-                    model.RAW_STAGE_SCHEMA)
-            )
-            (
-                columnar.widen(raw, self._seed_dim())
-                .observe(obs_spool, *spool_metrics)
-                .write.option("parquet.enable.dictionary", "false")
-                .partitionBy("row_type").mode("overwrite").parquet(spool)
-            )
-        else:
-            raw = (
-                selected.repartition(par, "host", "url")
-                .mapInPandas(make_fetch_parse(self.runtimes, self.web_cfg,
-                                              respect_robots=self.respect_robots),
-                             model.RAW_STAGE_SCHEMA)
-            )
-            parsed = columnar.widen(raw, self._seed_dim())
-            # null deal_url_id (extraction fell through) keys as the
-            # literal "-1" — the reference inserts "-1" into its seen
-            # set, so ALL such cards of one seed collapse to the first
-            # (helpers.py:27-34 default + flat/list.py:57); the same
-            # key is used by _dedup and the seen table, so every path
-            # agrees with the simulator
-            gkey = F.when(
-                is_card,
-                F.concat_ws("|", F.lit("C"), F.col("seed_id"),
-                            F.coalesce(F.col("deal_url_id"), F.lit("-1"))),
-            ).otherwise(
-                F.concat_ws("|", F.lit("O"), F.col("row_type"), F.col("seed_id"),
-                            F.col("page_number"), F.col("card_index"), F.col("fetch_url"))
-            )
-            payload = F.struct(*[f.name for f in model.STAGE_SCHEMA.fields])
-            (
-                parsed.groupBy(gkey.alias("_g"))
-                .agg(F.min_by(payload, F.struct("page_number", "card_index")).alias("_f"))
-                .select("_f.*")
-                .observe(obs_spool, *spool_metrics)
-                .write.option("parquet.enable.dictionary", "false")
-                .partitionBy("row_type").mode("overwrite").parquet(spool)
-            )
+        (
+            columnar.widen(raw, self._seed_dim())
+            .observe(obs_spool,
+                     F.count(F.when(is_card, 1)).alias("n_cards"),
+                     F.avg(F.when(is_card, F.coalesce("price", "price_per_month")))
+                     .alias("avg_price"))
+            .write.option("parquet.enable.dictionary", "false")
+            .partitionBy("row_type").mode("overwrite").parquet(spool)
+        )
         self._tick("spool_write")
         stage = self.spark.read.schema(model.STAGE_SCHEMA).parquet(spool)
 
@@ -1423,14 +1332,8 @@ class CrawlEngine:
                     self.store.read("staged").unionByName(new_cards)
                 )
                 if min_pending:
-                    wm_col = self._lit_map(wm, F.col("seed_id"), "long")
-                    if wm_col is None:  # many-seed fallback: broadcast join
-                        wm_df = self.spark.createDataFrame(
-                            [(sid, w) for sid, w in wm.items()], "seed_id long, wm long"
-                        )
-                        staged = staged.join(F.broadcast(wm_df), "seed_id", "left")
-                    else:
-                        staged = staged.withColumn("wm", wm_col)
+                    staged = self._lookup(staged, list(wm.items()),
+                                          "seed_id long", "wm long")
                     finalize = staged.filter(F.col("page_number") <= F.col("wm")).drop("wm")
                     leftover_df = staged.filter(F.col("page_number") > F.col("wm")).drop("wm") \
                         .select(*[f.name for f in model.STAGED_SCHEMA.fields])
@@ -1441,8 +1344,9 @@ class CrawlEngine:
                     finalize = staged
                     leftover_df = None
                 # this wave's cards are already keep-first-deduped by the
-                # fused stage aggregate; the in-batch pass is only re-run
-                # when staged leftovers from earlier waves can collide
+                # fetch kernel's in-wave seen-set; the in-batch pass is
+                # only re-run when staged leftovers from earlier waves
+                # can collide
                 in_batch = bool(self._staged_nonempty) or bool(min_pending)
                 acc_spool = os.path.join(self.store.root, "scratch", f"accepted-w{wave:05d}")
                 # count + mean price observed DURING the spool write —
@@ -1537,7 +1441,6 @@ class CrawlEngine:
             seen_dk = F.coalesce(F.col("deal_url_id"), F.lit("-1"))
             seen_df = seen_src.select(
                 seen_dk.alias("deal_url_id"), "seed_id",
-                F.xxhash64(F.concat_ws("|", F.col("seed_id"), seen_dk)).alias("key_hash"),
                 F.lit(wave).cast("long").alias("wave"),
             )
         if offers_parts:
@@ -1803,8 +1706,8 @@ class CrawlEngine:
             finalize = finalize.filter(~F.col("seed_id").isin(detail_ids))
         keys = ["seed_id", "_dk"]
         if not in_batch:
-            # caller guarantees in-batch uniqueness (the fused stage
-            # aggregate already kept first per key this wave); only the
+            # caller guarantees in-batch uniqueness (the fetch kernel
+            # already kept first per key this wave); only the
             # seen-set membership check below applies
             batch_first = finalize
         elif approx_rows <= _DEDUP_BROADCAST_ROWS:
@@ -1885,10 +1788,8 @@ class CrawlEngine:
         else:
             pt = self.store.read("parkreg")
         if self._parked_removed:
-            rm = self.spark.createDataFrame(
-                sorted(self._parked_removed), "seed_id long, page_number long")
-            pt = pt.join(F.broadcast(rm), ["seed_id", "page_number"],
-                         "left_anti")
+            pt = self._lookup(pt, sorted(self._parked_removed),
+                              "seed_id long, page_number long", how="left_anti")
         # captcha-stop cancellation, the DF twin of the dict-mode
         # cleanup in _run_wave
         return self._apply_stop_filter(pt)

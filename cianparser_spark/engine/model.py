@@ -62,7 +62,7 @@ FRONTIER_SCHEMA = T.StructType(
 )
 
 SEEN_SCHEMA = T.StructType(
-    _fields(strings=["deal_url_id"], longs=["seed_id", "key_hash", "wave"])
+    _fields(strings=["deal_url_id"], longs=["seed_id", "wave"])
 )
 
 STAGED_SCHEMA = T.StructType(
@@ -123,7 +123,7 @@ PAUSED_SCHEMA = T.StructType(
 # non-local duplicate placeholder inside a dispatched, not-yet-run
 # detail group).  The driver dict is only a CACHE of state derivable
 # from pending frontier group rows; when it outgrows
-# ``ledger_spill_rows`` it spills here once and all later maintenance
+# ``crawler._LEDGER_SPILL_ROWS`` it spills here once and all later maintenance
 # (additions, marker removals, the blocked-keys join, parked-min
 # lookups) runs as DataFrame ops against this table — driver memory
 # stays capped at any detail backlog.

@@ -127,9 +127,10 @@ def make_fetch_parse(seed_runtimes: dict[int, dict], cfg: webgen.WebConfig,
     INSIDE the kernel with a per-partition seen-set: the caller
     guarantees every page of a seed lands in this partition sorted by
     (seed_id, page_number), so "first key wins in partition scan
-    order" equals the shuffle path's global
-    min_by(page_number, card_index) — and the wave then needs NO wide
-    shuffle at all (the spool write becomes map-only).  Politeness
+    order" equals the reference's first-wins in per-seed crawl order,
+    min(page_number, card_index) per key — and the wave then needs NO
+    wide shuffle at all (the spool write is map-only).  With
+    ``in_wave_dedup=False`` every card is emitted.  Politeness
     bounds a seed's per-wave volume, so the per-partition state is
     budget-bounded by construction.
     """

@@ -14,8 +14,11 @@ don't.
 Deterministic: trial i of --seed S always draws the same config, so a
 failure reproduces with ``--seed S --only i``.  Trial parity picks the
 seen-set tier (odd trials run ``bloom_spool=True``: sorted runs; even
-trials the anti-join), so every sweep covers both; each trial's JSON
-line records it.
+trials the anti-join), and ``(trial // 2) % 2 == 1`` forces the
+driver-lookup threshold (``columnar.LIT_LOOKUP_MAX``) to 0, so every
+lookup with rows takes the broadcast-join side instead of plan
+literals.  Any four consecutive trials cover all four combinations;
+each trial's JSON line records both settings.
 
 Usage:
     python scripts/fuzz_crawl.py --seed 0 --n 24
@@ -34,7 +37,7 @@ import tempfile
 sys.path.insert(0, "/root/repo")
 
 from cianparser_spark.corpus import webgen as W
-from cianparser_spark.engine import compat
+from cianparser_spark.engine import columnar, compat, crawler
 from cianparser_spark.engine.crawler import CrawlEngine
 from cianparser_spark.engine.session import get_spark
 from cianparser_spark.semantics.simulator import CrawlSeed, ReferenceSimulator
@@ -194,6 +197,7 @@ def run_trial(spark, rng: random.Random, trial: int,
     info = {
         "trial": trial,
         "bloom_spool": (engine_kw or {}).get("bloom_spool"),
+        "lit_lookup_max": columnar.LIT_LOOKUP_MAX,
         "ok": ok,
         "resume_ok": resume_ok,
         "maint_ok": maint_ok,
@@ -236,13 +240,13 @@ def main() -> int:
                          "must converge back to the simulator rows")
     ap.add_argument("--cpus", type=int, default=4)
     ap.add_argument("--spill", action="store_true",
-                    help="force the parked-ledger spill (ledger_spill_"
-                         "rows=0): every trial runs the derive-mode "
+                    help="force the parked-ledger spill (crawler._LEDGER_"
+                         "SPILL_ROWS=0): every trial runs the derive-mode "
                          "registry path")
     args = ap.parse_args()
-    engine_kw = {}
     if args.spill:
-        engine_kw["ledger_spill_rows"] = 0
+        crawler._LEDGER_SPILL_ROWS = 0
+    lit_default = columnar.LIT_LOOKUP_MAX
 
     spark = get_spark(master=f"local[{args.cpus}]",
                       shuffle_partitions=args.cpus,
@@ -252,10 +256,10 @@ def main() -> int:
         rng = random.Random((args.seed << 20) | trial)
         if args.only is not None and trial != args.only:
             continue
+        columnar.LIT_LOOKUP_MAX = 0 if (trial // 2) % 2 == 1 else lit_default
         info = run_trial(spark, rng, trial, resume=args.resume,
                          maintenance=args.maintenance,
-                         engine_kw=dict(engine_kw,
-                                        bloom_spool=trial % 2 == 1))
+                         engine_kw={"bloom_spool": trial % 2 == 1})
         print(json.dumps(info, ensure_ascii=False), flush=True)
         if not info["ok"]:
             failures += 1

@@ -1,18 +1,14 @@
 """Columnar widen parity tests.
 
-The engine keeps two implementations of some semantics by design:
-
-* the in-kernel dedup key (stage.card_dedup_key, pure Python) must
-  equal the columnar widen's ``deal_url_id`` expressions bit-for-bit —
-  otherwise the map-only wave path under/over-dedups vs the shuffle
-  path;
-* the map-only wave strategy (seed-partitioned + kernel seen-set) and
-  the shuffle strategy (groupBy + min_by) must produce identical
-  accepted offers.
+The engine keeps two implementations of one semantic by design: the
+in-kernel dedup key (stage.card_dedup_key, pure Python) must equal the
+columnar widen's ``deal_url_id`` expressions bit-for-bit — otherwise
+the map-only wave's in-kernel dedup disagrees with the seen table and
+``_dedup``, which key on ``deal_url_id``.
 
 The full bit-match vs the sequential simulator lives in
-tests/test_engine.py; these tests pin the internal pairings directly
-so a future edit to either side fails fast with a small repro.
+tests/test_engine.py; these tests pin the pairing directly so a future
+edit to either side fails fast with a small repro.
 """
 
 from __future__ import annotations
@@ -84,28 +80,3 @@ def test_card_dedup_key_edge_cases():
     assert card_dedup_key('<a href="/relative/path">x</a>', "newobject") == "-1"
     assert card_dedup_key('<a href="ab/cd">x</a>', "flat") == "-1"
 
-
-def test_map_only_equals_shuffle_path(spark, tmp_path, monkeypatch):
-    """The two wave dedup strategies produce identical offers."""
-    import shutil
-
-    from cianparser_spark.engine import crawler
-    from cianparser_spark.engine.crawler import CrawlEngine
-
-    seeds = [
-        CrawlSeed(1, "Казань", "flat", "sale", rooms=(1, 2),
-                  additional_settings={"start_page": 1, "end_page": 3}),
-        CrawlSeed(2, "Москва", "flat", "rent_long", rooms="all",
-                  additional_settings={"start_page": 1, "end_page": 2}),
-    ]
-    results = {}
-    for mode in ("map_only", "shuffle"):
-        d = str(tmp_path / mode)
-        monkeypatch.setattr(crawler, "_DEDUP_STRATEGY", mode)
-        eng = CrawlEngine(spark, d, seeds, web_cfg=CFG, host_tokens=64)
-        eng.run()
-        results[mode] = sorted(
-            tuple(r) for r in eng.offers().collect()
-        )
-        shutil.rmtree(d, ignore_errors=True)
-    assert results["map_only"] == results["shuffle"]

@@ -20,7 +20,7 @@ import tempfile
 import pytest
 
 from cianparser_spark.corpus import webgen as W
-from cianparser_spark.engine import compat
+from cianparser_spark.engine import compat, crawler
 from cianparser_spark.engine.crawler import CrawlEngine
 from cianparser_spark.semantics.simulator import CrawlSeed, ReferenceSimulator
 
@@ -134,8 +134,8 @@ def test_same_wave_emission_dup_not_refetched(spark, tmp_run_dir):
 
 # ------------------------------------------- enforced ledger cap (spill)
 
-def test_ledger_cap_spill_bitmatch(spark, tmp_run_dir):
-    """ENFORCED parked-ledger bound: ledger_spill_rows=0 makes the
+def test_ledger_cap_spill_bitmatch(spark, tmp_run_dir, monkeypatch):
+    """ENFORCED parked-ledger bound: _LEDGER_SPILL_ROWS=0 makes the
     registry spill into the store's parkreg table at its first entry;
     every later consultation (blocked-keys join, parked-min lookup,
     marker removal, captcha purge) runs as DataFrame ops against the
@@ -143,17 +143,18 @@ def test_ledger_cap_spill_bitmatch(spark, tmp_run_dir):
     nearly every card repeats on every page) under detail faults must
     still bit-match the sequential oracle — and the driver dict stays
     empty for the whole run."""
+    monkeypatch.setattr(crawler, "_LEDGER_SPILL_ROWS", 0)
     seeds = [CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
                        with_extra_data=True,
                        additional_settings={"end_page": 10})]
     sim, eng = _bit_match(spark, tmp_run_dir, seeds, RESURRECTION_CFG,
-                          host_tokens=120, ledger_spill_rows=0)
+                          host_tokens=120)
     assert eng._parked_derive, "cap breach must have triggered the spill"
     assert eng._parked_size() == 0  # dict never regrows after the spill
     assert eng.store.table_paths("parkreg")  # the registry is in the store
 
 
-def test_ledger_spill_survives_resume(spark, tmp_run_dir):
+def test_ledger_spill_survives_resume(spark, tmp_run_dir, monkeypatch):
     """A killed run that had spilled must RESUME in derive mode (the
     committed parkreg table is the registry — rebuilding the dict
     could immediately re-violate the cap) and still converge to the
@@ -161,13 +162,14 @@ def test_ledger_spill_survives_resume(spark, tmp_run_dir):
     seeds = [CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
                        with_extra_data=True,
                        additional_settings={"end_page": 10})]
+    monkeypatch.setattr(crawler, "_LEDGER_SPILL_ROWS", 0)
     sim = ReferenceSimulator(RESURRECTION_CFG).run(seeds)
     cut = CrawlEngine(spark, tmp_run_dir, seeds, RESURRECTION_CFG,
-                      host_tokens=120, ledger_spill_rows=0)
+                      host_tokens=120)
     cut.run(max_waves=2)
     assert cut.store.last_wave() == 2
     eng = CrawlEngine(spark, tmp_run_dir, seeds, RESURRECTION_CFG,
-                      host_tokens=120, ledger_spill_rows=0)
+                      host_tokens=120)
     rows = compat.to_reference_rows(eng.run(), seeds)
     assert rows == sim.rows
     if cut._parked_derive:

@@ -568,3 +568,54 @@ def test_resume_ignores_legacy_bloom_table(spark, tmp_run_dir, bloom_spool):
     assert {(r["seed_id"], r["deal_url_id"])
             for r in eng.store.read("seen").collect()} == sim.seen
     assert eng.store.table_paths("bloom") == planted
+
+
+@pytest.mark.parametrize("bloom_spool", [False, True])
+def test_resume_over_parent_era_seen_with_key_hash(spark, tmp_run_dir,
+                                                   bloom_spool):
+    """Seen dirs written before the unread ``key_hash`` column was
+    dropped still carry it.  ``read`` applies the explicit schema, so a
+    crawl resumed over such a dir ignores the column, bit-matches in
+    both modes, and writes its own seen appends without it."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from cianparser_spark.engine import model
+    from cianparser_spark.engine.store import WaveStore
+
+    def columns(d):
+        return pq.read_schema(glob.glob(os.path.join(d, "*.parquet"))[0]).names
+
+    seeds = [CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
+                       additional_settings={"end_page": 4})]
+    sim = ReferenceSimulator(BITMATCH_CFG).run(seeds)
+    CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG, host_tokens=1,
+                bloom_spool=bloom_spool).run(max_waves=1)
+    parent_seen = T.StructType([
+        T.StructField("deal_url_id", T.StringType()),
+        T.StructField("seed_id", T.LongType()),
+        T.StructField("key_hash", T.LongType()),
+        T.StructField("wave", T.LongType())])
+    legacy = WaveStore(spark, tmp_run_dir,
+                       {**model.TABLE_SCHEMAS, "seen": parent_seen},
+                       model.REPLACE_TABLES)
+    seen = legacy.read("seen").withColumn(
+        "key_hash", F.xxhash64(F.concat_ws("|", "seed_id", "deal_url_id")))
+    legacy.commit_wave(legacy.last_wave(), replaces={"seen": seen})
+    planted = legacy.table_paths("seen")
+    assert [columns(d) for d in planted] == [parent_seen.names]
+
+    eng = CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG,
+                      host_tokens=1, bloom_spool=bloom_spool)
+    rows = compat.to_reference_rows(eng.run(), seeds)
+    assert eng.store.last_wave() >= 3
+    assert rows == sim.rows
+    assert {(r["seed_id"], r["deal_url_id"])
+            for r in eng.store.read("seen").collect()} == sim.seen
+    later = [d for d in eng.store.table_paths("seen") if d not in planted]
+    assert later
+    assert all(columns(d) == ["deal_url_id", "seed_id", "wave"]
+               for d in later)
