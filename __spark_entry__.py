@@ -1661,7 +1661,8 @@ def q_frontier_membership(spark, sf_dir):
 
 
 def q_frontier_membership_exact(spark, sf_dir):
-    """The membership wave in the crawler's SPOOL mode: the seen keys
+    """The sorted-run membership wave (engine/seenidx, no longer a
+    crawler tier; kept as the anti-join's yardstick): the seen keys
     (cast to string) become per-bucket sorted string runs
     (seenidx.write_str_runs, built executor-side) and every candidate
     takes the memmap searchsorted probe (seenidx.seen_str_udf) — NO

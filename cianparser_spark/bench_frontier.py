@@ -10,13 +10,16 @@ tier — and runs it at 10,000,000 candidate URLs against a
 
 The key is ``xxhash64`` of the canonical URL
 (``ops.urlnorm.canonical_url_expr``, pure Catalyst codegen).  The
-membership step is the exact tier ``CrawlEngine._exact_unseen`` runs,
-with no prefilter in front of it (the crawler has none):
+membership step runs in two modes, with no prefilter in front of
+either:
 
-- default mode: a ``left_anti`` join against the seen table;
+- default mode: a ``left_anti`` join against the seen table, the
+  exact tier ``CrawlEngine._exact_unseen`` runs;
 - spool mode: ``seenidx.write_str_runs`` + ``seenidx.seen_str_udf``
-  over per-bucket sorted string runs, probing the key CAST TO STRING
-  as the crawler probes its ``seed_id|deal_url_id`` keys.
+  over per-bucket sorted string runs, probing the key CAST TO STRING.
+  The crawler kept such runs for its seen keys until they were
+  deleted for measuring slower than the anti-join; this mode is the
+  yardstick any return of them must beat.
 
 ``BENCH/frontier_scale_r5*.json`` were measured on an earlier int64
 key family (splitmix64 Bloom hashing, int64 sorted runs) that the
@@ -202,9 +205,8 @@ def run_scale_bench(spark: SparkSession, n_keys: int = 100_000_000,
 
         # --- exact tier: one sorted string run per bucket from this
         # wave's delta, written executor-side (cost ∝ delta) into the
-        # wave's own directory — as the crawler commits one seenx dir
-        # per wave; the directory tuple is the probe's listing
-        # generation
+        # wave's own directory (one run dir per wave); the directory
+        # tuple is the probe's listing generation
         t0 = time.time()
         idx_roots += (os.path.join(scratch, f"seenidx-w{w}"),)
         seenidx.write_str_runs(spark.read.parquet(sd), idx_roots[-1],

@@ -2,7 +2,7 @@
 
 The crawl engine no longer uses a Bloom filter: seen-set membership is
 answered by the exact tier alone (``CrawlEngine._exact_unseen``: an
-anti-join against ``seen``, or the sorted runs of engine/seenidx.py).
+anti-join against ``seen``).
 This module remains because the crawl benchmark's per-layer legs
 (perfbench/layers.py) import ``load_spool_filters`` to probe a
 committed ``bloom`` table when a store has one.  Stores written before

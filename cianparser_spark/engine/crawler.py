@@ -8,7 +8,7 @@ micro-batch waves over snapshot-committed tables:
   groupBy-host — kills the single-domain skew) → fused fetch+parse
   (mapInPandas, Arrow) → per-seed ordered finalization (watermarks)
   → first-wins dedup (in-batch keep-first, then the exact seen-set
-  tier: sorted-run probe or anti-join)
+  tier: an anti-join against ``seen``)
   → detail enqueue / offer emission → metrics + lineage → one atomic
   commit per wave.
 
@@ -36,11 +36,11 @@ from them.  Collected rows are O(pages-per-wave), bounded by the
 politeness budget, never O(cards).  Empty tables are never written;
 the stop map and host debt live in driver memory and are rebuilt from
 the committed snapshot on resume.  Seen-set membership is answered
-in two places: ``CrawlEngine._exact_unseen`` for DataFrame rows (the
-wave's cards and the detail-key ledger), and ``_resolve_paused`` for
-the driver-held paused blocker keys (a driver-side sorted-run probe in
-spool mode, a semi-join over ``seen`` otherwise).  Every driver-held
-lookup table reaches Spark through one helper, ``CrawlEngine._lookup``.
+in two places: ``CrawlEngine._exact_unseen`` anti-joins DataFrame rows
+(the wave's cards and the detail-key ledger) against ``seen``, and
+``_resolve_paused`` semi-joins ``seen`` (plus this wave's emissions)
+against the driver-held paused blocker keys.  Every driver-held lookup
+table reaches Spark through one helper, ``CrawlEngine._lookup``.
 """
 
 from __future__ import annotations
@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cianparser_spark.corpus import webgen
-from cianparser_spark.engine import columnar, model, seenidx
+from cianparser_spark.engine import columnar, model
 from cianparser_spark.engine.stage import make_fetch_parse
 from cianparser_spark.engine.store import WaveStore
 from cianparser_spark.semantics import robots
@@ -85,11 +85,6 @@ _DEDUP_BROADCAST_ROWS = 100_000
 _LEDGER_SPILL_ROWS = 50_000
 
 
-def _seen_key(key_col: str = "deal_url_id"):
-    """The string seen-key ``seed_id|<key_col>`` the sorted runs store."""
-    return F.concat_ws("|", F.col("seed_id"), F.col(key_col))
-
-
 class CrawlEngine:
     def __init__(
         self,
@@ -98,7 +93,6 @@ class CrawlEngine:
         seeds: list[CrawlSeed],
         web_cfg: webgen.WebConfig = webgen.DEFAULT_CONFIG,
         host_tokens: int = 64,
-        bloom_buckets: int = 16,
         respect_robots: bool = True,
         verbose: bool = False,
         bloom_spool: bool = False,
@@ -108,20 +102,11 @@ class CrawlEngine:
         self.seeds = seeds
         self.web_cfg = web_cfg
         self.host_tokens = host_tokens
-        # Seen-set membership (_exact_unseen) is exact;
-        # ``bloom_spool`` (default False) picks its tier.  Default
-        # mode anti-joins the committed ``seen`` table.  SPOOL
-        # mode (the 10^10-URL shape) also keeps per-bucket sorted
-        # string runs (``seenx``, engine/seenidx.py) and probes them
-        # map-only, falling back to the anti-join while they are
-        # incomplete.  ``bloom_buckets`` is the runs' routing bucket
-        # count (seenidx.bucket_str).
-        self.bloom_buckets = bloom_buckets
-        self.bloom_spool = bool(bloom_spool)
-        # exact-tier sidecar: full rebuild (replace) past this many
-        # committed run dirs — bounds the probe's per-run cost on long
-        # crawls (see _seenx_update)
-        self.seenx_compact_dirs = 64
+        # ``bloom_spool`` has no effect: seen-set membership
+        # (_exact_unseen) has one tier, an anti-join against ``seen``.
+        # The keyword and the False attribute stay because the crawl
+        # benchmark (perfbench/) still passes and reads them.
+        self.bloom_spool = False
         self.verbose = verbose
         self._t0 = 0.0
         self.runtimes = {s.seed_id: model.seed_runtime(s) for s in seeds}
@@ -141,9 +126,6 @@ class CrawlEngine:
         # driver-cached state, rebuilt from the snapshot on resume
         self._stopped: dict[int, int] | None = None
         self._debt: dict[str, int] = {}
-        # exact-tier sidecar (sorted string runs, spool mode only):
-        # None = completeness not yet checked against the manifest
-        self._seenx_ok: bool | None = None
         self._seen_nonempty: bool | None = None
         self._staged_nonempty: bool | None = None
         self._next_pending: int | None = None
@@ -411,26 +393,21 @@ class CrawlEngine:
         over_set = set(over)
         first_rows = [(r["host"], *tuple(r["_fk"])) for r in demand
                       if r["host"] in over_set]
-        if len(over) < len(demand):
-            in_budget = df.filter(~F.col("host").isin(over)) \
-                .withColumn("_selected", F.lit(True)).drop("_cost", "_krank")
-            ranked = self._select_budget_windows(
-                df.filter(F.col("host").isin(over)), debt, first_rows
-            )
-            return in_budget.unionByName(ranked), False, None, n_blocked
-        return (self._select_budget_windows(df, debt, first_rows),
-                False, None, n_blocked)
+        # over-budget hosts are ranked; the rest are selected outright
+        df = self._lookup(df, [(h,) for h in over], "host string", mark="_over")
+        ranked = self._select_budget_windows(
+            df.filter(F.col("_over")).drop("_over"), debt, first_rows)
+        if len(over) == len(demand):
+            return ranked, False, None, n_blocked
+        in_budget = df.filter(~F.col("_over")) \
+            .withColumn("_selected", F.lit(True)).drop("_cost", "_krank", "_over")
+        return in_budget.unionByName(ranked), False, None, n_blocked
 
     def _select_budget_windows(self, df: DataFrame, debt: dict[str, int],
                                first_rows: list[tuple]) -> DataFrame:
         """Exact two-phase salted selection for over-budget hosts."""
-        if debt:
-            mapping = F.create_map(*[F.lit(x) for kv in debt.items() for x in kv])
-            budget = F.lit(self.host_tokens) - F.coalesce(
-                mapping[F.col("host")], F.lit(0)
-            )
-        else:
-            budget = F.lit(self.host_tokens)
+        df = self._lookup(df, sorted(debt.items()), "host string", "_debt long")
+        budget = F.lit(self.host_tokens) - F.coalesce(F.col("_debt"), F.lit(0))
         df = df.withColumn("_budget", F.greatest(budget, F.lit(0)))
 
         order_cols = ("page_number", "_krank", "seed_id", "card_index", "url")
@@ -465,7 +442,8 @@ class CrawlEngine:
         )
         return df.withColumn(
             "_selected", (survivors & (F.col("_cum2") <= F.col("_budget"))) | force
-        ).drop("_cost", "_krank", "_salt", "_cum1", "_cum2", "_budget", "_is_first")
+        ).drop("_cost", "_krank", "_salt", "_cum1", "_cum2", "_budget", "_debt",
+               "_is_first")
 
     # ------------------------------------------------------------- robots
 
@@ -713,27 +691,10 @@ class CrawlEngine:
         ksmap: dict = {}
         if b_keys:
             # seen-set membership of a driver-held key list, the one
-            # answer outside _exact_unseen: spool mode probes the sorted
-            # runs from the driver, otherwise the seen table (and this
+            # answer outside _exact_unseen: the seen table (and this
             # wave's emissions) is semi-joined against the keys
-            spoolx = (self.bloom_spool and self._seen_nonempty
-                      and self._seenx_usable())
-            if spoolx:
-                # 10^10 shape: membership of a driver-held bounded key
-                # list against the committed seen set = a DRIVER-side
-                # sorted-run memmap probe (the index lives on shared
-                # storage; the driver is just another reader) — no
-                # Spark job, no seen-table scan at all
-                import numpy as np
-
-                arr = np.array([f"{s}|{k}" for s, k in b_keys],
-                               dtype=object)
-                hit = seenidx.probe_str_runs(
-                    tuple(sorted(self.store.table_paths("seenx"))),
-                    arr, self.bloom_buckets)
-                emitted = {bk for bk, h in zip(b_keys, hit) if h}
             seen_srcs = []
-            if self._seen_nonempty and not spoolx:
+            if self._seen_nonempty:
                 seen_srcs.append(self.store.read("seen").select(
                     "seed_id", F.col("deal_url_id").alias("key")))
             if emitted_keys_df is not None:
@@ -745,7 +706,7 @@ class CrawlEngine:
                 hits = self._lookup(s, b_keys, "seed_id long, key string",
                                     how="left_semi") \
                     .select("seed_id", "key")
-                emitted |= {(int(r["seed_id"]), r["key"]) for r in hits.collect()}
+                emitted = {(int(r["seed_id"]), r["key"]) for r in hits.collect()}
             if self._ks_nonempty:
                 ks = self._lookup(self.store.read("keystate"), b_keys,
                                   "seed_id long, key string", how="left_semi")
@@ -862,7 +823,8 @@ class CrawlEngine:
           whose key is / is not present.
 
         Small tables (watermarks, retry-burn counters, parked keys,
-        per-host first-priority rows, seed templates) become plan
+        per-host first-priority rows, seed templates, over-budget
+        hosts, 429 debt, captcha stops, invalidated pages) become plan
         literals — one ``create_map`` per value column, an ``isin`` on
         the ``\\x1f``-joined key for marks and filters — instead of a
         createDataFrame + broadcast join: every broadcast of a
@@ -905,11 +867,10 @@ class CrawlEngine:
         """Drop rows of stopped seeds at/beyond their captcha page."""
         if not self._stopped:
             return df
-        cond = None
-        for sid, p in self._stopped.items():
-            c = (F.col("seed_id") == sid) & (F.col(page_col) >= p)
-            cond = c if cond is None else cond | c
-        return df.filter(~cond)
+        return (self._lookup(df, sorted(self._stopped.items()),
+                             "seed_id long", "_stop long")
+                .filter(F.col("_stop").isNull() | (F.col(page_col) < F.col("_stop")))
+                .select(*df.columns))
 
     def _stop_ok(self, sid: int, page: int) -> bool:
         p = self._stopped.get(sid)
@@ -944,11 +905,10 @@ class CrawlEngine:
         re-crawl them: their offers leave the table, their deal-url-ids
         leave the seen set, and fresh frontier rows re-fetch the pages.
 
-        Deletes rewrite the seen table.  In spool mode the sorted runs,
-        which cannot delete, are rebuilt from the post-invalidation
-        seen table in the same commit, so this method costs O(seen),
-        not O(invalidated keys).  Offers first seen on OTHER pages keep
-        their seen keys, so a re-crawl never duplicates them.
+        Deletes rewrite the seen and offers tables (REPLACE commits),
+        so this method costs O(seen), not O(invalidated keys).  Offers
+        first seen on OTHER pages keep their seen keys, so a re-crawl
+        never duplicates them.
 
         Known limitation (documented, accepted): only the invalidated
         pages are re-fetched.  An offer that FIRST won on an
@@ -974,12 +934,11 @@ class CrawlEngine:
         are per-frontier-row and replay deterministically from 0."""
         self._load_state()
         marker = self.store.last_wave() + 1
-        cond = None
-        for sid, p in pages:
-            c = (F.col("seed_id") == sid) & (F.col("page_number") == p)
-            cond = c if cond is None else cond | c
+        page_rows = sorted(set(pages))
+        page_keys = "seed_id long, page_number long"
         offers_cur = self.store.read("offers")
-        invalid_keys = offers_cur.filter(cond).select(
+        invalid_keys = self._lookup(
+            offers_cur, page_rows, page_keys, how="left_semi").select(
             "seed_id",
             F.coalesce(F.col("deal_url_id"), F.lit("-1")).alias("deal_url_id"),
         )
@@ -991,28 +950,14 @@ class CrawlEngine:
             rows.append((rt["template"].format(p), "list",
                          rt["template"].split("/")[2], None,
                          sid, p, -1, 0, marker + 1))
-        adopt_replace = None
-        if self.bloom_spool:
-            # sorted runs are immutable: rebuild them from the
-            # post-invalidation seen set in the same atomic commit
-            sx_spool = os.path.join(self.store.root, "scratch",
-                                    f"seenx-inval-{marker:05d}")
-            seenidx.write_str_runs(
-                new_seen.select(_seen_key().alias("key")),
-                sx_spool, self.bloom_buckets, f"w{marker:05d}")
-            adopt_replace = {"seenx": sx_spool}
-        # seen rewritten in every branch: recheck sidecar coverage
-        # before the next consult (the spool branch's rebuild passes
-        # the recheck by its replace-commit naming)
-        self._seenx_ok = None
         self.store.commit_wave(
             marker,
             appends={"frontier": self.spark.createDataFrame(rows, model.FRONTIER_SCHEMA)},
             replaces={
-                "offers": offers_cur.filter(~cond),
+                "offers": self._lookup(offers_cur, page_rows, page_keys,
+                                       how="left_anti"),
                 "seen": new_seen,
             },
-            adopt_replace=adopt_replace,
         )
         self._next_pending = len(rows)
         self._seen_nonempty = None  # recompute from the rewritten table
@@ -1370,7 +1315,6 @@ class CrawlEngine:
         # --- split accepted: emit now vs build page-coupled detail groups
         appends: dict[str, DataFrame] = {}
         adopt: dict[str, str] = {}
-        adopt_replace: dict[str, str] = {}
         replaces: dict[str, DataFrame] = {}
         frontier_parts = []
         if n_deferred:
@@ -1493,29 +1437,6 @@ class CrawlEngine:
             fr_thread = threading.Thread(target=_write_frontier, daemon=True)
             fr_thread.start()
 
-        def _finish_frontier() -> int:
-            """Join the frontier spool write (idempotent); the paused
-            deadlock invariant and the sorted-run update depend on its
-            count."""
-            nonlocal fr_thread, n_frontier_next
-            if fr_thread is not None:
-                fr_thread.join()
-                fr_thread = None
-                if "err" in fr_box:
-                    raise fr_box["err"]
-                n_frontier_next = fr_box.get("n", 0)
-                if n_frontier_next:
-                    adopt["frontier"] = fr_spool
-                self._tick("frontier_count")
-            if self._paused and not n_frontier_next:
-                # cannot happen: every paused walk blocks on a key
-                # whose winning occurrence sits in a dispatched or
-                # earlier-paused group, and blocking edges point
-                # strictly backward in (page, card) order — the
-                # chain always bottoms out at a dispatchable group
-                raise RuntimeError(
-                    f"paused detail groups deadlocked: {sorted(self._paused)}")
-            return n_frontier_next
         if extra_ids and (dead_group_rows or self._paused or self._paused_dirty):
             replaces["paused"] = (
                 [(st["blocker"], json.dumps(st["rest"], ensure_ascii=False),
@@ -1599,26 +1520,28 @@ class CrawlEngine:
             n_seen = int(obs_seen.get["n"])
             if n_seen:
                 adopt["seen"] = seen_spool
-            if self.bloom_spool and n_seen:
-                if _finish_frontier():
-                    # the sorted runs only serve FUTURE waves' dedup;
-                    # on the final wave (empty frontier) nothing will
-                    # read them — don't build the index nobody consults
-                    self._seenx_update(
-                        self.spark.read.schema(model.TABLE_SCHEMAS["seen"])
-                        .parquet(seen_spool), wave, adopt, adopt_replace)
-                    self._tick("seenx_update")
-                else:
-                    # final wave: the seen append lands without a
-                    # sidecar update — recheck completeness before any
-                    # later consult on this engine
-                    self._seenx_ok = None
 
-        n_frontier_next = _finish_frontier()  # no-op if already joined
+        if fr_thread is not None:
+            # join the frontier spool write: the paused deadlock
+            # invariant below and the next wave's exec mode need its count
+            fr_thread.join()
+            if "err" in fr_box:
+                raise fr_box["err"]
+            n_frontier_next = fr_box.get("n", 0)
+            if n_frontier_next:
+                adopt["frontier"] = fr_spool
+            self._tick("frontier_count")
+        if self._paused and not n_frontier_next:
+            # cannot happen: every paused walk blocks on a key whose
+            # winning occurrence sits in a dispatched or earlier-paused
+            # group, and blocking edges point strictly backward in
+            # (page, card) order — the chain always bottoms out at a
+            # dispatchable group
+            raise RuntimeError(
+                f"paused detail groups deadlocked: {sorted(self._paused)}")
         self._commit_parked(wave, replaces)
         self.store.commit_wave(wave, appends=appends, replaces=replaces,
-                               adopt=adopt,
-                               adopt_replace=adopt_replace or None)
+                               adopt=adopt)
         self._parked_wave_reset()
         self._tick("commit")
         self._next_pending = n_frontier_next
@@ -1668,8 +1591,8 @@ class CrawlEngine:
     def _dedup(self, finalize: DataFrame, approx_rows: int = 0,
                in_batch: bool = True, detail_ids: list[int] | None = None) -> DataFrame:
         """First-wins dedup in crawl order: keep-first inside the batch,
-        then the exact seen-set tier (``_exact_unseen``: sorted-run
-        probe or anti-join; A1/J4 in SURVEY.md §2.6).
+        then the exact seen-set tier (``_exact_unseen``'s anti-join;
+        A1/J4 in SURVEY.md §2.6).
 
         Keep-first never shuffles the wide card rows when it can avoid
         it: winner selection runs on FOUR narrow columns
@@ -1687,7 +1610,7 @@ class CrawlEngine:
         (seed_id, deal_url_id) group.
 
         Null deal_url_id keys as the literal "-1" in every path (group
-        keys, seen table, sorted runs) — the reference's extractor
+        keys, seen table) — the reference's extractor
         default, so all null-key cards of a seed collapse to the first
         exactly like its seen-set does (helpers.py:34 + flat/list.py:57).
 
@@ -1741,18 +1664,8 @@ class CrawlEngine:
 
     def _exact_unseen(self, df: DataFrame, key_col: str) -> DataFrame:
         """Rows of ``df`` whose ``(seed_id, key_col)`` is NOT in the
-        committed seen set — the exact tier.  Spool mode with a
-        complete sidecar probes the per-bucket sorted runs
-        (engine/seenidx.py) in one map-only pass: no per-wave
-        rescan/shuffle of the full seen table, cost ∝ rows ×
-        log(run).  Otherwise (default mode, or a sidecar
-        ``_seenx_usable`` finds incomplete) an anti-join against
+        committed seen set — the exact tier: an anti-join against
         ``seen``."""
-        if self.bloom_spool and self._seenx_usable():
-            sx = seenidx.seen_str_udf(
-                tuple(sorted(self.store.table_paths("seenx"))),
-                self.bloom_buckets)
-            return df.filter(~sx(_seen_key(key_col)))
         return df.join(
             self.store.read("seen").select(
                 "seed_id", F.col("deal_url_id").alias(key_col)),
@@ -1825,84 +1738,3 @@ class CrawlEngine:
         self._parked_removed = set()
         self._parked_readds = []
         self._parked_spill_rows = None
-
-    def _seenx_usable(self) -> bool:
-        """Exact-tier completeness gate: the sorted-run sidecar may be
-        consulted only if EVERY committed seen append has a matching
-        seenx append (same wave id in the committed dir name — both
-        ride one atomic manifest publish, so a mid-wave crash can't
-        split them).  A legacy store, a non-spool interlude, or a
-        final-wave seen append (nothing was going to read it) fails
-        the check; the exact leg then falls back to the anti-join and
-        the next spool wave HEALS the sidecar with a full rebuild.
-
-        Coverage rule: a seen wave is covered if its id appears among
-        the seenx dirs OR is ≤ the OLDEST seenx dir's wave — a heal or
-        invalidation rebuild commits with REPLACE semantics, so the
-        oldest surviving seenx dir covered the whole seen table as of
-        its commit (earlier seen waves included)."""
-        if self._seenx_ok is None:
-            def waves(name: str) -> set[int] | None:
-                """Wave ids of the table's committed dirs; None if any
-                dir has no parseable wave id — store.compact rewrites
-                appends into 'c<version>-...' dirs and merge into
-                'm...' dirs, which erase the pairing evidence.  seen
-                must FAIL CLOSED on those (review-found: a compacted
-                seen table made the gate vacuously true while seenx
-                lacked the final wave's keys)."""
-                out: set[int] = set()
-                for d in self.store.table_paths(name):
-                    base = os.path.basename(d)
-                    if not base.startswith("w"):
-                        return None
-                    try:
-                        out.add(int(base[1:].split("-", 1)[0]))
-                    except ValueError:
-                        return None
-                return out
-            sw, xw = waves("seen"), waves("seenx")
-            # unparseable seenx dirs only ever ADD coverage, but the
-            # conservative reading (treat as absent) is still correct
-            self._seenx_ok = (sw is not None and xw is not None
-                              and bool(xw) and all(
-                                  w in xw or w <= min(xw) for w in sw))
-        return self._seenx_ok
-
-    def _seenx_update(self, new_seen: DataFrame, wave: int,
-                      adopt: dict, adopt_replace: dict) -> None:
-        """Maintain the exact-tier sorted-run sidecar for this wave's
-        seen delta (spool mode): per-bucket sorted string runs written
-        executor-side into scratch, committed by rename atomically with
-        the seen append.  An incomplete sidecar (legacy store / mode
-        switch) is healed here instead: one full rebuild from the
-        committed seen table ∪ the delta, committed with REPLACE
-        semantics.  Cost ∝ delta on the steady path, ∝ seen once on
-        heal."""
-        sx_spool = os.path.join(self.store.root, "scratch",
-                                f"seenx-w{wave:05d}")
-        key = _seen_key()
-        delta = new_seen.select(key.alias("key"))
-        # COMPACTION: runs accumulate one per bucket per wave and the
-        # probe pays a searchsorted per run — on a 10^4-wave crawl the
-        # per-probe run count would itself become the cost.  Past the
-        # dir threshold the delta write becomes a full rebuild with
-        # REPLACE semantics (the heal path below): one committed dir,
-        # one run per bucket, cost ∝ seen once per interval — the
-        # sidecar's analog of store.compact's file compaction.
-        compacting = (len(self.store.table_paths("seenx"))
-                      >= self.seenx_compact_dirs)
-        if self._seenx_usable() and not compacting:
-            seenidx.write_str_runs(delta, sx_spool, self.bloom_buckets,
-                                   f"w{wave:05d}")
-            adopt["seenx"] = sx_spool
-        else:
-            full = delta
-            if self._seen_nonempty is not False:
-                # unknown counts as nonempty: union with an empty seen
-                # table is harmless, omitting a nonempty one is not
-                full = self.store.read("seen").select(
-                    key.alias("key")).unionByName(delta)
-            seenidx.write_str_runs(full, sx_spool, self.bloom_buckets,
-                                   f"heal-w{wave:05d}")
-            adopt_replace["seenx"] = sx_spool
-            self._seenx_ok = True

@@ -1,9 +1,16 @@
-"""Sorted string-key runs — the EXACT tier of the crawler's seen set.
+"""Sorted string-key runs: an exact seen-set index kept on disk.
 
-Every wave's candidates need an exact "seen?" answer.  An anti-join
-against ``seen`` gives one, but rescans and reshuffles the whole seen
-table every wave — O(seen) work per wave.  In spool mode the crawler
-instead keeps the seen keys as disk-resident sorted runs, bucketed by
+The crawler does not use this module.  Its one exact tier is
+``CrawlEngine._exact_unseen``'s anti-join against ``seen``, which
+measured faster than these runs on every workload tried (931k vs 589k
+URLs/s in ``bench_frontier`` at 2M candidates vs 1M seen; every
+multi-wave crawl measured).  The runs remain as the Spark side of the
+``frontier_membership_exact`` contract query, the spool leg of
+``bench_frontier``, and the ``seenidx.*`` legs of perfbench, which
+probe any ``seenx`` table a store written by an older crawler still
+lists.
+
+The seen keys are disk-resident sorted runs, bucketed by
 ``bucket_str``:
 
     root/bucket=<b>/run-<tag>.skeys
@@ -16,10 +23,9 @@ instead keeps the seen keys as disk-resident sorted runs, bucketed by
   file is ``np.memmap``-ed and probed with ``np.searchsorted`` — a
   binary search touches O(log run_size) pages per key.  No shuffle,
   no hash-relation build, no O(seen) scan.
-* **Runs accumulate** one per wave per bucket; the crawler bounds the
-  per-probe run count by rebuilding the whole index (REPLACE
-  semantics) once 64 run directories are committed
-  (``CrawlEngine._seenx_update``).
+* **Runs accumulate** one per write per bucket; a caller that writes
+  one directory per wave pays one ``searchsorted`` per run per probe,
+  so it bounds the run count by rewriting the whole index now and then.
 
 Exactness: the runs store the seen KEYS themselves, so a probe
 hit/miss is exactly the ``left_anti`` answer for that key column.
@@ -37,8 +43,8 @@ import uuid
 import numpy as np
 import pandas as pd
 
-# The crawl engine's seen key is the STRING "seed_id|deal_url_id"
-# (first-wins identity, reference flat/list.py:57-68).  Each bucket's
+# A seen key is a STRING; the crawler's first-wins identity in this
+# form is "seed_id|deal_url_id" (reference flat/list.py:57-68).  Each bucket's
 # run stores its keys as a sorted FIXED-WIDTH bytes array (numpy
 # 'S<w>', w = the run's longest UTF-8 key): fully exact (no hash
 # anywhere in the stored identity — padding is insignificant in numpy

@@ -71,19 +71,17 @@ class WaveStore:
 
     def commit_wave(self, wave: int, appends: dict[str, DataFrame] | None = None,
                     replaces: dict[str, DataFrame] | None = None,
-                    adopt: dict[str, str] | None = None,
-                    adopt_replace: dict[str, str] | None = None) -> None:
+                    adopt: dict[str, str] | None = None) -> None:
         """Write all tables' data, then publish ONE manifest atomically.
 
         ``adopt`` maps table → an already-written parquet directory
         (a scratch spool) that becomes an append by rename — zero-copy
         commit of data the wave already materialized.  Writes run first
         so any plan that still reads a to-be-adopted spool executes
-        before the directory moves.  ``adopt_replace`` is the same
-        rename commit with REPLACE semantics: the adopted directory
-        becomes the table's only data dir (sidecar rebuilds — e.g. the
-        seen-index heal — use it; superseded dirs become unreferenced
-        and fall to ``vacuum``).
+        before the directory moves.  Tables the call does not name
+        keep their committed dirs, including tables no current schema
+        lists (a legacy store's ``bloom`` or ``seenx``): they are
+        carried forward unread.
         """
         snap = self._load_snapshot()
         tables = {k: list(v) for k, v in snap["tables"].items()}
@@ -101,12 +99,6 @@ class WaveStore:
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             os.rename(src, dst)
             tables.setdefault(name, []).append(rel)
-        for name, src in (adopt_replace or {}).items():
-            rel = os.path.join("data", name, f"w{wave:05d}-{uuid.uuid4().hex[:8]}")
-            dst = os.path.join(self.root, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.rename(src, dst)
-            tables[name] = [rel]
 
         self._publish(tables, wave, snap["version"])
 
@@ -334,8 +326,8 @@ class WaveStore:
 
     def table_paths(self, name: str) -> list[str]:
         """Absolute data directories of the CURRENT snapshot for one
-        table — for readers that bypass Spark (e.g. the sorted-run
-        probe's per-executor memmaps)."""
+        table — for readers that bypass Spark (e.g. a memmap probe of
+        a legacy store's sorted-run files)."""
         snap = self._load_snapshot()
         return [os.path.join(self.root, d)
                 for d in snap["tables"].get(name, [])]

@@ -67,8 +67,8 @@ PICKS = [
      "ONE LeftAnti join of the candidate scan against the seen keys, "
      "no Python anywhere in the plan and no prefilter in front of it "
      "(CrawlEngine._exact_unseen builds the same join)"),
-    ("frontier_membership_exact", "the crawler's spool-mode membership "
-     "wave (engine/seenidx string runs): ONE map-only ArrowEvalPython "
+    ("frontier_membership_exact", "the sorted-run membership wave "
+     "(engine/seenidx string runs, no longer a crawler tier): ONE map-only ArrowEvalPython "
      "run probe over the candidate scan with NO join operator in the "
      "plan at all; the seen table contributes zero scan, zero exchange, "
      "zero hash relation (its keys live in the per-bucket run files the "

@@ -12,13 +12,10 @@ cover the branches we know about; the fuzz hunts interactions we
 don't.
 
 Deterministic: trial i of --seed S always draws the same config, so a
-failure reproduces with ``--seed S --only i``.  Trial parity picks the
-seen-set tier (odd trials run ``bloom_spool=True``: sorted runs; even
-trials the anti-join), and ``(trial // 2) % 2 == 1`` forces the
+failure reproduces with ``--seed S --only i``.  Odd trials force the
 driver-lookup threshold (``columnar.LIT_LOOKUP_MAX``) to 0, so every
 lookup with rows takes the broadcast-join side instead of plan
-literals.  Any four consecutive trials cover all four combinations;
-each trial's JSON line records both settings.
+literals; each trial's JSON line records the threshold.
 
 Usage:
     python scripts/fuzz_crawl.py --seed 0 --n 24
@@ -107,8 +104,7 @@ def draw_seeds(rng: random.Random, trial: int) -> list[CrawlSeed]:
 
 
 def run_trial(spark, rng: random.Random, trial: int,
-              resume: bool = False, maintenance: bool = False,
-              engine_kw: dict | None = None) -> dict:
+              resume: bool = False, maintenance: bool = False) -> dict:
     cfg = draw_config(rng)
     seeds = draw_seeds(rng, trial)
     host_tokens = rng.choice([3, 8, 24, 80, 256])
@@ -128,8 +124,7 @@ def run_trial(spark, rng: random.Random, trial: int,
     try:
         eng = CrawlEngine(spark, run_dir, seeds, cfg,
                           host_tokens=host_tokens,
-                          respect_robots=respect_robots,
-                          **(engine_kw or {}))
+                          respect_robots=respect_robots)
         rows = compat.to_reference_rows(eng.run(), seeds)
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)
@@ -142,12 +137,10 @@ def run_trial(spark, rng: random.Random, trial: int,
         rdir = tempfile.mkdtemp(prefix=f"fuzzr{trial}_")
         try:
             CrawlEngine(spark, rdir, seeds, cfg, host_tokens=host_tokens,
-                        respect_robots=respect_robots,
-                        **(engine_kw or {})).run(max_waves=cut)
+                        respect_robots=respect_robots).run(max_waves=cut)
             r2 = CrawlEngine(spark, rdir, seeds, cfg,
                              host_tokens=host_tokens,
-                             respect_robots=respect_robots,
-                             **(engine_kw or {})).run()
+                             respect_robots=respect_robots).run()
             resume_ok = compat.to_reference_rows(r2, seeds) == sim.rows
         finally:
             shutil.rmtree(rdir, ignore_errors=True)
@@ -178,8 +171,7 @@ def run_trial(spark, rng: random.Random, trial: int,
         try:
             e3 = CrawlEngine(spark, mdir, seeds, cfg,
                              host_tokens=host_tokens,
-                             respect_robots=respect_robots,
-                             **(engine_kw or {}))
+                             respect_robots=respect_robots)
             e3.run()
             e3.store.compact("offers")
             e3.store.compact("seen")
@@ -196,7 +188,6 @@ def run_trial(spark, rng: random.Random, trial: int,
           and maint_ok is not False)
     info = {
         "trial": trial,
-        "bloom_spool": (engine_kw or {}).get("bloom_spool"),
         "lit_lookup_max": columnar.LIT_LOOKUP_MAX,
         "ok": ok,
         "resume_ok": resume_ok,
@@ -256,10 +247,9 @@ def main() -> int:
         rng = random.Random((args.seed << 20) | trial)
         if args.only is not None and trial != args.only:
             continue
-        columnar.LIT_LOOKUP_MAX = 0 if (trial // 2) % 2 == 1 else lit_default
+        columnar.LIT_LOOKUP_MAX = 0 if trial % 2 == 1 else lit_default
         info = run_trial(spark, rng, trial, resume=args.resume,
-                         maintenance=args.maintenance,
-                         engine_kw={"bloom_spool": trial % 2 == 1})
+                         maintenance=args.maintenance)
         print(json.dumps(info, ensure_ascii=False), flush=True)
         if not info["ok"]:
             failures += 1

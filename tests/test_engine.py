@@ -215,15 +215,30 @@ def test_invalidate_and_recrawl_idempotent(spark, tmp_run_dir):
     crawl (no re-accepted URL is lost and none duplicates)."""
     seed = CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
                      additional_settings={"end_page": 3})
-    eng = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG, host_tokens=2,
-                      bloom_buckets=4)
+    eng = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG, host_tokens=2)
     before = compat.to_reference_rows(eng.run(), [seed])
-    n_seen_before = eng.store.read("seen").count()
+    seen_before = {(r["seed_id"], r["deal_url_id"])
+                   for r in eng.store.read("seen").collect()}
+    page2_keys = {(r["seed_id"], r["deal_url_id"] or "-1")
+                  for r in eng.store.read("offers")
+                  .filter(F.col("page_number") == 2).collect()}
+    assert page2_keys
+    marker = eng.store.last_wave() + 1
 
     after = compat.to_reference_rows(
         eng.invalidate_and_recrawl([(1, 2)]), [seed])
     assert after == before
-    assert eng.store.read("seen").count() == n_seen_before
+    # the invalidation commit rewrote seen without page 2's keys; every
+    # key that survived it keeps its original wave, and the re-crawl
+    # added back exactly page 2's keys
+    seen_rows = eng.store.read("seen").collect()
+    assert len(seen_rows) == len(seen_before)
+    kept = {(r["seed_id"], r["deal_url_id"]) for r in seen_rows
+            if r["wave"] < marker}
+    added = {(r["seed_id"], r["deal_url_id"]) for r in seen_rows
+             if r["wave"] > marker}
+    assert kept == seen_before - page2_keys
+    assert added == page2_keys
     # no (seed, page, card) duplicates snuck in
     off = eng.store.read("offers")
     assert off.count() == off.select("seed_id", "page_number", "card_index").distinct().count()
@@ -258,7 +273,7 @@ def test_bloom_prefilter_never_drops_unseen(spark, tmp_run_dir, monkeypatch):
     seed = CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
                      additional_settings={"end_page": 8})
     sim = ReferenceSimulator(BITMATCH_CFG).run([seed])
-    kw = dict(host_tokens=2, bloom_buckets=4)
+    kw = dict(host_tokens=2)
     CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG, **kw).run(max_waves=2)
     reads = []
     read = WaveStore.read
@@ -271,38 +286,6 @@ def test_bloom_prefilter_never_drops_unseen(spark, tmp_run_dir, monkeypatch):
     assert rows == sim.rows
     assert reads and "bloom" not in reads
     assert eng.store.table_paths("bloom") == []
-
-
-# ------------------------------------------------- SPOOL sidecar mode
-
-def test_bloom_spool_bitmatch_and_blob_parity(spark, tmp_run_dir):
-    """bloom_spool=True (the 10^10-URL shape: the exact tier probes
-    sorted string runs) must bit-match the sequential oracle."""
-    seed = CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
-                     additional_settings={"end_page": 4})
-    sim = ReferenceSimulator(BITMATCH_CFG).run([seed])
-    spool = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG,
-                        host_tokens=2, bloom_buckets=4, bloom_spool=True)
-    assert spool.bloom_spool
-    rows = compat.to_reference_rows(spool.run(), [seed])
-    assert rows == sim.rows
-
-
-def test_bloom_spool_resume_forces_spool_probe(spark, tmp_run_dir):
-    """A resumed spool engine finds the committed sorted runs complete
-    and probes them for every remaining wave — bit-match proves the
-    executor-side run probe is safety-preserving."""
-    seeds = [CrawlSeed(1, "Москва", "flat", "sale", rooms=(1, 2),
-                       additional_settings={"end_page": 3})]
-    e1 = CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG,
-                     host_tokens=2, bloom_spool=True)
-    e1.run(max_waves=2)
-    assert e1.store.last_wave() == 2
-    e2 = CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG,
-                     host_tokens=2, bloom_spool=True)
-    assert e2.bloom_spool and e2._seenx_usable()
-    resumed = compat.to_reference_rows(e2.run(), seeds)
-    assert resumed == ReferenceSimulator(BITMATCH_CFG).run(seeds).rows
 
 
 def test_identical_seeds_independent_attempt_counters(spark, tmp_run_dir):
@@ -325,91 +308,6 @@ def test_identical_seeds_independent_attempt_counters(spark, tmp_run_dir):
     assert rows == both.rows
 
 
-def test_seenx_heal_on_mode_switch(spark, tmp_run_dir):
-    """A store whose first waves ran WITHOUT the exact-tier sidecar
-    (non-spool mode) and is then resumed in spool mode must detect the
-    incomplete seenx table, fall back to the anti-join for that wave,
-    and HEAL the sidecar (full rebuild, replace-committed) — the
-    resumed crawl stays bit-identical and later consults are exact."""
-    seeds = [CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
-                       additional_settings={"end_page": 4})]
-    # host_tokens=1 -> one list page per wave, so the mode switch and
-    # the heal both land genuinely MID-crawl (frontier still pending)
-    e1 = CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG,
-                     host_tokens=1, bloom_spool=False)
-    e1.run(max_waves=2)
-    e2 = CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG,
-                     host_tokens=1, bloom_spool=True)
-    assert not e2._seenx_usable()  # legacy waves lack seenx
-    e2.run(max_waves=1)  # one mid-crawl wave: fallback join + HEAL
-    # heal happened: a fresh engine view finds the sidecar complete,
-    # and the healed runs agree with the committed seen table exactly
-    e3 = CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG,
-                     host_tokens=1, bloom_spool=True)
-    assert e3._seenx_usable()
-    import numpy as np
-
-    from cianparser_spark.engine import seenidx
-
-    seen_keys = sorted(
-        f"{r['seed_id']}|{r['deal_url_id']}"
-        for r in e3.store.read("seen").collect())
-    dirs = tuple(sorted(e3.store.table_paths("seenx")))
-    got = seenidx.probe_str_runs(
-        dirs, np.array(seen_keys + ["1|absent", "2|nope"], dtype=object),
-        e3.bloom_buckets)
-    assert got[:len(seen_keys)].all() and not got[len(seen_keys):].any()
-    # finish on the healed sidecar: still bit-identical to the oracle;
-    # the completed store then shows the DESIGNED final-wave lag
-    # (nothing in this run reads it)
-    resumed = compat.to_reference_rows(e3.run(), seeds)
-    assert resumed == ReferenceSimulator(BITMATCH_CFG).run(seeds).rows
-
-
-def test_invalidate_and_recrawl_spool_mode(spark, tmp_run_dir):
-    """Re-crawl invalidation in SPOOL mode: the sorted-run exact tier
-    is rebuilt (replace-committed) with the seen table, and the
-    re-crawled table is bit-identical to the original crawl."""
-    seed = CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
-                     additional_settings={"end_page": 3})
-    eng = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG,
-                      host_tokens=2, bloom_buckets=4, bloom_spool=True)
-    before = compat.to_reference_rows(eng.run(), [seed])
-    n_seen_before = eng.store.read("seen").count()
-    after = compat.to_reference_rows(
-        eng.invalidate_and_recrawl([(1, 2)]), [seed])
-    assert after == before
-    assert eng.store.read("seen").count() == n_seen_before
-    # the rebuild REPLACED the sidecar with exactly the
-    # post-invalidation seen set: every key that SURVIVED the
-    # invalidation probes True, every re-crawl addition (wave >
-    # marker, not re-won from an earlier wave) probes False.  (The
-    # completed store then shows the designed final-wave lag — the
-    # re-crawl's own last wave appends seen without a sidecar nothing
-    # will read — so usability is deliberately NOT asserted here.)
-    import os
-
-    import numpy as np
-
-    from cianparser_spark.engine import seenidx
-
-    dirs = eng.store.table_paths("seenx")
-    assert len(dirs) == 1  # replace semantics: single committed dir
-    marker = int(os.path.basename(dirs[0])[1:].split("-", 1)[0])
-    seen_rows = eng.store.read("seen").collect()
-    kept = sorted({f"{r['seed_id']}|{r['deal_url_id']}"
-                   for r in seen_rows if r["wave"] <= marker})
-    added = sorted({f"{r['seed_id']}|{r['deal_url_id']}"
-                    for r in seen_rows if r["wave"] > marker}
-                   - {f"{r['seed_id']}|{r['deal_url_id']}"
-                      for r in seen_rows if r["wave"] <= marker})
-    got = seenidx.probe_str_runs(
-        tuple(dirs), np.array(kept + added, dtype=object),
-        eng.bloom_buckets)
-    assert got[:len(kept)].all()
-    assert not got[len(kept):].any()
-
-
 def test_bitmatch_two_seeds_tight_budget(spark, tmp_run_dir):
     """Two seeds sharing one host at host_tokens=2: each wave after the
     first consults the seen set built by earlier waves, and the crawl
@@ -421,109 +319,49 @@ def test_bitmatch_two_seeds_tight_budget(spark, tmp_run_dir):
     _bit_match(spark, tmp_run_dir, seeds, BITMATCH_CFG, host_tokens=2)
 
 
-def test_seenx_compaction_bounds_run_dirs(spark, tmp_run_dir):
-    """Long spool crawls must not accumulate one seenx dir per wave
-    forever (the probe pays a searchsorted per run): past the
-    threshold the delta write becomes a replace-committed full
-    rebuild, so committed dirs stay bounded and the crawl stays
-    bit-identical."""
-    seeds = [CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
-                       additional_settings={"end_page": 4})]
-    eng = CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG,
-                      host_tokens=1, bloom_spool=True)
-    eng.seenx_compact_dirs = 2  # force a compaction mid-crawl
-    rows = compat.to_reference_rows(eng.run(), seeds)
-    assert rows == ReferenceSimulator(BITMATCH_CFG).run(seeds).rows
-    assert len(eng.store.table_paths("seenx")) <= 2
-
-
-def test_bloom_spool_detail_bitmatch(spark, tmp_run_dir):
-    """Spool mode × detail enrichment under faults: the ledger's
-    emitted-keys pruning and the paused-resolution membership probe
-    both take the sorted-run exact tier instead of seen-table joins —
-    must stay bit-identical to the sequential oracle (and to the
-    driver-mode engine)."""
-    from cianparser_spark import truth
-
-    seed, cfg = truth.detail_seed_and_cfg()
-    sim = ReferenceSimulator(cfg).run([seed])
-    eng = CrawlEngine(spark, tmp_run_dir, [seed], cfg, host_tokens=4,
-                      bloom_spool=True)
-    rows = compat.to_reference_rows(eng.run(), [seed])
-    assert rows == sim.rows
-
-
 def test_recrawl_final_wave_lag(spark, tmp_run_dir):
     """A FRESH engine's invalidate-and-recrawl after a completed crawl
     must dedup against every seen key, the final wave's included —
     else a final-wave winner whose suppressed duplicate sits on an
-    invalidated same-wave sibling page is re-admitted (a sidecar that
-    skipped the final wave's keys gave 107 rows vs 106 at
-    bloom_buckets=64)."""
+    invalidated same-wave sibling page is re-admitted (a seen-set
+    index that skipped the final wave's keys gave 107 rows vs 106)."""
     seed = CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
                      additional_settings={"end_page": 4})
     eng = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG,
-                      host_tokens=2, bloom_buckets=64)
+                      host_tokens=2)
     before = compat.to_reference_rows(eng.run(), [seed])
     e2 = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG,
-                     host_tokens=2, bloom_buckets=64)
+                     host_tokens=2)
     after = compat.to_reference_rows(
         e2.invalidate_and_recrawl([(1, 4)]), [seed])
     assert after == before
 
 
-def test_seenx_gate_fails_closed_after_seen_compaction(spark, tmp_run_dir):
-    """store.compact('seen') rewrites appends into 'c<version>' dirs,
-    erasing the wave-pairing evidence — the seenx gate must fail
-    CLOSED (fall back to the join; next spool wave heals), not pass
-    vacuously (review-found)."""
+def test_resume_after_seen_compaction_bitmatches(spark, tmp_run_dir):
+    """store.compact('seen') mid-crawl rewrites the per-wave seen
+    appends into one 'c<version>' dir; a crawl resumed over the
+    compacted table still dedups against every earlier key and
+    bit-matches the oracle."""
     seeds = [CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
                        additional_settings={"end_page": 4})]
-    e1 = CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG,
-                     host_tokens=1, bloom_spool=True)
+    e1 = CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG, host_tokens=1)
     e1.run(max_waves=2)
-    assert e1._seenx_usable()
+    assert len(e1.store.table_paths("seen")) > 1
     e1.store.compact("seen", target_file_bytes=1 << 30)
-    e2 = CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG,
-                     host_tokens=1, bloom_spool=True)
-    assert not e2._seenx_usable()
+    assert len(e1.store.table_paths("seen")) == 1
+    e2 = CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG, host_tokens=1)
     resumed = compat.to_reference_rows(e2.run(), seeds)
+    assert e2.store.last_wave() > 2
     assert resumed == ReferenceSimulator(BITMATCH_CFG).run(seeds).rows
 
 
-# ------------------------------------- one membership definition (no Bloom)
-
-def test_spool_wave_loop_never_reads_seen(spark, tmp_run_dir, monkeypatch):
-    """Spool mode's wave loop does no O(seen) work: after the first
-    wave every membership probe reads the sorted runs, never the
-    ``seen`` table, and a ≥3-wave list-only crawl stays bit-identical
-    to the simulator."""
-    from cianparser_spark.engine.store import WaveStore
-
-    seed = CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
-                     additional_settings={"end_page": 4})
-    sim = ReferenceSimulator(BITMATCH_CFG).run([seed])
-    eng = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG,
-                      host_tokens=1, bloom_spool=True)
-    eng.run(max_waves=1)
-    reads = []
-    read = WaveStore.read
-    monkeypatch.setattr(WaveStore, "read",
-                        lambda self, name: reads.append(name) or read(self, name))
-    rows = compat.to_reference_rows(eng.run(), [seed])
-    assert eng.store.last_wave() >= 3
-    assert reads and "seen" not in reads
-    assert rows == sim.rows
-
-
-@pytest.mark.parametrize("bloom_spool", [False, True])
-def test_invalidate_commits_no_bloom_table(spark, tmp_run_dir, bloom_spool):
-    """Neither the wave loop nor invalidation builds a Bloom table in
-    either mode, and the re-crawl converges to the original crawl."""
+def test_invalidate_commits_no_bloom_table(spark, tmp_run_dir):
+    """Neither the wave loop nor invalidation builds a Bloom table, and
+    the re-crawl converges to the original crawl."""
     seed = CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
                      additional_settings={"end_page": 3})
     eng = CrawlEngine(spark, tmp_run_dir, [seed], BITMATCH_CFG,
-                      host_tokens=2, bloom_spool=bloom_spool)
+                      host_tokens=2)
     before = compat.to_reference_rows(eng.run(), [seed])
     assert eng.store.last_wave() >= 2
     after = compat.to_reference_rows(
@@ -532,12 +370,11 @@ def test_invalidate_commits_no_bloom_table(spark, tmp_run_dir, bloom_spool):
     assert eng.store.table_paths("bloom") == []
 
 
-@pytest.mark.parametrize("bloom_spool", [False, True])
-def test_resume_ignores_legacy_bloom_table(spark, tmp_run_dir, bloom_spool):
+def test_resume_ignores_legacy_bloom_table(spark, tmp_run_dir):
     """A store from before the prefilter was removed still lists a
     ``bloom`` table.  A resumed crawl never consults it (here it is
     deliberately empty, so a probe would re-admit every seen key),
-    carries it forward untouched, and bit-matches in both modes."""
+    carries it forward untouched, and bit-matches."""
     from pyspark.sql import types as T
 
     from cianparser_spark.engine import model
@@ -547,8 +384,8 @@ def test_resume_ignores_legacy_bloom_table(spark, tmp_run_dir, bloom_spool):
     seeds = [CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
                        additional_settings={"end_page": 4})]
     sim = ReferenceSimulator(BITMATCH_CFG).run(seeds)
-    CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG, host_tokens=1,
-                bloom_spool=bloom_spool).run(max_waves=1)
+    CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG,
+                host_tokens=1).run(max_waves=1)
     schema = T.StructType([T.StructField("bucket", T.LongType()),
                            T.StructField("blob", T.BinaryType())])
     legacy = WaveStore(spark, tmp_run_dir,
@@ -561,7 +398,7 @@ def test_resume_ignores_legacy_bloom_table(spark, tmp_run_dir, bloom_spool):
     assert planted
 
     eng = CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG,
-                      host_tokens=1, bloom_spool=bloom_spool)
+                      host_tokens=1)
     rows = compat.to_reference_rows(eng.run(), seeds)
     assert eng.store.last_wave() >= 3
     assert rows == sim.rows
@@ -570,13 +407,45 @@ def test_resume_ignores_legacy_bloom_table(spark, tmp_run_dir, bloom_spool):
     assert eng.store.table_paths("bloom") == planted
 
 
-@pytest.mark.parametrize("bloom_spool", [False, True])
-def test_resume_over_parent_era_seen_with_key_hash(spark, tmp_run_dir,
-                                                   bloom_spool):
+def test_resume_ignores_legacy_seenx_table(spark, tmp_run_dir):
+    """A store written while the crawler kept sorted-run seen indexes
+    (``seenx``) still lists them.  The planted runs hold every key the
+    crawl will ever see, so probing them would drop every later winner.
+    A crawl resumed with the inert ``bloom_spool=True`` never consults
+    them: it and a following invalidation bit-match the oracle, and the
+    planted dirs are carried forward unchanged, with none added."""
+    from cianparser_spark.engine import seenidx
+
+    seeds = [CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
+                       additional_settings={"end_page": 4})]
+    sim = ReferenceSimulator(BITMATCH_CFG).run(seeds)
+    e1 = CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG, host_tokens=1)
+    e1.run(max_waves=1)
+    keys = spark.createDataFrame(
+        [(f"{s}|{k}",) for s, k in sorted(sim.seen)], "key string")
+    spool = f"{tmp_run_dir}/legacy-seenx"
+    seenidx.write_str_runs(keys, spool, 16, f"w{e1.store.last_wave():05d}")
+    e1.store.commit_wave(e1.store.last_wave(), adopt={"seenx": spool})
+    planted = e1.store.table_paths("seenx")
+    assert planted
+
+    eng = CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG,
+                      host_tokens=1, bloom_spool=True)
+    assert compat.to_reference_rows(eng.run(), seeds) == sim.rows
+    assert eng.store.last_wave() >= 3
+    after = compat.to_reference_rows(
+        eng.invalidate_and_recrawl([(1, 2)]), seeds)
+    assert after == sim.rows
+    assert {(r["seed_id"], r["deal_url_id"])
+            for r in eng.store.read("seen").collect()} == sim.seen
+    assert eng.store.table_paths("seenx") == planted
+
+
+def test_resume_over_parent_era_seen_with_key_hash(spark, tmp_run_dir):
     """Seen dirs written before the unread ``key_hash`` column was
     dropped still carry it.  ``read`` applies the explicit schema, so a
-    crawl resumed over such a dir ignores the column, bit-matches in
-    both modes, and writes its own seen appends without it."""
+    crawl resumed over such a dir ignores the column, bit-matches, and
+    writes its own seen appends without it."""
     import glob
     import os
 
@@ -592,8 +461,8 @@ def test_resume_over_parent_era_seen_with_key_hash(spark, tmp_run_dir,
     seeds = [CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
                        additional_settings={"end_page": 4})]
     sim = ReferenceSimulator(BITMATCH_CFG).run(seeds)
-    CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG, host_tokens=1,
-                bloom_spool=bloom_spool).run(max_waves=1)
+    CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG,
+                host_tokens=1).run(max_waves=1)
     parent_seen = T.StructType([
         T.StructField("deal_url_id", T.StringType()),
         T.StructField("seed_id", T.LongType()),
@@ -609,7 +478,7 @@ def test_resume_over_parent_era_seen_with_key_hash(spark, tmp_run_dir,
     assert [columns(d) for d in planted] == [parent_seen.names]
 
     eng = CrawlEngine(spark, tmp_run_dir, seeds, BITMATCH_CFG,
-                      host_tokens=1, bloom_spool=bloom_spool)
+                      host_tokens=1)
     rows = compat.to_reference_rows(eng.run(), seeds)
     assert eng.store.last_wave() >= 3
     assert rows == sim.rows
