@@ -35,7 +35,10 @@ watermarks, metrics, lineage, which tables are even non-empty) derives
 from them.  Collected rows are O(pages-per-wave), bounded by the
 politeness budget, never O(cards).  Empty tables are never written;
 the stop map and host debt live in driver memory and are rebuilt from
-the committed snapshot on resume.  Seen-set membership is answered
+the committed snapshot on resume.  The parked-placeholder registry
+(duplicate keys that hold back a dead key's resurrection) is not kept
+at all: each wave derives it from the pending detail-group frontier
+rows (``CrawlEngine._parked_keys``).  Seen-set membership is answered
 in two places: ``CrawlEngine._exact_unseen`` anti-joins DataFrame rows
 (the wave's cards and the detail-key ledger) against ``seen``, and
 ``_resolve_paused`` semi-joins ``seen`` (plus this wave's emissions)
@@ -79,10 +82,6 @@ _CODEGEN_ROW_FLOOR = 16_384
 # winners with a broadcast semi-join, bigger ones with a min_by
 # aggregate.
 _DEDUP_BROADCAST_ROWS = 100_000
-# Parked/paused detail-ledger entries above this spill to a store
-# table instead of growing the driver dicts (see _detail_ledger) — the
-# enforced bound on driver-held state.
-_LEDGER_SPILL_ROWS = 50_000
 
 
 class CrawlEngine:
@@ -133,30 +132,12 @@ class CrawlEngine:
         # page-coupled detail scheduler state (detail-mode seeds only):
         # paused group walks keyed (seed_id, page_number) and the list
         # pages' retry-burn counters that seed each group's budget —
-        # both bounded by the fault/duplicate rate, not crawl size
+        # both bounded by the fault/duplicate rate, not crawl size.
+        # Placeholders parked in dispatched, not-yet-run groups are not
+        # held here: they are read off the frontier (_parked_keys).
         self._paused: dict[tuple[int, int], dict] | None = None
         self._paused_dirty = False
         self._page_burn: dict[tuple[int, int], int] = {}
-        # placeholders inside DISPATCHED (in-frontier, not yet run)
-        # groups: (seed_id, page) -> duplicate keys parked there.  A
-        # dead key must not resurrect at a LATER occurrence while an
-        # earlier parked duplicate exists — this registry plus the
-        # paused rests give the full parked set.  Every group holding a
-        # non-local placeholder necessarily produces a pause/dead
-        # marker (the kernel cannot resolve foreign winners), so
-        # entries are removed exactly when the marker arrives.
-        self._parked_disp: dict[tuple[int, int], set] = {}
-        # derive mode (ENFORCED ledger bound): when _parked_disp
-        # outgrows _LEDGER_SPILL_ROWS it spills once into the store's
-        # "parkreg" table and every later consultation runs as
-        # DataFrame ops — see model.PARKREG_SCHEMA.  Per-wave driver
-        # deltas stay bounded by the politeness budget (markers arrive
-        # only for groups that RAN).
-        self._parked_derive: bool = False
-        self._parked_removed: set[tuple[int, int]] = set()  # this wave's pops
-        self._parked_readds: list[tuple] = []   # (_resolve_paused re-adds)
-        self._parked_add_df: DataFrame | None = None  # this wave's additions
-        self._parked_spill_rows: list[tuple] | None = None  # transition wave
         self._ks_nonempty: bool = False
 
     def _seed_dim(self):
@@ -292,33 +273,6 @@ class CrawlEngine:
                 self._ks_nonempty = (
                     self.store.read("keystate").limit(1).count() > 0)
                 self._paused_dirty = bool(self._paused)
-                # dispatched-group placeholder registry.  A committed
-                # "parkreg" table means the previous run had spilled —
-                # resume straight in derive mode (the table IS the
-                # registry; rebuilding the dict could immediately
-                # re-violate the cap).  Otherwise derive the dict from
-                # the pending wave's group rows (placeholders whose
-                # winner is outside their own group), spilling if even
-                # the rebuild breaches the cap.
-                if self.store.table_paths("parkreg"):
-                    self._parked_derive = True
-                else:
-                    nxt = self.store.last_wave() + 1
-                    n_parked = 0
-                    for r in (self.store.read("frontier")
-                              .filter((F.col("kind") == "detail")
-                                      & (F.col("wave") == nxt))
-                              .select("seed_id", "page_number", "card_json")
-                              .collect()):
-                        g = json.loads(r["card_json"])
-                        winners = {c["k"] for c in g["cards"] if not c.get("d")}
-                        ph = {c["k"] for c in g["cards"] if c.get("d")} - winners
-                        if ph:
-                            self._parked_disp[
-                                (int(r["seed_id"]), int(r["page_number"]))] = ph
-                            n_parked += len(ph)
-                    if n_parked > _LEDGER_SPILL_ROWS:
-                        self._spill_parked()
         if self._staged_nonempty is None:
             last = self.store.last_wave()
             self._staged_nonempty = (
@@ -475,7 +429,8 @@ class CrawlEngine:
 
     def _detail_ledger(self, wave: int, ks_delta: list[tuple],
                        emitted_keys_df: DataFrame | None,
-                       need_detail: DataFrame | None):
+                       need_detail: DataFrame | None,
+                       deferred_groups: DataFrame | None):
         """Reduce the detail-key ledger and build this wave's page
         groups (S2/D1-D3 dispatch under the reference's page-coupled
         retry semantics, cianparser.py:71-83).
@@ -496,6 +451,11 @@ class CrawlEngine:
         reference's budget coupling IS sequential per page; pages stay
         embarrassingly parallel, and at scale the ledger is bounded by
         the fault/duplicate rate, never by crawl size.
+
+        ``deferred_groups`` are this wave's pending detail-group rows
+        that were not selected (None when there are none): with the
+        paused rests they hold every parked placeholder
+        (``_parked_keys``).
 
         Returns (groups_frontier_df | None, keystate_replace | None)."""
         ks_parts = []
@@ -569,26 +529,17 @@ class CrawlEngine:
             paused_parked = sorted({
                 (s, c["k"]) for (s, _pn), st in (self._paused or {}).items()
                 for c in st["rest"] if c.get("d")})
-            if self._parked_derive:
-                # spilled registry: the blocked set is a DataFrame —
-                # committed parkreg rows (minus this wave's resolved
-                # pages) plus the paused rests (driver-held, budget-
-                # bounded).  Plain join: the registry is backlog-
-                # bounded, AQE broadcasts it while it fits.
-                bdf = self._parked_view().select(
-                    "seed_id", F.col("key").alias("_k"))
-                if paused_parked:
-                    bdf = bdf.unionByName(self.spark.createDataFrame(
-                        list(paused_parked), "seed_id long, _k string"))
-                bdf = bdf.distinct().withColumn("_blk", F.lit(True))
-                j = j.join(bdf, ["seed_id", "_k"], "left") \
-                    .withColumn("_blk", F.col("_blk").isNotNull())
-            else:
-                parked: set = set(paused_parked)
-                for (s, _pn), keys in self._parked_disp.items():
-                    parked.update((s, k) for k in keys)
-                j = self._lookup(j, sorted(parked), "seed_id long, _k string",
-                                 mark="_blk")
+            j = self._lookup(j, paused_parked, "seed_id long, _k string",
+                             mark="_blk")
+            if deferred_groups is not None:
+                # plain join: the registry is backlog-bounded, and the
+                # planner broadcasts it while it fits
+                reg = (self._parked_keys(deferred_groups)
+                       .select("seed_id", F.col("key").alias("_k"))
+                       .distinct().withColumn("_reg", F.lit(True)))
+                j = (j.join(reg, ["seed_id", "_k"], "left")
+                     .withColumn("_blk", F.col("_blk") | F.col("_reg").isNotNull())
+                     .drop("_reg"))
             w = Window.partitionBy("seed_id", "_k").orderBy("page_number", "card_index")
             j = (j.withColumn("_rk", F.row_number().over(w))
                  .withColumn("_win", (F.col("_rk") == 1)
@@ -634,33 +585,6 @@ class CrawlEngine:
                 F.coalesce(F.col("_a0"), F.lit(0)).alias("consumed"),
                 F.lit("inflight").alias("state"),
                 F.lit(2 * wave + 1).cast("long").alias("ver"))
-            # register the dispatched groups' NON-LOCAL placeholders
-            # (winner outside their own page): these block out-of-order
-            # resurrection until the group's marker resolves them.
-            # Collect is bounded by the wave's cross-page duplicate
-            # count; the ENFORCED cap (_LEDGER_SPILL_ROWS): when the
-            # cumulative registry outgrows it, spill to the store's
-            # parkreg table and keep additions as a DataFrame from
-            # then on — driver memory stays capped at any backlog.
-            wpg = F.max(F.when(F.col("_win"), F.col("page_number"))).over(
-                Window.partitionBy("seed_id", "_k"))
-            adds = (j.withColumn("_wpg", wpg)
-                    .filter(~F.col("_win")
-                            & (F.col("_wpg").isNull()
-                               | (F.col("_wpg") != F.col("page_number"))))
-                    .select(F.col("_k").alias("key"), "seed_id",
-                            "page_number"))
-            if self._parked_derive:
-                # persisted: feeds parked_min (_resolve_paused) AND the
-                # wave's parkreg replace without recomputing the rank
-                self._parked_add_df = adds.persist()
-            else:
-                for r in adds.collect():
-                    self._parked_disp.setdefault(
-                        (int(r["seed_id"]), int(r["page_number"])),
-                        set()).add(r["key"])
-                if self._parked_size() > _LEDGER_SPILL_ROWS:
-                    self._spill_parked()
 
         ks_replace = None
         parts = [p for p in (ks_live, inflight_df) if p is not None]
@@ -673,13 +597,16 @@ class CrawlEngine:
         return groups_df, ks_replace
 
     def _resolve_paused(self, wave: int, ks_delta: list[tuple],
-                        emitted_keys_df: DataFrame | None):
+                        emitted_keys_df: DataFrame | None,
+                        pending_groups: DataFrame | None):
         """Advance paused group walks: drop placeholders whose winner
         emitted, resurrect leading placeholders whose key died
         elsewhere (earliest-page-first, preserving the reference's
         sequential claim order), and re-dispatch every walk whose
-        leading card became decidable.  One tiny lookup job, bounded
-        by the number of parked keys.
+        leading card became decidable.  Tiny lookup jobs, bounded by
+        the number of parked keys.  ``pending_groups`` are the detail
+        groups dispatched to the next wave so far (deferred ones and
+        this wave's new ones; None when there are none).
 
         Returns (continuations_frontier_df | None, ks_conversion_rows)."""
         if not self._paused:
@@ -719,32 +646,17 @@ class CrawlEngine:
                 ksmap[(sid, k)] = (st, int(cons))
 
         # earliest parked occurrence per key — a dead key resurrects at
-        # its minimum parked page (dispatched registry ∪ paused rests),
-        # preserving the reference walk's claim order
+        # its minimum parked page (pending groups ∪ paused rests),
+        # preserving the reference walk's claim order.  Only paused
+        # blocker keys are ever consulted, so the collect is bounded
+        # by the paused-rest count.
         parked_min: dict = {}
-        if self._parked_derive:
-            # spilled registry: min-page per key from the table (plus
-            # this wave's additions), FILTERED to the paused blocker
-            # keys — the only keys parked_min is ever consulted for —
-            # so the collect stays bounded by the paused-rest count
-            if b_keys:
-                srcs = [self._parked_view().select(
-                    "seed_id", "key", "page_number")]
-                if self._parked_add_df is not None:
-                    srcs.append(self._parked_add_df.select(
-                        "seed_id", "key", "page_number"))
-                pv = srcs[0]
-                for p in srcs[1:]:
-                    pv = pv.unionByName(p)
-                pv = self._lookup(pv, b_keys, "seed_id long, key string",
-                                  how="left_semi")
-                for r in (pv.groupBy("seed_id", "key")
-                          .agg(F.min("page_number").alias("mn")).collect()):
-                    parked_min[(int(r["seed_id"]), r["key"])] = int(r["mn"])
-        else:
-            for (s, pn), keys in self._parked_disp.items():
-                for k in keys:
-                    parked_min[(s, k)] = min(parked_min.get((s, k), 1 << 30), pn)
+        if b_keys and pending_groups is not None:
+            pv = self._lookup(self._parked_keys(pending_groups), b_keys,
+                              "seed_id long, key string", how="left_semi")
+            for r in (pv.groupBy("seed_id", "key")
+                      .agg(F.min("page_number").alias("mn")).collect()):
+                parked_min[(int(r["seed_id"]), r["key"])] = int(r["mn"])
         for (s, pn), st in self._paused.items():
             for c in st["rest"]:
                 if c.get("d"):
@@ -792,16 +704,31 @@ class CrawlEngine:
                 sid, pn, n_fetch, st["b"], wave + 1))
             del self._paused[(sid, pn)]
             self._paused_dirty = True
-            # the continuation is now a DISPATCHED group: re-register
-            # its remaining placeholders (non-local by construction)
-            ph = {c["k"] for c in rest if c.get("d")}
-            if ph and self._parked_derive:
-                self._parked_readds += [(k, sid, pn) for k in sorted(ph)]
-            elif ph:
-                self._parked_disp[(sid, pn)] = ph
         cont_df = (self.spark.createDataFrame(cont_rows, model.FRONTIER_SCHEMA)
                    if cont_rows else None)
         return cont_df, conv_rows
+
+    def _parked_keys(self, groups: DataFrame) -> DataFrame:
+        """The parked-placeholder registry of pending detail-group
+        frontier rows, as (seed_id, page_number, key): each group's
+        duplicate placeholders ("d") whose key has no winning card in
+        that same group, minus stopped seeds' cancelled groups.  A dead
+        key must not resurrect at a later occurrence while an earlier
+        duplicate is parked here.  A group holding such a placeholder
+        always pauses or dies when it runs (its walk cannot decide a
+        foreign winner), so its frontier row is the registry entry
+        until then: nothing is kept on the driver or in another table."""
+        cards = F.from_json(
+            "card_json", "cards array<struct<k: string, d: int>>")["cards"]
+
+        def is_ph(c):
+            return F.coalesce(c["d"], F.lit(0)) != 0
+
+        ph = F.transform(F.filter(cards, is_ph), lambda c: c["k"])
+        won = F.transform(F.filter(cards, lambda c: ~is_ph(c)), lambda c: c["k"])
+        return self._apply_stop_filter(groups.select(
+            "seed_id", "page_number",
+            F.explode(F.array_except(ph, won)).alias("key")))
 
     # ------------------------------------------------------------- helpers
 
@@ -1121,12 +1048,9 @@ class CrawlEngine:
             if r["outcome"] == "captcha":
                 sid, p = int(r["seed_id"]), int(r["page_number"])
                 self._stopped[sid] = min(self._stopped.get(sid, 1 << 30), p)
-        if self._stopped and (self._parked_disp or self._paused):
-            # cancelled groups of stopped seeds never run, so no marker
-            # will ever clear their ledger entries — purge here
-            for (sid, pn) in [k for k in self._parked_disp
-                              if not self._stop_ok(*k)]:
-                del self._parked_disp[(sid, pn)]
+        if self._stopped and self._paused:
+            # paused walks of stopped seeds are cancelled: they never
+            # run again, so no marker will ever clear them — purge here
             for (sid, pn) in [k for k in (self._paused or {})
                               if not self._stop_ok(*k)]:
                 del self._paused[(sid, pn)]
@@ -1210,8 +1134,6 @@ class CrawlEngine:
             )
             for r in gmarkers:
                 sid, pn = int(r["seed_id"]), int(r["page_number"])
-                self._parked_disp.pop((sid, pn), None)
-                self._parked_removed.add((sid, pn))  # derive-mode twin
                 if not self._stop_ok(sid, pn):
                     self._paused.pop((sid, pn), None)
                     continue
@@ -1358,11 +1280,23 @@ class CrawlEngine:
                 adopt["offers"] = acc_adopt_dir or acc_spool
                 seen_parts.append(accepted)
         if extra_ids:
+            # the selected groups ran (their markers came back above);
+            # mstats tells at zero jobs whether any detail group was
+            # deferred, so with none the registry is known empty
+            deferred_groups = (
+                deferred_df.filter(F.col("kind") == "detail")
+                if any(not r["_selected"] and r["kind"] == "detail"
+                       for r in mstats) else None)
             groups_df, ks_replace = self._detail_ledger(
-                wave, ks_delta, emitted_keys_df, need_detail)
+                wave, ks_delta, emitted_keys_df, need_detail, deferred_groups)
             if groups_df is not None:
                 frontier_parts.append(groups_df)
-            cont_df, conv_rows = self._resolve_paused(wave, ks_delta, emitted_keys_df)
+            pending_groups = deferred_groups
+            if groups_df is not None:
+                pending_groups = (groups_df if pending_groups is None
+                                  else pending_groups.unionByName(groups_df))
+            cont_df, conv_rows = self._resolve_paused(
+                wave, ks_delta, emitted_keys_df, pending_groups)
             if cont_df is not None:
                 frontier_parts.append(cont_df)
             if conv_rows:
@@ -1539,10 +1473,8 @@ class CrawlEngine:
             # dispatchable group
             raise RuntimeError(
                 f"paused detail groups deadlocked: {sorted(self._paused)}")
-        self._commit_parked(wave, replaces)
         self.store.commit_wave(wave, appends=appends, replaces=replaces,
                                adopt=adopt)
-        self._parked_wave_reset()
         self._tick("commit")
         self._next_pending = n_frontier_next
         if n_seen:
@@ -1670,71 +1602,3 @@ class CrawlEngine:
             self.store.read("seen").select(
                 "seed_id", F.col("deal_url_id").alias(key_col)),
             ["seed_id", key_col], "left_anti")
-
-    # ------------------------------------- parked-registry spill (derive mode)
-
-    def _spill_parked(self) -> None:
-        """One-time transition dict → derive mode: the current registry
-        becomes pending rows committed to "parkreg" at this wave's end;
-        the driver dict is dropped.  From then on the registry lives in
-        the store and all maintenance is DataFrame ops."""
-        rows = [(k, int(s), int(p))
-                for (s, p), ks in self._parked_disp.items() for k in ks]
-        self._parked_spill_rows = rows
-        self._parked_disp = {}
-        self._parked_derive = True
-
-    def _parked_size(self) -> int:
-        return sum(len(v) for v in self._parked_disp.values())
-
-    def _parked_view(self) -> DataFrame:
-        """Derive-mode registry as of NOW within the wave: the committed
-        table minus pages whose group marker arrived this wave.
-        Transition-wave state rides ``_parked_spill_rows`` instead (the
-        table isn't committed yet)."""
-        if self._parked_spill_rows is not None:
-            pt = self.spark.createDataFrame(
-                self._parked_spill_rows or
-                [("", -1, -1)], model.PARKREG_SCHEMA)
-            if not self._parked_spill_rows:
-                pt = pt.filter(F.lit(False))
-        else:
-            pt = self.store.read("parkreg")
-        if self._parked_removed:
-            pt = self._lookup(pt, sorted(self._parked_removed),
-                              "seed_id long, page_number long", how="left_anti")
-        # captcha-stop cancellation, the DF twin of the dict-mode
-        # cleanup in _run_wave
-        return self._apply_stop_filter(pt)
-
-    def _commit_parked(self, wave: int, replaces: dict) -> None:
-        """Fold this wave's deltas into the registry table replace:
-        (committed − removed pages) ∪ ledger additions ∪ paused
-        re-adds, stop-filtered.  Every delta is politeness-bounded;
-        the union is one small job riding the wave commit."""
-        if not self._parked_derive:
-            return
-        dirty = (self._parked_spill_rows is not None or self._parked_removed
-                 or self._parked_readds or self._parked_add_df is not None)
-        if not dirty:
-            return
-        parts = [self._parked_view()]
-        if self._parked_add_df is not None:
-            parts.append(self._parked_add_df.select(
-                "key", "seed_id", "page_number"))
-        if self._parked_readds:
-            parts.append(self.spark.createDataFrame(
-                self._parked_readds, model.PARKREG_SCHEMA))
-        pt = parts[0]
-        for p in parts[1:]:
-            pt = pt.unionByName(p)
-        replaces["parkreg"] = self._apply_stop_filter(
-            pt.dropDuplicates(["seed_id", "page_number", "key"]))
-
-    def _parked_wave_reset(self) -> None:
-        if self._parked_add_df is not None:
-            self._parked_add_df.unpersist()
-        self._parked_add_df = None
-        self._parked_removed = set()
-        self._parked_readds = []
-        self._parked_spill_rows = None

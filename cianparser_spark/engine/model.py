@@ -94,8 +94,8 @@ STOPPED_SCHEMA = T.StructType(_fields(longs=["seed_id", "captcha_page"]))
 # one row per dedup key whose emission is UNRESOLVED — ``inflight``
 # (its winning occurrence is inside a dispatched/paused detail group)
 # or ``dead`` (winner's page died without emitting; the EARLIEST
-# remaining occurrence — a parked duplicate tracked via the driver's
-# dispatched-placeholder registry + paused rests, else the next
+# remaining occurrence — a duplicate parked in a pending detail
+# group's frontier row or a paused rest, else the next
 # accepted card — resurrects the fetch with the key's detail-URL
 # attempt counter continuing at ``consumed``, replicating the
 # reference's session-global per-URL retry counter, cianparser.py:71-83
@@ -116,19 +116,6 @@ KEYSTATE_SCHEMA = T.StructType(
 PAUSED_SCHEMA = T.StructType(
     _fields(strings=["blocker", "rest"],
             longs=["seed_id", "page_number", "budget", "ver"])
-)
-
-# Spilled dispatched-placeholder registry (derive mode): the parked
-# keys the driver normally caches in ``_parked_disp`` (one row per
-# non-local duplicate placeholder inside a dispatched, not-yet-run
-# detail group).  The driver dict is only a CACHE of state derivable
-# from pending frontier group rows; when it outgrows
-# ``crawler._LEDGER_SPILL_ROWS`` it spills here once and all later maintenance
-# (additions, marker removals, the blocked-keys join, parked-min
-# lookups) runs as DataFrame ops against this table — driver memory
-# stays capped at any detail backlog.
-PARKREG_SCHEMA = T.StructType(
-    _fields(strings=["key"], longs=["seed_id", "page_number"])
 )
 
 # raw fetch-kernel output = discriminated union of page outcomes and
@@ -174,10 +161,8 @@ TABLE_SCHEMAS = {
     "stopped": STOPPED_SCHEMA,
     "keystate": KEYSTATE_SCHEMA,
     "paused": PAUSED_SCHEMA,
-    "parkreg": PARKREG_SCHEMA,
 }
-REPLACE_TABLES = frozenset({"staged", "stopped", "keystate", "paused",
-                            "parkreg"})
+REPLACE_TABLES = frozenset({"staged", "stopped", "keystate", "paused"})
 
 
 # ------------------------------------------------------------ seed helpers

@@ -26,15 +26,17 @@ from __future__ import annotations
 import argparse
 import dataclasses
 import json
+import os
 import random
 import shutil
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from cianparser_spark.corpus import webgen as W
-from cianparser_spark.engine import columnar, compat, crawler
+from cianparser_spark.engine import columnar, compat
 from cianparser_spark.engine.crawler import CrawlEngine
 from cianparser_spark.engine.session import get_spark
 from cianparser_spark.semantics.simulator import CrawlSeed, ReferenceSimulator
@@ -230,13 +232,7 @@ def main() -> int:
                          "invalidate each seed's last page and re-crawl; "
                          "must converge back to the simulator rows")
     ap.add_argument("--cpus", type=int, default=4)
-    ap.add_argument("--spill", action="store_true",
-                    help="force the parked-ledger spill (crawler._LEDGER_"
-                         "SPILL_ROWS=0): every trial runs the derive-mode "
-                         "registry path")
     args = ap.parse_args()
-    if args.spill:
-        crawler._LEDGER_SPILL_ROWS = 0
     lit_default = columnar.LIT_LOOKUP_MAX
 
     spark = get_spark(master=f"local[{args.cpus}]",

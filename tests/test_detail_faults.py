@@ -15,12 +15,14 @@ resume through arbitrary wave cuts.
 """
 
 import dataclasses
+import json
+import os
 import tempfile
 
 import pytest
 
 from cianparser_spark.corpus import webgen as W
-from cianparser_spark.engine import compat, crawler
+from cianparser_spark.engine import compat, model
 from cianparser_spark.engine.crawler import CrawlEngine
 from cianparser_spark.semantics.simulator import CrawlSeed, ReferenceSimulator
 
@@ -132,45 +134,122 @@ def test_same_wave_emission_dup_not_refetched(spark, tmp_run_dir):
     assert sim.failed_pages == [(1, 1), (1, 3)]
 
 
-# ------------------------------------------- enforced ledger cap (spill)
+# ------------------------------------- parked-placeholder registry
+#
+# The synthetic web copies a key only onto the adjacent next list page
+# (webgen.page_oids), so no key has the three occurrences that make the
+# registry decide anything: a dead winner, a duplicate parked in a
+# pending group, and a later occurrence.  No crawl can reach that case;
+# these tests build it by hand around the two consumers.
 
-def test_ledger_cap_spill_bitmatch(spark, tmp_run_dir, monkeypatch):
-    """ENFORCED parked-ledger bound: _LEDGER_SPILL_ROWS=0 makes the
-    registry spill into the store's parkreg table at its first entry;
-    every later consultation (blocked-keys join, parked-min lookup,
-    marker removal, captcha purge) runs as DataFrame ops against the
-    committed table.  A pathological duplicate rate (tiny universe →
-    nearly every card repeats on every page) under detail faults must
-    still bit-match the sequential oracle — and the driver dict stays
-    empty for the whole run."""
-    monkeypatch.setattr(crawler, "_LEDGER_SPILL_ROWS", 0)
+def _registry_engine(spark, run_dir):
+    seeds = [CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
+                       with_extra_data=True,
+                       additional_settings={"end_page": 4})]
+    eng = CrawlEngine(spark, run_dir, seeds, RESURRECTION_CFG)
+    eng._load_state()
+    return eng
+
+
+def _groups(spark, eng, pages_cards):
+    """Pending detail-group frontier rows: {page: [(key, d), ...]}."""
+    tpl = eng.runtimes[1]["template"]
+    rows = [(tpl.format(pn), "detail", "cian.ru",
+             json.dumps({"b": 0, "cards": [
+                 {"i": i, "k": k, "u": f"u-{k}", "a": 0, "d": d}
+                 for i, (k, d) in enumerate(cards)]}),
+             1, pn, sum(1 for _, d in cards if not d), 0, 2)
+            for pn, cards in pages_cards.items()]
+    return spark.createDataFrame(rows, model.FRONTIER_SCHEMA)
+
+
+def test_parked_keys_are_non_local_placeholders(spark, tmp_run_dir):
+    """A group registers the placeholders whose key has no winning card
+    in the group itself, once per key; stopped seeds' groups drop out."""
+    eng = _registry_engine(spark, tmp_run_dir)
+    groups = _groups(spark, eng, {
+        2: [("a", 0), ("b", 1), ("a", 1), ("b", 1)],
+        3: [("c", 1)]})
+    got = sorted(tuple(r) for r in eng._parked_keys(groups).collect())
+    assert got == [(1, 2, "b"), (1, 3, "c")]
+    eng._stopped = {1: 3}
+    assert [tuple(r) for r in eng._parked_keys(groups).collect()] == [(1, 2, "b")]
+
+
+def test_dead_key_parked_in_deferred_group_blocks_resurrection(spark, tmp_run_dir):
+    """Key K died with its page; a deferred page-2 group still parks K,
+    and K recurs on page 3's newly accepted cards.  The earliest parked
+    duplicate gets the fetch (flat/list.py:57-67's walk), so page 3's K
+    ships as a placeholder and no inflight row claims it."""
+    eng = _registry_engine(spark, tmp_run_dir)
+    card = {c: None for c in model.STAGED_SCHEMA.fieldNames()}
+    card.update(seed_id=1, page_number=3, card_index=0, wave=2,
+                deal_url_id="K", url="https://cian.ru/sale/flat/K/")
+    need = spark.createDataFrame([card], model.STAGED_SCHEMA)
+    dead = [(1, "K", "u-K", 1, "dead", 2)]
+
+    def page3(deferred):
+        groups, ks = eng._detail_ledger(2, dead, None, need, deferred)
+        g = json.loads(groups.filter("page_number = 3").first()["card_json"])
+        return g["cards"][0]["d"], {r["key"] for r in ks.collect()
+                                    if r["state"] == "inflight"}
+
+    assert page3(None) == (0, {"K"})  # nothing parked: page 3 resurrects K
+    assert page3(_groups(spark, eng, {2: [("K", 1)]})) == (1, set())
+
+
+def test_dead_key_parked_in_pending_group_holds_paused_walk(spark, tmp_run_dir):
+    """A walk paused on K at page 3 must not resurrect K while a pending
+    page-2 group still parks it: page 2 reaches K first."""
+    eng = _registry_engine(spark, tmp_run_dir)
+    dead = [(1, "K", "u-K", 1, "dead", 2)]
+
+    def resolve(pending):
+        eng._paused = {(1, 3): {"b": 0, "blocker": "K", "rest": [
+            {"i": 0, "k": "K", "u": "u-K", "a": 0, "d": 1}]}}
+        cont, conv = eng._resolve_paused(2, dead, None, pending)
+        return cont is not None, [r[1] for r in conv], sorted(eng._paused)
+
+    assert resolve(None) == (True, ["K"], [])
+    assert resolve(_groups(spark, eng, {2: [("K", 1)]})) == (False, [], [(1, 3)])
+
+
+# ------------------------------------------------ legacy parkreg table
+
+def test_resume_ignores_legacy_parkreg_table(spark, tmp_run_dir):
+    """A store from before the parked-placeholder registry was derived
+    from the frontier may still list a ``parkreg`` table.  A resumed
+    crawl never reads it: here, planted after the first wave, it parks
+    every key the crawl emits at page 0, which no group ever clears,
+    so a crawl that consulted it would hold back the resurrection of
+    the second wave (and deadlock).  The table is carried forward
+    untouched and the crawl bit-matches."""
+    from pyspark.sql import types as T
+
+    from cianparser_spark.engine.store import WaveStore
+
     seeds = [CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
                        with_extra_data=True,
                        additional_settings={"end_page": 10})]
-    sim, eng = _bit_match(spark, tmp_run_dir, seeds, RESURRECTION_CFG,
-                          host_tokens=120)
-    assert eng._parked_derive, "cap breach must have triggered the spill"
-    assert eng._parked_size() == 0  # dict never regrows after the spill
-    assert eng.store.table_paths("parkreg")  # the registry is in the store
-
-
-def test_ledger_spill_survives_resume(spark, tmp_run_dir, monkeypatch):
-    """A killed run that had spilled must RESUME in derive mode (the
-    committed parkreg table is the registry — rebuilding the dict
-    could immediately re-violate the cap) and still converge to the
-    uninterrupted oracle."""
-    seeds = [CrawlSeed(1, "Москва", "flat", "sale", rooms="all",
-                       with_extra_data=True,
-                       additional_settings={"end_page": 10})]
-    monkeypatch.setattr(crawler, "_LEDGER_SPILL_ROWS", 0)
     sim = ReferenceSimulator(RESURRECTION_CFG).run(seeds)
-    cut = CrawlEngine(spark, tmp_run_dir, seeds, RESURRECTION_CFG,
-                      host_tokens=120)
-    cut.run(max_waves=2)
-    assert cut.store.last_wave() == 2
+    CrawlEngine(spark, tmp_run_dir, seeds, RESURRECTION_CFG,
+                host_tokens=120).run(max_waves=1)
+    schema = T.StructType([T.StructField("key", T.StringType()),
+                           T.StructField("seed_id", T.LongType()),
+                           T.StructField("page_number", T.LongType())])
+    legacy = WaveStore(spark, tmp_run_dir,
+                       {**model.TABLE_SCHEMAS, "parkreg": schema},
+                       model.REPLACE_TABLES | {"parkreg"})
+    assert legacy.last_wave() == 1
+    legacy.commit_wave(legacy.last_wave(), replaces={
+        "parkreg": ([(k, s, 0) for s, k in sorted(sim.seen)], schema)})
+    planted = legacy.table_paths("parkreg")
+    assert planted
+
     eng = CrawlEngine(spark, tmp_run_dir, seeds, RESURRECTION_CFG,
                       host_tokens=120)
     rows = compat.to_reference_rows(eng.run(), seeds)
     assert rows == sim.rows
-    if cut._parked_derive:
-        assert eng._parked_derive  # resumed straight into derive mode
+    assert eng.store.table_paths("parkreg") == planted
+    assert sorted(os.listdir(os.path.join(tmp_run_dir, "data", "parkreg"))) \
+        == sorted(os.path.basename(p) for p in planted)

@@ -95,6 +95,39 @@ def test_politeness_budget_bounds_fetches_per_wave(spark, tmp_run_dir):
         assert r["p"] + r["e"] <= 2
 
 
+def test_select_budget_two_hosts_is_union_of_each_alone(spark, tmp_run_dir):
+    """Every seed the corpus builds is served from one host, so no crawl
+    reaches the selection's split into in-budget hosts (selected
+    outright) and over-budget hosts (ranked).  Here one host fits its 8
+    tokens and the other is over them after one 429's debt: each
+    host's selection must equal what it gets alone."""
+    from cianparser_spark.engine import model
+
+    eng = CrawlEngine(spark, tmp_run_dir,
+                      [CrawlSeed(1, "Москва", "flat", "sale")],
+                      respect_robots=False, host_tokens=8)
+    rows = [(f"https://a.example/p{p}", "list", "a.example", None, 1, p, -1, 0, 1)
+            for p in (1, 2, 3)]
+    rows += [(f"https://b.example/p{p}", "list", "b.example", None, 2, p, -1, 0, 1)
+             for p in range(1, 7)]
+    pending = spark.createDataFrame(rows, model.FRONTIER_SCHEMA)
+    debt = {"b.example": 5}  # one 429 leaves b.example 3 of 8 tokens
+
+    def selected(df):
+        marked, fully, _n, n_blocked = eng._select_budget(df, debt)
+        got = marked.collect()
+        assert n_blocked == 0 and len(got) == df.count()
+        return fully, {r["url"] for r in got if r["_selected"]}
+
+    fully, both = selected(pending)
+    fully_a, alone_a = selected(pending.filter(F.col("host") == "a.example"))
+    fully_b, alone_b = selected(pending.filter(F.col("host") == "b.example"))
+    assert (fully, fully_a, fully_b) == (False, True, False)
+    assert alone_a == {r[0] for r in rows[:3]}
+    assert alone_b == {f"https://b.example/p{p}" for p in (1, 2, 3)}
+    assert both == alone_a | alone_b
+
+
 def test_resume_from_snapshot_identical(spark, tmp_run_dir):
     seeds = [CrawlSeed(1, "Москва", "flat", "sale", rooms=(1, 2),
                        additional_settings={"end_page": 3})]

@@ -20,7 +20,7 @@ from cianparser_spark.engine.store import WaveStore
 
 def _store(spark, root) -> WaveStore:
     return WaveStore(spark, root, model.TABLE_SCHEMAS,
-                     replace_tables=frozenset({"parkreg"}))
+                     replace_tables=frozenset({"paused"}))
 
 
 def _stopped(spark, rows):
@@ -47,16 +47,17 @@ def test_multi_table_append_is_one_txn(spark, tmp_run_dir):
 def test_append_accumulates_replace_overwrites(spark, tmp_run_dir):
     """Append tables accumulate across waves; replace tables expose
     ONLY the latest commit's data (overwritePartitions semantics)."""
-    def parkreg(rows):
-        return spark.createDataFrame(rows, model.PARKREG_SCHEMA)
+    def paused(rows):
+        return spark.createDataFrame(rows, model.PAUSED_SCHEMA)
 
     st = _store(spark, tmp_run_dir)
     st.commit_wave(0, appends={"stopped": _stopped(spark, [(1, 10)])})
     st.commit_wave(1, appends={"stopped": _stopped(spark, [(2, 20)])},
-                   replaces={"parkreg": parkreg([("aa", 1, 1), ("bb", 1, 2)])})
-    st.commit_wave(2, replaces={"parkreg": parkreg([("cc", 2, 1)])})
+                   replaces={"paused": paused([("aa", "[]", 1, 1, 0, 1),
+                                               ("bb", "[]", 1, 2, 0, 1)])})
+    st.commit_wave(2, replaces={"paused": paused([("cc", "[]", 2, 1, 0, 2)])})
     assert st.read("stopped").count() == 2          # appends accumulated
-    assert st.read("parkreg").count() == 1          # only wave-2 replace
+    assert st.read("paused").count() == 1           # only wave-2 replace
     assert st.last_wave() == 2
 
 
@@ -101,16 +102,16 @@ def test_local_write_rows_roundtrip(spark, tmp_path):
                       "details_fetched": 1, "avg_price": 12.5, "captcha": False}],
                     model.METRICS_SCHEMA),
         "lineage": ([(0, 7, 100, 90)], model.LINEAGE_SCHEMA),
-    }, replaces={"parkreg": ([("k\x1f", 1, 2)], model.PARKREG_SCHEMA)})
+    }, replaces={"paused": ([("k\x1f", "[]", 1, 2, 0, 0)], model.PAUSED_SCHEMA)})
     m = st.read("metrics").collect()
     assert len(m) == 1 and m[0]["avg_price"] == 12.5 and m[0]["captcha"] is False
     assert m[0]["offers_emitted"] is None and m[0]["pages_fetched"] == 3
     assert st.read("lineage").collect()[0]["output_rows"] == 90
-    p = st.read("parkreg").collect()
-    assert (p[0]["key"], p[0]["seed_id"], p[0]["page_number"]) == ("k\x1f", 1, 2)
+    p = st.read("paused").collect()
+    assert (p[0]["blocker"], p[0]["seed_id"], p[0]["page_number"]) == ("k\x1f", 1, 2)
     # empty rows on a replace clears the table
-    st.commit_wave(1, replaces={"parkreg": ([], model.PARKREG_SCHEMA)})
-    assert st.read("parkreg").count() == 0
+    st.commit_wave(1, replaces={"paused": ([], model.PAUSED_SCHEMA)})
+    assert st.read("paused").count() == 0
     # mixed commit: Spark DataFrame append still works alongside
     st.commit_wave(2, appends={"stopped": ([(9, 2)], model.STOPPED_SCHEMA)})
     assert st.read("stopped").collect()[0]["seed_id"] == 9
@@ -331,11 +332,11 @@ def test_changelog_refuses_replace_tables_and_rewrites(spark, tmp_run_dir):
 
     st = _store(spark, tmp_run_dir)
     st.commit_wave(0, appends={"stopped": _stopped(spark, [(1, 10)])},
-                   replaces={"parkreg": spark.createDataFrame(
-                       [], model.TABLE_SCHEMAS["parkreg"])})
+                   replaces={"paused": spark.createDataFrame(
+                       [], model.TABLE_SCHEMAS["paused"])})
     st.commit_wave(1, appends={"stopped": _stopped(spark, [(2, 20)])})
     with pytest.raises(ValueError, match="replace"):
-        st.changelog("parkreg", 1, 2)
+        st.changelog("paused", 1, 2)
     st.compact("stopped", target_file_bytes=1 << 30)
     v_after = st.versions()[-1][0]
     with pytest.raises(ValueError, match="compaction"):
